@@ -43,24 +43,6 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 DIM = 64
 
 
-def _el(col, i: int):
-    """try_element_at with a per-ELEMENT double cast. Never pre-cast the
-    whole array with ``transform(col, cast)``: Catalyst's project-collapse
-    inlines the HOF into every downstream element_at, so each of the
-    hundreds of element references in a dot product / LSH expression
-    re-evaluates the full 64-element interpreted lambda (measured: 12 s
-    instead of 0.3 s to bucket 2,000 vectors). A scalar cast per element
-    stays in whole-stage codegen.
-
-    TRY_element_at, not element_at: under ANSI (the Spark 4 default) an
-    out-of-bounds index THROWS — so one ragged/empty embedding row
-    (truncated ingest, the degraded-lake shape the r6 sweep plants) killed
-    every fixed-index vector kernel. try_element_at returns NULL instead;
-    NULL propagates through the arithmetic and the row drops at the
-    verify/threshold stage — identical values for well-formed rows."""
-    return F.try_element_at(col, F.lit(i)).cast("double")
-
-
 def _dot(a, b):
     """Dot product over float32 arrays via aggregate(zip_with(...)), upcast
     per element. Measured on Spark 4.1 (sf0.1 corpus AND a 1M-row amplified
@@ -539,6 +521,47 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_NPROBE = 8  # cells probed per query (of ~√n cells)
 IVF_ITERS = 2  # Lloyd refinement passes over the deterministic seed set
+IVF_TRAIN_PER_CELL = 256  # training sample cap per centroid (FAISS's default)
+IVF_TRAIN_BLOCK = 1024  # rows per NumPy assignment block in _ivf_lloyd
+
+
+def _ivf_lloyd(x, n_cells: int):
+    """Spherical k-means on the driver: ``x`` is the (m, DIM) float64
+    training sample in xxhash64(t_id) order, whose first ``n_cells`` rows
+    are the seeds. Runs IVF_ITERS Lloyd passes and returns ``(cells, c)``:
+    the surviving cell ids (ascending) and their unit-norm centroids.
+
+    Assignment is the first ``argmax`` of ``x @ c.T`` with cells kept in
+    ascending id order — the same tie-break as the index's ``_assign``
+    (higher dot, then lower cell). Scoring runs in IVF_TRAIN_BLOCK-row
+    blocks, so the score matrix never exceeds IVF_TRAIN_BLOCK × n_cells
+    doubles (32 MB at the 4096-cell ceiling). The new centroid is the
+    member sum scaled to unit norm (the spherical mean). A cell whose
+    member sum has zero norm is dropped: every empty cell (as the Spark
+    ``groupBy("cell")`` dropped them) and any cell of all-zero or
+    cancelling members. Normalizing it would give a NaN centroid, and
+    ``argmax`` ranks NaN above every number, so one NaN cell would capture
+    every vector on the next pass."""
+    import numpy as np
+
+    cells = np.arange(min(n_cells, len(x)), dtype=np.int64)
+    c = x[: len(cells)]
+    for _ in range(IVF_ITERS):
+        if not len(c):
+            break
+        a = np.concatenate([
+            np.argmax(x[i : i + IVF_TRAIN_BLOCK] @ c.T, axis=1)
+            for i in range(0, len(x), IVF_TRAIN_BLOCK)
+        ])
+        sums = np.stack(
+            [np.bincount(a, weights=x[:, d], minlength=len(c)) for d in range(DIM)],
+            axis=1,
+        )
+        norm = np.sqrt((sums * sums).sum(axis=1))
+        keep = norm > 0
+        c = sums[keep] / norm[keep, None]
+        cells = cells[keep]
+    return cells, c
 
 
 def build_ivf_index(
@@ -549,6 +572,20 @@ def build_ivf_index(
     clustered path reuses the same model): returns ``(index, cents)`` with
     index = (cell, t_id, label, tv) and cents = (cell, cv).
 
+    1. train (on the driver): ONE Spark action collects, through
+       ``toArrow()``, the first IVF_TRAIN_PER_CELL × C conforming
+       (`_finite_vec`) vectors in xxhash64(t_id) order — the first C of
+       them are the seeds. The whole corpus trains while 256·C ≥ n (up to
+       n ≈ 65,536); above that the sample is this deterministic hash-order
+       prefix, as FAISS trains on ≤ 256 points per centroid. `_ivf_lloyd`
+       runs the IVF_ITERS passes in NumPy. Driver memory is bounded by the
+       sample: at the 4096-cell ceiling, 256 × 4096 rows × 64 float64 =
+       512 MB (its 256 MB float32 Arrow form is freed before the passes),
+       plus one IVF_TRAIN_BLOCK × C score block (≤ 32 MB). The model goes
+       back to Spark as an Arrow table.
+    2. index: the final assignment of every vector stays in Spark
+       (`_assign` max_by, or the multi-probe top-n below).
+
     ``n_assign`` > 1 indexes each vector into its top-n cells (multi-probe
     indexing): membership doubles but pair-recall across cell boundaries
     rises sharply — the standard dedup-side trade, where a missed neighbor
@@ -556,30 +593,33 @@ def build_ivf_index(
 
     MEMOIZED per (session, table-state) since round 5: the trained centroid
     relation is shared by every n_assign variant (q_ann_ivf_topk AND the
-    three clustered semantic queries train ONCE per session — benching the
-    clustered family showed each call re-running the full Lloyd loop,
-    ~5 s/query of pure retraining), and each n_assign's index is persisted
-    separately. Training is deterministic (seeded init, fixed passes), so
-    a memo hit cannot change any result. At 100 TB this is exactly the
-    production shape: the IVF model is a write-once artifact; queries load
-    it rather than retrain it."""
+    three clustered semantic queries train ONCE per session), and each
+    n_assign's index is persisted separately. Training is deterministic
+    (hash-ordered sample, fixed passes), so a memo hit cannot change any
+    result. At 100 TB this is exactly the production shape: the IVF model
+    is a write-once artifact; queries load it rather than retrain it."""
     import math
 
-    e = _embeddings(spark, sf_dir)
-    t = e.select(F.col("vec_id").alias("t_id"), "label", F.col("embedding").alias("tv"))
+    from ..sources.io import _stat_sig, spread, table_path
+
+    path = table_path(sf_dir, "embeddings")
+    # one scan, shared: the index assigns over its spread, the training
+    # sample is a top-k collect that gains nothing from the spread's shuffle
+    raw = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").alias("t_id"), "label", F.col("embedding").alias("tv")
+    )
+    t = spread(raw, spark, path)
     n = table_rows(sf_dir, "embeddings")
     n_cells = max(4, min(4096, int(math.isqrt(n))))
-
-    def _norm_mean(dim: int):
-        return [F.avg(_el(F.col("tv"), i + 1)).alias(f"d{i}") for i in range(dim)]
 
     def _assign(cents, carry_cols: list[str]):
         """Argmax-cell assignment via max_by, not a window sort: the
         broadcast crossJoin's n×C scored rows collapse map-side in the
         partial aggregate, so the shuffle moves n rows. Tie-break: higher
-        cdot, then lower cell. One definition serves both the Lloyd passes
-        and the final indexing — a drifted copy would silently train on a
-        different assignment than it indexes."""
+        cdot, then lower cell. This spelling indexes; training assigns with
+        `_ivf_lloyd`'s NumPy argmax under the same tie-break — two
+        spellings of one rule, kept from drifting by the reference-parity
+        test in tests/test_ivf_train.py."""
         payload = F.struct(F.col("cell"), *[F.col(c) for c in ["t_id", *carry_cols]])
         order = F.struct(F.col("cdot"), (-F.col("cell")).alias("negcell"))
         return (
@@ -591,63 +631,30 @@ def build_ivf_index(
         )
 
     def _train() -> DataFrame:
-        # per-pass cache is LOAD-BEARING: each pass broadcasts cents, and a
-        # broadcast build over an unmaterialized chain recomputes every
-        # earlier pass (measured: dropping these caches took cold training
-        # from ~5 s to ~50 s — quadratic recompute through the nested
-        # broadcast builds). The intermediates are C×64 doubles, cached
-        # once per session now that the model is memoized.
-        cents = (
-            t.orderBy(F.xxhash64("t_id")).limit(n_cells)
-            .select(
-                F.monotonically_increasing_id().alias("cell"),
-                F.col("tv").alias("cv"),
-            )
-            .cache()
-        )
-        intermediates = [cents]
-        for _ in range(IVF_ITERS):
-            assigned = _assign(cents, ["tv"])
-            raw = assigned.groupBy("cell").agg(*_norm_mean(DIM))
-            # L2-normalize via HOFs over ONE array column: the unrolled
-            # spelling (64 output columns × a 64-term norm subtree each,
-            # ~4k expression nodes) cost ~4-6 s of pure Catalyst analysis
-            # PER PASS (measured r5 — the _el/_dot plan-size rule again).
-            # The fold is the same left-to-right d0²+d1²+… order, so the
-            # trained model is bit-identical.
-            m = F.array(*[F.col(f"d{i}") for i in range(DIM)])
-            cents = raw.select(
-                "cell",
-                F.transform(
-                    m,
-                    lambda x: (
-                        x
-                        / F.sqrt(
-                            F.aggregate(
-                                m, F.lit(0.0), lambda a, v: a + v * v
-                            )
-                        )
-                    ).cast("double"),
-                ).alias("cv"),
-            ).cache()
-            intermediates.append(cents)
-        # materialize the final model, then evict the per-pass scaffolding:
-        # without this, every table-state supersede strands IVF_ITERS+1
-        # cached relations in executor storage — the stacking-persists
-        # pathology the memo module exists to prevent, one layer down. The
-        # memo's own persist+count on the returned relation is then a no-op
-        # re-cache of already-materialized rows.
-        final = intermediates.pop()
-        final.count()
-        for d in intermediates:
-            d.unpersist()
-        return final
+        import numpy as np
+        import pyarrow as pa
 
-    from ..sources.io import _stat_sig, table_path
+        sample = (
+            raw.filter(_finite_vec(F.col("tv")))
+            .orderBy(F.xxhash64("t_id"))
+            .limit(IVF_TRAIN_PER_CELL * n_cells)
+            .select("tv")
+            .toArrow()
+        )
+        x = sample.column("tv").combine_chunks().flatten().to_numpy().astype(np.float64)
+        del sample  # only the float64 copy lives through the passes
+        cells, c = _ivf_lloyd(x.reshape(-1, DIM), n_cells)
+        return spark.createDataFrame(
+            pa.table({
+                "cell": pa.array(cells, pa.int64()),
+                "cv": pa.array(c.tolist(), pa.list_(pa.float64())),
+            })
+        )
+
     from ._memo import session_memo
 
     def _sig() -> tuple:
-        return _stat_sig(table_path(sf_dir, "embeddings"))
+        return _stat_sig(path)
 
     cents = session_memo(
         _IVF_MEMO, spark, f"{sf_dir}|ivf-cents",
@@ -699,16 +706,19 @@ def build_ivf_index(
 @query("q_ann_ivf_topk")  # rows-only: approximate recall is the contract
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4 scale path #2: IVF-Flat ANN (inverted-file index with a spherical
-    k-means coarse quantizer — the FAISS/ScaNN partitioning idiom), expressed
-    entirely as DataFrame ops:
+    k-means coarse quantizer — the FAISS/ScaNN partitioning idiom): index and
+    probe are DataFrame ops, training runs on the driver:
 
-    1. train: C = ~√n centroids, seeded DETERMINISTICALLY (top-C rows by
-       xxhash64(vec_id) — a reproducible uniform sample), refined by
-       IVF_ITERS Lloyd passes: assign every vector to its argmax-dot
-       centroid (broadcast join + window argmax — the corpus never
-       shuffles), then per-cell spherical mean (64 column avgs,
-       L2-renormalized). Each pass materializes only the C×64 centroid
-       relation (cached — it IS the model).
+    1. train (on the driver): C = ~√n centroids, seeded DETERMINISTICALLY
+       (top-C rows by xxhash64(vec_id) — a reproducible uniform sample),
+       refined by IVF_ITERS Lloyd passes in NumPy over the first
+       IVF_TRAIN_PER_CELL × C conforming vectors in that same hash order,
+       collected with one Arrow action (the whole corpus up to n ≈ 65,536).
+       Each pass assigns to the argmax-dot centroid in IVF_TRAIN_BLOCK-row
+       blocks, then takes the per-cell spherical mean (L2-renormalized).
+       Driver memory peaks at the sample (≤ 512 MB at the 4096-cell
+       ceiling) plus one ≤ 32 MB score block; the C×64 model (cached — it
+       IS the model) goes back to Spark as an Arrow table.
     2. index: one final assignment → (cell, t_id, tv). At 100 TB this is
        the write-once partitioned index; cells are ~√n vectors, so probe
        cost grows as √n, not n.
@@ -722,7 +732,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_quality.py. Centroid count and nprobe grow with √n and the
     target recall; the plan shape (broadcast assign → equi-join probe) is
     size-invariant. The train/index stages live in build_ivf_index (shared
-    with q_semdedup_clustered since round 4); assignment is max_by
+    with q_semdedup_clustered since round 4); index assignment is max_by
     aggregation, not a window sort — the broadcast crossJoin's n×C scored
     rows collapse map-side, so the shuffle moves n rows."""
     e = _embeddings(spark, sf_dir)

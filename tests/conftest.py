@@ -34,7 +34,7 @@ def sweep_subset(qs: dict, names) -> list[str]:
     which overflows the driver's verify window (VERIFY_r14: tests_ok=false
     by TRUNCATION at ~33% progress, zero observed failures). Default: a
     deterministic per-module spread — every operator module keeps its
-    alphabetically-first max(2, ceil(n/6)) queries in each sweep, so every
+    alphabetically-first max(1, ceil(n/10)) queries in each sweep, so every
     family's degenerate code paths (size-adaptive params, null guards,
     empty-seed handling) stay exercised on every axis while the default
     suite fits the verify window. Builder CI runs the FULL matrix with

@@ -675,6 +675,30 @@ def test_query_survives_degraded_embeddings(spark, degvec_sf, name):
     assert len(df.schema.fields) > 0
 
 
+def test_ivf_centroids_finite_unit_norm_on_degraded_embeddings(spark, degvec_sf):
+    """Every 5th degraded vector is all-zero, so some cells' member sums
+    have zero norm: the driver-side trainer must drop those cells rather
+    than divide by zero, and every trained centroid must be a finite unit
+    vector (a NaN centroid would win every argmax on the next pass). Cold
+    build, with NumPy floating-point errors raised instead of warned."""
+    import numpy as np
+
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+    )
+    from aws_etl_microservice_redshift_datalake_spark.operators.vectors import (
+        build_ivf_index,
+    )
+
+    clear_session_memos(spark)
+    with np.errstate(all="raise"):
+        _index, cents = build_ivf_index(spark, degvec_sf)
+    cv = np.array([r.cv for r in cents.collect()])
+    assert len(cv) > 0
+    assert np.isfinite(cv).all()
+    np.testing.assert_allclose(np.linalg.norm(cv, axis=1), 1.0, rtol=0, atol=1e-12)
+
+
 def _elemnull_embeddings(emb):
     """Element-NULL vectors: full-size arrays whose ELEMENTS are NULL (one,
     scattered, or all) — the shape the size()==DIM + IS NOT NULL conformance

@@ -67,7 +67,6 @@ def test_lsh_ann_recall_vs_exact(spark):
     assert recall >= 0.5, f"LSH ANN recall too low: {recall:.2f}"
 
 
-@full_sweeps_only
 def test_ivf_ann_recall_vs_exact(spark):
     """IVF-Flat ANN (rows-only contract): probing IVF_NPROBE of ~√n spherical
     k-means cells must recover most true neighbors — recall ≥ 0.6 at k=5 on
