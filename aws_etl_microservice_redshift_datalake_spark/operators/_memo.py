@@ -1,260 +1,100 @@
-"""Session-scoped memo for persisted relations shared across queries.
+"""Session-owned memo for persisted relations shared across queries.
 
-Several operator families (MinHash shingles, sign-LSH buckets) build one
-narrow-but-expensive relation that many queries re-read within a session.
-Re-persisting per call stacks identical cached copies into executor storage
-("Asked to cache already cached data") until eviction pressure slows
-everything — so those relations are memoized per (session, table-state).
+Some operator families (MinHash shingles and pairs, CC labels, set-
+similarity prefixes, LSH buckets, the IVF model and index) build one
+expensive relation that several queries in a session re-read. Each is
+persisted once and kept on the ``SparkSession`` it serves, in
+``spark.__dict__["_graft_memo"]``: entries keyed ``(name, sf_dir, sig)``,
+where ``sig`` is a table-state signature (``sources.io._stat_sig`` or a
+tuple nesting one), and build locks keyed ``(name, sf_dir)``. The table
+dies with its session. A ``WeakKeyDictionary`` keyed by session would never
+clear, since each memoized DataFrame references its session.
 
-Round-5 hardening (ADVICE r4): the memo itself must not leak.
-
-- A rewritten corpus at the same sf_dir changes the parquet stat signature;
-  superseded entries are unpersisted and dropped, so a stale relation can't
-  stay pinned in executor storage forever.
-- Entries are purged once their session is STOPPED (the load-bearing check:
-  a memoized DataFrame strongly references its session, so the weakref
-  below only clears in the unusual case where the memo entry itself was
-  dropped first — sessions abandoned WITHOUT ``stop()`` stay pinned by
-  their own entries, which is why cleanup keys on the stopped state).
-  A recycled ``id()`` can never be mistaken for the old session because
-  identity is re-checked through the weakref, not the integer key.
-
-Round-6 hardening (ADVICE r5 + review):
-
-- Entries are keyed by SIGNATURE, not just (session, sf_dir): a caller that
-  statted the files before a concurrent rewrite gets a relation matching
-  ITS signature (built if absent) instead of unpersisting the newer
-  relation out from under its consumers — and a legitimate rewrite whose
-  files carry OLDER mtimes (mtime-preserving restore, snapshot rollback)
-  still gets correct data for the on-disk state rather than being served
-  the installed newer-mtimed relation forever. Eviction is freshness-
-  ordered: installing a relation evicts same-(session, sf_dir) entries
-  whose signature is older-or-tied by max file mtime — a fresher entry is
-  never evicted by a stale-sig arrival, so at most one transient zombie
-  persists per restore-to-older-snapshot (correctness over memory).
-- ``_LOCKS`` entries are evicted together with the dead-session purge, and
-  an orphan sweep catches entries whose memo keys vanished while the lock
-  was pinned. Each entry carries a pin count (incremented under
-  ``_LOCKS_MUTEX`` when a thread fetches the lock, decremented when it
-  finishes), so an entry is only deleted when NO thread holds or is about
-  to take its lock — the fetch-then-acquire window can never produce two
-  live locks for one key.
+Installing an entry unpersists the same key's entries whose signature is
+strictly older by max file mtime. On a tie both stay: coarse-mtime
+filesystems can stamp a pre- and post-rewrite state alike.
 """
 
 from __future__ import annotations
 
 import threading
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# per-(memo, session, sf_dir) build locks: a Spark driver legitimately runs
-# queries from many threads, and two threads missing the same key would each
-# build+persist (one copy leaks unreferenced in executor storage — the exact
-# pathology the memo exists to prevent). A single global lock would serialize
-# INDEPENDENT builds (a 9 s IVF train blocking an unrelated shingle build),
-# so locks are per key; _LOCKS_MUTEX only guards the tiny lock-table itself.
-_LOCKS_MUTEX = threading.Lock()
-_LOCKS: dict[tuple, list] = {}  # key -> [lock, pin_count]
-
-# every memo table that ever reached session_memo, keyed by id() (dict
-# equality compares CONTENTS, so a plain list/set membership test would
-# conflate two empty tables) — the inventory clear_session_memos sweeps
-_ALL_MEMOS: dict[int, dict] = {}
+_MUTEX = threading.Lock()
 
 
-def clear_session_memos(spark: SparkSession) -> int:
-    """Unpersist and drop every memoized relation belonging to ``spark``
-    (plus entries whose session weakref already cleared). Diagnostic /
-    cold-path-bench hook (r15, VERDICT r14 #3): the memo families
-    (minhash pairs, CC labels, LSH buckets, IVF model, prefix postings)
-    are write-once artifacts within a session, so a shared-session bench
-    reports their consumers warm; clearing between reps exposes the cold
-    first-call cost. Returns the number of entries dropped. Never called
-    on any query path — only bench.py's opt-in SPARK_GRAFT_BENCH_COLD
-    mode and tests use it."""
-    dropped: list[DataFrame] = []
-    with _LOCKS_MUTEX:
-        for memo in _ALL_MEMOS.values():
-            for k in list(memo):
-                ref, _, df = memo[k]
-                s = ref()
-                if s is spark or s is None:
-                    del memo[k]
-                    dropped.append(df)
-    for df in dropped:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    return len(dropped)
+def _tables(spark: SparkSession) -> tuple[dict, dict]:
+    """(entries, locks) of ``spark``'s memo, created on first use."""
+    with _MUTEX:
+        return spark.__dict__.setdefault("_graft_memo", ({}, {}))
 
 
-def _pin_key_lock(key: tuple) -> threading.Lock:
-    """Fetch (creating if needed) the build lock for ``key`` and pin its
-    table entry so a concurrent purge can't delete it between fetch and
-    acquire. Pair with :func:`_unpin_key_lock` in a finally block."""
-    with _LOCKS_MUTEX:
-        ent = _LOCKS.get(key)
-        if ent is None:
-            ent = _LOCKS[key] = [threading.Lock(), 0]
-        ent[1] += 1
-        return ent[0]
-
-
-def _unpin_key_lock(key: tuple) -> None:
-    with _LOCKS_MUTEX:
-        ent = _LOCKS.get(key)
-        if ent is not None:
-            ent[1] -= 1
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Exception:
+        pass
 
 
 def _sig_fresh(sig: object) -> int:
-    """Max mtime_ns embedded in a table-state signature (0 when none).
-
-    Signatures are either ``sources.io._stat_sig`` tuples of
-    ``(path, size, mtime_ns)`` triples or composites nesting one (the IVF
-    memo packs ``(stat_sig, n_cells, iters, ...)``); the max file mtime
-    orders two signatures of the SAME path by rewrite recency."""
+    """Max mtime_ns in a (nested) tuple of ``(path, size, mtime_ns)``."""
     if isinstance(sig, tuple):
-        if (
-            len(sig) == 3
-            and isinstance(sig[0], str)
-            and isinstance(sig[2], int)
-        ):
+        if len(sig) == 3 and isinstance(sig[0], str) and isinstance(sig[2], int):
             return sig[2]
         return max((_sig_fresh(s) for s in sig), default=0)
     return 0
 
 
+def clear_session_memos(spark: SparkSession) -> int:
+    """Unpersist and drop every relation memoized on ``spark``; returns how
+    many. Key locks are taken one at a time, never nested, so a build in
+    flight finishes first and its entry is dropped too."""
+    entries, locks = _tables(spark)
+    dropped = 0
+    while True:
+        with _MUTEX:
+            pending = list(locks.items())
+        for lkey, lock in pending:
+            with lock, _MUTEX:
+                gone = [entries.pop(k) for k in list(entries) if k[:2] == lkey]
+            for df in gone:
+                _unpersist(df)
+            dropped += len(gone)
+        with _MUTEX:
+            if not entries:
+                return dropped
+
+
 def session_memo(
-    memo: dict,
-    spark: SparkSession,
-    sf_dir: str,
-    sig: object,
+    name: str, spark: SparkSession, sf_dir: str, sig: object,
     build: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Return the memoized persisted relation for (``spark``, ``sf_dir``,
-    ``sig``), building it if absent. The build is persisted WITH a count()
-    materialization barrier: a lazy cache shared by several
-    not-yet-materialized leaf stages inside one action makes each racing
-    stage recompute AND serialize the same partitions (measured 4×
-    re-shingling — the round-4 rule). Thread-safe: concurrent callers of the
-    same (session, sf_dir) block on one build; different keys build in
-    parallel. Memo keys are ``((id(session), sf_dir), sig)`` — ``sig`` must
-    be hashable (stat-sig tuples and their composites are).
-
-    ``sig`` may be a CALLABLE producing the signature: it is then evaluated
-    under this key's build lock, so the signature is fresh at decision/build
-    time, and RE-evaluated after the build materializes — if the two
-    disagree, a rewrite landed DURING the build (the relation may mix
-    pre- and post-rewrite files), so the result is returned to the caller
-    unmemoized and unpersisted (a later action recomputes it from a
-    consistent on-disk state) instead of being installed under either
-    signature. Together these close the stale-caller poisoning race (r6
-    review, both halves): neither a caller that statted before a rewrite
-    nor a rewrite racing the build itself can install mislabeled data that
-    a later mtime-preserving restore would hit. Production call sites all
-    pass callables; plain values remain supported (tests, fixed-key
-    memos) but get no during-build re-check."""
-    # purge dead entries: session GC'd (weakref cleared) OR stopped (the
-    # memoized DataFrame strongly references its session, so a stopped
-    # session would otherwise stay pinned through its own memo entry —
-    # executors and their cache are gone either way, nothing to unpersist)
-    def _dead(s) -> bool:
-        if s is None:
-            return True
-        try:
-            return s.sparkContext._jsc is None
-        except Exception:
-            return False
-
-    skey = (id(spark), sf_dir)
-    lkey = (id(memo), *skey)
-    with _LOCKS_MUTEX:
-        _ALL_MEMOS[id(memo)] = memo  # inventory for clear_session_memos
-
-    lk = _pin_key_lock(lkey)
-    try:
-        with lk:
-            sig_fn = sig if callable(sig) else None
-            if sig_fn is not None:
-                sig = sig_fn()  # fresh-at-build: stat calls are ~µs
-            # all dict reads/mutations happen under the table mutex (another
-            # key's thread may be touching the same dict concurrently); only
-            # the expensive build+materialize runs outside it, still guarded
-            # by this key's lock so a second caller of the SAME key blocks
-            # and then re-reads a hit instead of double-building
-            with _LOCKS_MUTEX:
-                for k in [k for k, (ref, _, _) in memo.items() if _dead(ref())]:
-                    del memo[k]
-                    # evict the dead key's lock entry too (ADVICE r5: the
-                    # table grew one entry per session forever) — unless a
-                    # thread has it pinned, in which case the orphan sweep
-                    # below gets it once the pin drops
-                    dead_lkey = (id(memo), *k[0])
-                    ent = _LOCKS.get(dead_lkey)
-                    if ent is not None and ent[1] == 0:
-                        del _LOCKS[dead_lkey]
-                # orphan sweep: a lock entry pinned DURING a purge outlives
-                # its memo keys (the purge above only visits keys it is
-                # removing right now) — reap any unpinned lock of this memo
-                # whose (session, sf_dir) no longer has entries
-                live = {k[0] for k in memo}
-                for olk in [
-                    olk
-                    for olk, ent in _LOCKS.items()
-                    if olk[0] == id(memo)
-                    and ent[1] == 0
-                    and (olk[1], olk[2]) not in live
-                    and olk != lkey
-                ]:
-                    del _LOCKS[olk]
-                ent = memo.get((skey, sig))
-                if ent is not None:
-                    ref, _, df = ent
-                    if ref() is spark:
-                        return df
-                    del memo[(skey, sig)]  # recycled id(): not our session
-            df = build().persist()
-            df.count()
-            if sig_fn is not None and sig_fn() != sig:
-                # a rewrite landed DURING the multi-second build+materialize:
-                # the persisted partitions may mix pre- and post-rewrite
-                # files. Install under NEITHER signature — hand the relation
-                # back unpersisted so the caller's next action recomputes
-                # from a consistent on-disk state, and the next memo call
-                # rebuilds under the settled signature (r6 review: the
-                # at-build-start stat alone left this window open).
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
-                return df
-            evict = []
-            with _LOCKS_MUTEX:
-                memo[(skey, sig)] = (weakref.ref(spark), sig, df)
-                # freshness-ordered eviction: drop same-(session, sf_dir)
-                # entries whose sig is STRICTLY older (a rewrite superseded
-                # them); on a freshness TIE both entries are kept (ADVICE
-                # r6: filesystems with coarse mtime granularity — 1s HFS+,
-                # 2s FAT — can stamp a pre- and post-rewrite state with the
-                # same mtime_ns, and evicting on the tie would let a
-                # stale-sig straggler unpersist the newer relation out from
-                # under its consumers; a tied duplicate merely persists one
-                # extra relation until the session purge). A fresher entry
-                # is therefore never evicted by a stale-or-tied-sig arrival.
-                mine = _sig_fresh(sig)
-                for k, (_, osig, odf) in list(memo.items()):
-                    if k[0] == skey and k[1] != sig and _sig_fresh(osig) < mine:
-                        del memo[k]
-                        evict.append(odf)
-            for odf in evict:
-                try:
-                    odf.unpersist()
-                except Exception:
-                    pass
+    """The relation memoized on ``spark`` under (``name``, ``sf_dir``,
+    ``sig``). On a miss ``build()`` is persisted behind a ``count()``
+    barrier: a lazy cache read by several unmaterialized stages of one
+    action is recomputed by each. A callable ``sig`` is evaluated under the
+    key lock and again after the build; if they differ, a rewrite landed
+    mid-build, so the relation is returned unpersisted and not installed."""
+    entries, locks = _tables(spark)
+    with _MUTEX:
+        lock = locks.setdefault((name, sf_dir), threading.Lock())
+    with lock:
+        sig_fn = sig if callable(sig) else None
+        key = (name, sf_dir, sig_fn() if sig_fn else sig)
+        if key in entries:
+            return entries[key]
+        df = build().persist()
+        df.count()
+        if sig_fn is not None and sig_fn() != key[2]:
+            _unpersist(df)
             return df
-    finally:
-        _unpin_key_lock(lkey)
+        fresh = _sig_fresh(key[2])
+        with _MUTEX:
+            entries[key] = df
+            stale = [entries.pop(k) for k in list(entries)
+                     if k[:2] == key[:2] and _sig_fresh(k[2]) < fresh]
+        for odf in stale:
+            _unpersist(odf)
+        return df

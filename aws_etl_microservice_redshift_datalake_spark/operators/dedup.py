@@ -81,9 +81,6 @@ def _elem_gram_sql(arr: str, k: int) -> str:
     return " || ' ' || ".join(f"{arr}[i+{j}]" for j in range(k))
 
 
-_ARRS_MEMO: dict[tuple, tuple] = {}
-
-
 def _shingle_arrays_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shingle-array relation, persisted WITH a materialization barrier
     and MEMOIZED per (session, table-state): every consumer (minhash,
@@ -105,7 +102,7 @@ def _shingle_arrays_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._memo import session_memo
 
     return session_memo(
-        _ARRS_MEMO, spark, sf_dir,
+        "shingles", spark, sf_dir,
         lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
         lambda: _shingle_arrays(spark, sf_dir),
     )
@@ -1025,9 +1022,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIRS_MEMO: dict[tuple, tuple] = {}
-
-
 def _minhash_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified MinHash pair relation as a shared persisted intermediate
     for its COMPOSITE consumers (cluster resolution, and through it the
@@ -1041,13 +1035,10 @@ def _minhash_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._memo import session_memo
 
     return session_memo(
-        _PAIRS_MEMO, spark, f"{sf_dir}|minhash-pairs",
+        "pairs", spark, sf_dir,
         lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
         lambda: q_dedup_minhash_pairs(spark, sf_dir),
     )
-
-
-_CC_LABELS_MEMO: dict[tuple, tuple] = {}
 
 
 def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1085,7 +1076,7 @@ def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return session_memo(
-        _CC_LABELS_MEMO, spark, f"{sf_dir}|cc-labels|reliable={reliable}",
+        "cc-labels", spark, f"{sf_dir}|reliable={reliable}",
         lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
         _build,
     )
@@ -1869,9 +1860,6 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PREF_MEMO: dict[tuple, tuple] = {}
-
-
 def _setsim_prefix_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical-order prefix relation (doc_id, n, pos, h), persisted
     with the family's count barrier and memoized per (session,
@@ -1883,7 +1871,7 @@ def _setsim_prefix_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._memo import session_memo
 
     return session_memo(
-        _PREF_MEMO, spark, sf_dir,
+        "setsim-prefix", spark, sf_dir,
         lambda: _stat_sig(table_path(sf_dir, "documents")),
         lambda: _setsim_prefix(
             _shingle_arrays_persisted(spark, sf_dir), SETSIM_TAU
@@ -2143,10 +2131,6 @@ def containment_candidates(
     )
 
 
-_CONT_PREF_MEMO: dict[tuple, tuple] = {}
-_CONT_POST_MEMO: dict[tuple, tuple] = {}
-
-
 def _containment_prefix_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2158,7 +2142,7 @@ def _containment_prefix_persisted(
     from ._memo import session_memo
 
     return session_memo(
-        _CONT_PREF_MEMO, spark, sf_dir,
+        "containment-prefix", spark, sf_dir,
         lambda: _stat_sig(table_path(sf_dir, "documents")),
         lambda: _setsim_prefix(
             _shingle_arrays_persisted(spark, sf_dir), CONTAIN_TAU
@@ -2176,7 +2160,7 @@ def _containment_postings_persisted(
     from ._memo import session_memo
 
     return session_memo(
-        _CONT_POST_MEMO, spark, sf_dir,
+        "containment-postings", spark, sf_dir,
         lambda: _stat_sig(table_path(sf_dir, "documents")),
         lambda: _containment_postings(
             _shingle_arrays_persisted(spark, sf_dir)

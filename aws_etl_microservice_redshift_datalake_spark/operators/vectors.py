@@ -283,9 +283,6 @@ def _neardup_params(n: int) -> tuple[int, int]:
     return lsh_l, k
 
 
-_BUCKETS_MEMO: dict[tuple, tuple] = {}
-_IVF_MEMO: dict[tuple, tuple] = {}
-
 PLANE_NNZ = 8  # non-zero dims per hyperplane (sparse random projections)
 
 
@@ -437,7 +434,7 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _neardup_params(table_rows(sf_dir, "embeddings"))
 
     buckets = session_memo(
-        _BUCKETS_MEMO,
+        "lsh-buckets",
         spark,
         sf_dir,
         # signature carries (L, k) alongside the table state: the bucket
@@ -657,7 +654,7 @@ def build_ivf_index(
         return _stat_sig(path)
 
     cents = session_memo(
-        _IVF_MEMO, spark, f"{sf_dir}|ivf-cents",
+        "ivf-cents", spark, sf_dir,
         lambda: (_sig(), n_cells, IVF_ITERS), _train,  # fresh-at-build
     )
 
@@ -695,7 +692,7 @@ def build_ivf_index(
         )
 
     index = session_memo(
-        _IVF_MEMO, spark, f"{sf_dir}|ivf-index-{n_assign}",
+        "ivf-index", spark, f"{sf_dir}|n_assign={n_assign}",
         lambda: (_sig(), n_cells, IVF_ITERS, n_assign), _final,
         # IVF_ITERS in the sig: the index must supersede together with the
         # model it was assigned from; fresh-at-build callable like the rest

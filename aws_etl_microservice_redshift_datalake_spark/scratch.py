@@ -19,51 +19,10 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _REGISTERED: set[str] = set()
 
 
-# (pid, resolved default root): the free-space probe must run ONCE per
-# process (ADVICE r14 — re-evaluating per call lets the root FLIP mid-run
-# when tmpfs fills, silently stranding staged fragment/compact state in the
-# old root); a fork()ed child re-probes under its own pid.
-_DEFAULT_ROOT: tuple[int, str] | None = None
-
-
 def scratch_root() -> str:
-    """Resolved at CALL time, not import: the env override must work even
-    when set after the package was first imported, and a fork()ed child
-    re-resolves its own pid below rather than inheriting the parent's.
-    The probed (env=auto) decision is cached per pid so the root is stable
-    for the process lifetime (ADVICE r14).
-
-    r15 (VERDICT r14 #1): the r14 tmpfs DEFAULT did not reproduce its win
-    under the driver's protocol (see session._fast_local_dir — Spark-
-    default scratch won all four A/B pairs on whole-run totals), so the
-    default is back to ``<repo>/.tmp``. ``SPARK_GRAFT_SCRATCH=auto`` keeps
-    the tmpfs probe as an explicit opt-in (≥8 GiB free, 0700 + ownership
-    check); any other non-empty value is used as the root. Contents stay
-    per-process and are removed at interpreter exit either way."""
-    global _DEFAULT_ROOT
-    env = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if env and env != "auto":
-        return env
-    if not env:
-        return os.path.join(_REPO, ".tmp")
-    if _DEFAULT_ROOT is not None and _DEFAULT_ROOT[0] == os.getpid():
-        return _DEFAULT_ROOT[1]
-    root = os.path.join(_REPO, ".tmp")
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        try:
-            if shutil.disk_usage(shm).free >= 8 << 30:
-                d = os.path.join(shm, f"spark-graft-scratch-{os.getuid()}")
-                # world-writable /dev/shm: own the dir 0o700 or fall back
-                # (ADVICE r14, same check as session._fast_local_dir)
-                os.makedirs(d, mode=0o700, exist_ok=True)
-                if os.stat(d).st_uid == os.getuid():
-                    os.chmod(d, 0o700)
-                    root = d
-        except OSError:
-            pass
-    _DEFAULT_ROOT = (os.getpid(), root)
-    return root
+    """``SPARK_GRAFT_SCRATCH`` or ``<repo>/.tmp``, resolved at call time so
+    an override set after import still applies."""
+    return os.environ.get("SPARK_GRAFT_SCRATCH") or os.path.join(_REPO, ".tmp")
 
 
 def process_scratch() -> str:

@@ -23,54 +23,14 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
-# Only use tmpfs scratch when it has real headroom beyond any plausible
-# local-mode shuffle volume (the test corpora are ≤ tens of MB; 8 GiB free
-# keeps a safety margin of ~1000× while never touching a memory-tight box).
-_TMPFS_MIN_FREE_BYTES = 8 << 30
-
 
 def _fast_local_dir() -> str | None:
-    """Shuffle/spill scratch directory for LOCAL mode, or None for Spark's
-    default.
-
-    r15 ADJUDICATION (VERDICT r14 #1): the r14 tmpfs DEFAULT was A/B'd
-    under the driver's own protocol — one fresh ``python bench.py`` per
-    measurement, local[32], sf0.1, 4 alternating pairs, /proc/stat steal
-    recorded (plans/r15/ab_localdir_results.jsonl). Spark-default scratch
-    won ALL FOUR pairs on whole-run totals (63.2–79.5 s vs 73.2–155.3 s);
-    only per-query minima showed a small tmpfs edge (geomean 0.934), i.e.
-    the r14 win never reproduced where it counts. Per the verdict's
-    decision rule the default is REVERTED to Spark's own scratch;
-    ``SPARK_GRAFT_LOCAL_DIR=auto`` keeps the r14 behavior as an explicit
-    opt-in (probe /dev/shm, require ≥8 GiB free, create 0700 and verify
-    ownership), any other non-empty value is used as the directory, and
-    '' / unset means Spark's default. Never applied outside local mode
-    (a 100 TB shuffle exceeds RAM; executors must keep the cluster's
-    disks)."""
-    env = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if env != "auto":
-        return env or None
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        try:
-            import shutil
-
-            if shutil.disk_usage(shm).free >= _TMPFS_MIN_FREE_BYTES:
-                d = os.path.join(shm, f"spark-graft-local-{os.getuid()}")
-                # /dev/shm is world-writable: create 0o700 and verify WE own
-                # the directory (ADVICE r14 — another user pre-creating the
-                # predictable path could read/delete our shuffle files).
-                # On ownership mismatch fall back to Spark's default scratch
-                # rather than silently sharing.
-                os.makedirs(d, mode=0o700, exist_ok=True)
-                st = os.stat(d)
-                if st.st_uid != os.getuid():
-                    return None
-                os.chmod(d, 0o700)
-                return d
-        except OSError:
-            return None
-    return None
+    """``spark.local.dir`` for LOCAL mode from ``SPARK_GRAFT_LOCAL_DIR``,
+    or None ('' or unset) for Spark's default. Never applied outside local
+    mode: a cluster's executors keep their own disks. There is no tmpfs
+    default: Spark's own scratch won all four alternating A/B pairs against
+    it on whole-run totals (plans/r15/ab_localdir_results.jsonl)."""
+    return os.environ.get("SPARK_GRAFT_LOCAL_DIR") or None
 
 
 def get_session(

@@ -68,11 +68,11 @@ for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
 
 # --- 3. clear_session_memos smoke: memos populated then dropped ---
 from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
-    _ALL_MEMOS, clear_session_memos,
+    _tables, clear_session_memos,
 )
-n_entries = sum(len(m) for m in _ALL_MEMOS.values())
+n_entries = len(_tables(spark)[0])
 n_dropped = clear_session_memos(spark)
-print(f"memo tables={len(_ALL_MEMOS)} entries={n_entries} dropped={n_dropped}")
+print(f"memo entries={n_entries} dropped={n_dropped}")
 assert n_dropped == n_entries and n_dropped > 0
 # rebuild after clear still oracle-green (cold path intact)
 run_compare(spark, duck, "q_cluster_split", QS["q_cluster_split"],

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import aws_etl_microservice_redshift_datalake_spark as engine
 from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
-    _ALL_MEMOS,
+    _tables,
     clear_session_memos,
 )
 
@@ -21,22 +21,12 @@ def test_clear_session_memos_drops_and_rebuilds(spark):
 
     df1 = _minhash_pairs_persisted(spark, SF_SMALL)
     n1 = df1.count()
-    before = sum(
-        1
-        for memo in _ALL_MEMOS.values()
-        for (skey, _sig) in memo
-        if skey[0] == id(spark)
-    )
-    assert before >= 1
+    before = len(_tables(spark)[0])
+    assert before >= 1 and df1.storageLevel.useMemory
     dropped = clear_session_memos(spark)
     assert dropped >= before
-    after = sum(
-        1
-        for memo in _ALL_MEMOS.values()
-        for (skey, _sig) in memo
-        if skey[0] == id(spark)
-    )
-    assert after == 0
+    assert len(_tables(spark)[0]) == 0
+    assert not df1.storageLevel.useMemory
     # cold rebuild must produce the identical relation
     df2 = _minhash_pairs_persisted(spark, SF_SMALL)
     assert df2.count() == n1

@@ -489,72 +489,100 @@ def test_cross_lingual_clustered_subset_and_recall(spark):
         assert tc / te >= 0.5, f"clustered xling recall too low at {sf}: {tc}/{te}"
 
 
-def test_session_memo_evicts_superseded_and_dead(spark):
+def test_session_memo_evicts_superseded(spark):
     """The shared persisted-relation memo (operators._memo) must not leak:
     a changed table-state signature at the same sf_dir unpersists and
-    replaces the superseded entry, and entries whose session object has
-    been garbage-collected are purged (ADVICE r4 / VERDICT r4 #7)."""
-    import gc
-    import weakref
+    replaces the superseded entry. Each memo test runs on its own
+    ``newSession()`` sibling, whose memo dies with it."""
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
 
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
-
-    memo: dict = {}
+    s = spark.newSession()
     sig1 = (("/x/part-0.parquet", 100, 1_000),)
     sig2 = (("/x/part-0.parquet", 120, 2_000),)  # a rewrite: fresher mtime
-    a = session_memo(memo, spark, "/x", sig1, lambda: spark.range(5))
-    assert a.storageLevel.useMemory and len(memo) == 1
+    a = session_memo("t", s, "/x", sig1, lambda: s.range(5))
+    assert a.storageLevel.useMemory
     # same signature: memo hit, the build lambda must not run
-    b = session_memo(memo, spark, "/x", sig1,
+    b = session_memo("t", s, "/x", sig1,
                      lambda: (_ for _ in ()).throw(AssertionError("rebuilt")))
     assert b is a
     # new signature at the same sf_dir: superseded entry unpersisted, replaced
-    c = session_memo(memo, spark, "/x", sig2, lambda: spark.range(7))
+    c = session_memo("t", s, "/x", sig2, lambda: s.range(7))
     assert c is not a
     assert not a.storageLevel.useMemory, "superseded relation still pinned"
-    assert c.storageLevel.useMemory and len(memo) == 1
-    # dead-session entries are purged on the next lookup
-    class Dummy:
-        pass
-
-    dummy = Dummy()
-    memo[((id(dummy), "/y"), "s")] = (weakref.ref(dummy), "s", spark.range(3))
-    del dummy
-    gc.collect()
-    session_memo(memo, spark, "/z", "s", lambda: spark.range(1))
-    assert all(k[0][1] != "/y" for k in memo), "dead-session entry not purged"
-    for _, _, df in memo.values():
-        df.unpersist()
+    assert c.storageLevel.useMemory
+    assert clear_session_memos(s) == 1, "superseded entry still in the table"
 
 
 def test_session_memo_concurrent_single_build(spark):
     """A Spark driver legitimately runs queries from many threads: 8 threads
     racing the same memo key must produce exactly ONE build (a lost race
-    would leak an unreferenced persisted copy in executor storage), and
-    distinct keys must not serialize behind one another's builds."""
+    would leak an unreferenced persisted copy in executor storage)."""
+    import sys
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
 
-    memo: dict = {}
+    s = spark.newSession()
     builds = []
     gate = threading.Barrier(8)
 
     def build():
         builds.append(1)
-        return spark.range(10)
+        return s.range(10)
 
     def call(_):
         gate.wait()  # maximize the race window
-        return session_memo(memo, spark, "/race", "s1", build)
+        return session_memo("t", s, "/race", "s1", build)
 
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        got = list(ex.map(call, range(8)))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # switch threads as often as possible
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            got = list(ex.map(call, range(8)))
+    finally:
+        sys.setswitchinterval(interval)
     assert len(builds) == 1, f"{len(builds)} builds for one key"
     assert all(g is got[0] for g in got), "threads saw different relations"
-    assert len(memo) == 1
-    got[0].unpersist()
+    assert clear_session_memos(s) == 1
+
+
+def test_session_memo_distinct_keys_build_in_parallel(spark):
+    """Builds of different keys must not serialize behind one another: each
+    of two builds waits until the other has started, which can only finish
+    if both run at once."""
+    import threading
+
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
+
+    s = spark.newSession()
+    started = threading.Barrier(2, timeout=30)
+    results: dict = {}
+
+    def call(sf_dir):
+        def build():
+            started.wait()  # BrokenBarrierError if the other build is blocked
+            return s.range(3)
+
+        results[sf_dir] = session_memo("t", s, sf_dir, "s", build)
+
+    threads = [threading.Thread(target=call, args=(d,)) for d in ("/p1", "/p2")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert not any(t.is_alive() for t in threads)
+    assert set(results) == {"/p1", "/p2"}, "a build waited on another key"
+    assert clear_session_memos(s) == 2
 
 
 @full_sweeps_only
@@ -715,61 +743,22 @@ def test_driver_history_green_predicate(tmp_path):
     assert any("CORRECTNESS_r02" in str(w.message) for w in caught)
 
 
-def test_session_memo_lock_table_evicts_with_dead_sessions(spark):
-    """The per-key build-lock table must shrink together with the dead-entry
-    purge (VERDICT r5 #5 / ADVICE r5): a session that died leaves neither a
-    memo entry NOR a lock entry behind, while live keys keep their locks."""
-    import gc
-    import weakref
-
-    from aws_etl_microservice_redshift_datalake_spark.operators import _memo
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
-
-    memo: dict = {}
-    live = session_memo(memo, spark, "/lock-live", "s", lambda: spark.range(2))
-    live_lkey = (id(memo), id(spark), "/lock-live")
-    assert live_lkey in _memo._LOCKS
-
-    class Dummy:
-        pass
-
-    dummy = Dummy()
-    dead_skey = (id(dummy), "/lock-dead")
-    dead_lkey = (id(memo), *dead_skey)
-    memo[(dead_skey, "s")] = (weakref.ref(dummy), "s", spark.range(3))
-    _memo._LOCKS[dead_lkey] = [__import__("threading").Lock(), 0]
-    del dummy
-    gc.collect()
-    session_memo(memo, spark, "/lock-live", "s", lambda: spark.range(2))
-    assert (dead_skey, "s") not in memo, "dead memo entry not purged"
-    assert dead_lkey not in _memo._LOCKS, "dead lock entry not evicted"
-    assert live_lkey in _memo._LOCKS, "live lock entry wrongly evicted"
-    # orphan sweep: an unpinned lock whose memo keys vanished while it was
-    # pinned during the purge is reaped on the next call (review finding)
-    orphan_lkey = (id(memo), 12345, "/orphan")
-    _memo._LOCKS[orphan_lkey] = [__import__("threading").Lock(), 0]
-    session_memo(memo, spark, "/lock-live", "s", lambda: spark.range(2))
-    assert orphan_lkey not in _memo._LOCKS, "orphaned lock entry not swept"
-    live.unpersist()
-    memo.clear()
-
-
 def test_session_memo_supersede_is_freshness_ordered(spark):
-    """Signature-keyed coexistence (ADVICE r5, tightened by the r6 review):
-    a caller whose stat signature predates a concurrent rewrite must NOT
-    unpersist the newer relation out from under its consumers — it gets a
-    relation matching ITS OWN signature (built if absent), which also keeps
-    an mtime-preserving restore / snapshot rollback CORRECT (the on-disk
-    state wins; the memo can never pin newer-mtimed data forever). Eviction
-    is freshness-ordered: installing a relation evicts only STRICTLY older
-    sigs of the same (session, sf_dir) — on a freshness tie both entries
-    coexist (ADVICE r6: coarse-mtime filesystems can stamp pre- and
-    post-rewrite states with the same mtime_ns, and evicting on the tie
-    would let a stale-sig straggler unpersist the newer relation).
-    Signatures are real _stat_sig shapes ((path, size, mtime_ns) tuples,
-    optionally nested)."""
+    """Signature-keyed coexistence: a caller whose stat signature predates a
+    concurrent rewrite must NOT unpersist the newer relation out from under
+    its consumers — it gets a relation matching ITS OWN signature (built if
+    absent), which also keeps an mtime-preserving restore / snapshot
+    rollback CORRECT (the on-disk state wins; the memo can never pin
+    newer-mtimed data forever). Eviction is freshness-ordered: installing a
+    relation evicts only STRICTLY older sigs of the same (name, sf_dir) —
+    on a freshness tie both entries coexist (coarse-mtime filesystems can
+    stamp pre- and post-rewrite states with the same mtime_ns, and evicting
+    on the tie would let a stale-sig straggler unpersist the newer
+    relation). Signatures are real _stat_sig shapes ((path, size, mtime_ns)
+    tuples, optionally nested)."""
     from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
         _sig_fresh,
+        clear_session_memos,
         session_memo,
     )
 
@@ -779,33 +768,31 @@ def test_session_memo_supersede_is_freshness_ordered(spark):
     # composite (IVF-style) signatures order by the nested stat sig
     assert _sig_fresh((new_sig, 32, 4)) == 2_000
 
-    memo: dict = {}
-    fresh = session_memo(memo, spark, "/ord", new_sig, lambda: spark.range(9))
+    s = spark.newSession()
+    fresh = session_memo("t", s, "/ord", new_sig, lambda: s.range(9))
     # stale-sig arrival (restore-to-older-snapshot / racing pre-rewrite
     # caller): builds ITS OWN relation; the newer one survives persisted
-    got = session_memo(memo, spark, "/ord", old_sig, lambda: spark.range(7))
+    got = session_memo("t", s, "/ord", old_sig, lambda: s.range(7))
     assert got is not fresh and got.count() == 7
     assert fresh.storageLevel.useMemory, "newer relation was unpersisted"
     # exact-sig re-arrival is a plain hit on the coexisting entry
-    assert session_memo(memo, spark, "/ord", old_sig, lambda: 1 / 0) is got
-    assert session_memo(memo, spark, "/ord", new_sig, lambda: 1 / 0) is fresh
+    assert session_memo("t", s, "/ord", old_sig, lambda: 1 / 0) is got
+    assert session_memo("t", s, "/ord", new_sig, lambda: 1 / 0) is fresh
     # freshness TIE (coarse-mtime rewrite: same mtime_ns, different size):
     # the tied arrival coexists — it must NOT evict the equally-fresh entry
     tied_sig = (("/d/part-0.parquet", 121, 2_000),)
-    tied = session_memo(memo, spark, "/ord", tied_sig, lambda: spark.range(3))
+    tied = session_memo("t", s, "/ord", tied_sig, lambda: s.range(3))
     assert tied is not fresh and fresh.storageLevel.useMemory, (
-        "tied-sig arrival evicted the equally-fresh relation (ADVICE r6)"
+        "tied-sig arrival evicted the equally-fresh relation"
     )
     # strictly newer signature supersedes ALL older-and-tied entries
     newest_sig = (("/d/part-0.parquet", 130, 3_000),)
-    nxt = session_memo(memo, spark, "/ord", newest_sig, lambda: spark.range(4))
+    nxt = session_memo("t", s, "/ord", newest_sig, lambda: s.range(4))
     assert nxt is not fresh and not fresh.storageLevel.useMemory
     assert not got.storageLevel.useMemory
-    assert [k for k in memo if k[0] == (id(spark), "/ord")] == [
-        ((id(spark), "/ord"), newest_sig)
-    ]
-    nxt.unpersist()
-    memo.clear()
+    assert not tied.storageLevel.useMemory
+    assert session_memo("t", s, "/ord", newest_sig, lambda: 1 / 0) is nxt
+    assert clear_session_memos(s) == 1, "an evicted entry stayed in the table"
 
 
 def test_exact_substring_production_k50(spark):
@@ -833,21 +820,26 @@ def test_exact_substring_production_k50(spark):
 
 def test_session_memo_isolates_newSession_siblings(spark):
     """Two sessions over ONE SparkContext (spark.newSession()) must get
-    INDEPENDENT memo entries (keying is per session object, not per JVM):
-    a relation built in the sibling must not be returned to the parent, and
-    purging one session's entries must leave the sibling's intact."""
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
+    INDEPENDENT memo entries (the memo lives on the session object, not
+    the JVM): a relation built in one sibling must not be returned to the
+    other, and clearing one session's memo must leave the sibling's
+    intact."""
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
 
-    memo: dict = {}
-    sib = spark.newSession()
-    a = session_memo(memo, spark, "/iso", "s", lambda: spark.range(3))
-    b = session_memo(memo, sib, "/iso", "s", lambda: sib.range(4))
+    s1, s2 = spark.newSession(), spark.newSession()
+    a = session_memo("t", s1, "/iso", "s", lambda: s1.range(3))
+    b = session_memo("t", s2, "/iso", "s", lambda: s2.range(4))
     assert a is not b and a.count() == 3 and b.count() == 4
-    assert len(memo) == 2
     # same key again: each session still gets ITS relation back
-    assert session_memo(memo, spark, "/iso", "s", lambda: 1 / 0) is a
-    assert session_memo(memo, sib, "/iso", "s", lambda: 1 / 0) is b
-    a.unpersist(); b.unpersist(); memo.clear()
+    assert session_memo("t", s1, "/iso", "s", lambda: 1 / 0) is a
+    assert session_memo("t", s2, "/iso", "s", lambda: 1 / 0) is b
+    assert clear_session_memos(s1) == 1
+    assert not a.storageLevel.useMemory and b.storageLevel.useMemory
+    assert session_memo("t", s2, "/iso", "s", lambda: 1 / 0) is b
+    assert clear_session_memos(s2) == 1
 
 
 def test_minhash_grown_banding_executes_and_matches(spark, monkeypatch):
@@ -888,26 +880,29 @@ def test_stratified_sample_exact_counts(spark):
 
 
 def test_session_memo_callable_sig_fresh_at_build(spark):
-    """Callable signatures are evaluated under the build lock (r6 review):
-    the entry is keyed by the EVALUATED fresh signature — a caller that
-    statted before a rewrite can no longer install post-rewrite data under
-    its stale signature (the poisoning race) because the signature is
-    re-derived at build time."""
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
+    """Callable signatures are evaluated under the build lock: the entry is
+    keyed by the EVALUATED fresh signature — a caller that statted before a
+    rewrite can no longer install post-rewrite data under its stale
+    signature (the poisoning race) because the signature is re-derived at
+    build time."""
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
 
-    memo: dict = {}
+    s = spark.newSession()
     state = {"sig": (("/p", 1, 100),)}
-    a = session_memo(memo, spark, "/cal", lambda: state["sig"], lambda: spark.range(2))
-    assert ((id(spark), "/cal"), (("/p", 1, 100),)) in memo
+    a = session_memo("t", s, "/cal", lambda: state["sig"], lambda: s.range(2))
+    # keyed by the evaluated signature: the plain value is a hit
+    assert session_memo("t", s, "/cal", (("/p", 1, 100),), lambda: 1 / 0) is a
     # a rewrite lands before the next arrival: the fresh signature is what
     # the call keys on, so it MISSES the old entry and supersedes it
     state["sig"] = (("/p", 2, 200),)
-    b = session_memo(memo, spark, "/cal", lambda: state["sig"], lambda: spark.range(3))
+    b = session_memo("t", s, "/cal", lambda: state["sig"], lambda: s.range(3))
     assert b is not a and b.count() == 3
-    assert list(memo) == [((id(spark), "/cal"), (("/p", 2, 200),))]
     assert not a.storageLevel.useMemory, "superseded relation still pinned"
-    b.unpersist()
-    memo.clear()
+    assert session_memo("t", s, "/cal", (("/p", 2, 200),), lambda: 1 / 0) is b
+    assert clear_session_memos(s) == 1
 
 
 def test_session_memo_mid_build_rewrite_not_installed(spark):
@@ -915,32 +910,38 @@ def test_session_memo_mid_build_rewrite_not_installed(spark):
     between the at-start and after-count evaluations) must hand the caller
     its relation UNMEMOIZED and unpersisted: the partitions may mix pre-
     and post-rewrite files, so installing under either signature would
-    poison the memo (r6 review — the at-start stat alone left this open)."""
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
+    poison the memo."""
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
 
-    memo: dict = {}
+    s = spark.newSession()
     sigs = iter([(("/p", 1, 100),), (("/p", 2, 200),)])
     df = session_memo(
-        memo, spark, "/midbuild", lambda: next(sigs), lambda: spark.range(4)
+        "t", s, "/midbuild", lambda: next(sigs), lambda: s.range(4)
     )
     assert df.count() == 4  # the caller still gets a usable relation
-    assert memo == {}, "torn-build relation was installed"
+    assert clear_session_memos(s) == 0, "torn-build relation was installed"
     assert not df.storageLevel.useMemory, "torn-build relation left persisted"
 
 
 def test_session_memo_racing_rewrite_across_threads(spark):
-    """The exact interleaving the callable-sig change exists for, driven with
+    """The exact interleaving the callable-sig check exists for, driven with
     real threads: A acquires the key lock and starts a slow build; a rewrite
     lands WHILE A builds; B arrives (blocks on the lock), then re-derives the
     signature fresh once it gets the lock — so B builds the post-rewrite
     relation under the post-rewrite signature instead of being served A's
-    pre-rewrite relation or installing mislabeled data. A's stale-sig entry
-    is evicted by B's fresher install (freshness ordering)."""
+    pre-rewrite relation or installing mislabeled data. A's relation is
+    never installed: its post-build re-check sees the new signature."""
     import threading
 
-    from aws_etl_microservice_redshift_datalake_spark.operators._memo import session_memo
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
 
-    memo: dict = {}
+    s = spark.newSession()
     state = {"sig": (("/p", 1, 100),), "n": 2}
     in_build = threading.Event()
     release = threading.Event()
@@ -951,13 +952,13 @@ def test_session_memo_racing_rewrite_across_threads(spark):
         builds.append(n)
         in_build.set()
         assert release.wait(30), "orchestration stalled"
-        return spark.range(n)
+        return s.range(n)
 
     results: dict = {}
 
     def call(tag):
         results[tag] = session_memo(
-            memo, spark, "/rewrite-race", lambda: state["sig"], build
+            "t", s, "/rewrite-race", lambda: state["sig"], build
         )
 
     t_a = threading.Thread(target=call, args=("a",))
@@ -975,11 +976,57 @@ def test_session_memo_racing_rewrite_across_threads(spark):
     assert builds == [2, 5], "B must rebuild from the rewritten state"
     assert results["a"].count() == 2 and results["b"].count() == 5
     # exactly one surviving entry: B's, keyed by the POST-rewrite signature
-    assert list(memo) == [((id(spark), "/rewrite-race"), (("/p", 2, 200),))]
-    assert memo[list(memo)[0]][2] is results["b"]
+    hit = session_memo("t", s, "/rewrite-race", (("/p", 2, 200),), lambda: 1 / 0)
+    assert hit is results["b"]
     assert not results["a"].storageLevel.useMemory, "stale relation still pinned"
-    results["b"].unpersist()
-    memo.clear()
+    assert clear_session_memos(s) == 1
+
+
+def test_clear_session_memos_waits_for_inflight_build(spark):
+    """A cold-bench clear racing a build on another thread must not return
+    before that build lands: thread A is blocked inside a gated build (whose
+    relation also memoizes a nested key, like pairs over shingles), thread
+    B clears, A is released — once B returns the memo is empty and A's
+    relations are unpersisted, so the next read is really cold."""
+    import threading
+
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+        session_memo,
+    )
+
+    s = spark.newSession()
+    in_build = threading.Event()
+    release = threading.Event()
+    results: dict = {}
+
+    def build():
+        in_build.set()
+        assert release.wait(30), "orchestration stalled"
+        results["inner"] = session_memo("t-inner", s, "/gate", "s", lambda: s.range(2))
+        return results["inner"].select("id")
+
+    def call():
+        results["a"] = session_memo("t", s, "/gate", "s", build)
+
+    def clear():
+        results["dropped"] = clear_session_memos(s)
+
+    t_a = threading.Thread(target=call)
+    t_a.start()
+    assert in_build.wait(30), "A never reached its build"
+    t_b = threading.Thread(target=clear)
+    t_b.start()
+    t_b.join(0.5)
+    assert t_b.is_alive(), "clear returned while a build was in flight"
+    release.set()
+    t_a.join(60)
+    t_b.join(60)
+    assert not t_a.is_alive() and not t_b.is_alive()
+    assert results["dropped"] == 2
+    assert not results["a"].storageLevel.useMemory, "A's relation still pinned"
+    assert not results["inner"].storageLevel.useMemory
+    assert clear_session_memos(s) == 0, "an entry survived the clear"
 
 
 def test_winnowing_guarantee_on_planted_overlap(spark, tmp_path):

@@ -1,17 +1,14 @@
-"""Session config: the fast shuffle-scratch selection (r14 optimization).
+"""Scratch-directory selection for sessions and processes.
 
-`_fast_local_dir` decides where spark.local.dir points in LOCAL mode:
-tmpfs when it has headroom (the measured 2x stage-latency win on this
-sandbox's slow-writeback disk), Spark's default otherwise, with
-SPARK_GRAFT_LOCAL_DIR overriding in both directions. Pure-python tests —
-the SparkSession itself is driver-owned in production, so nothing here
-may be load-bearing for correctness (the driver contract runs on a
-vanilla session).
+`_fast_local_dir` picks spark.local.dir in LOCAL mode: the
+SPARK_GRAFT_LOCAL_DIR path when set, Spark's default otherwise.
+`scratch.scratch_root` is SPARK_GRAFT_SCRATCH or `<repo>/.tmp`.
+Pure-python tests: the SparkSession itself is driver-owned in production,
+so nothing here may be load-bearing for correctness (the driver contract
+runs on a vanilla session).
 """
 
 from __future__ import annotations
-
-import os
 
 from aws_etl_microservice_redshift_datalake_spark.session import _fast_local_dir
 
@@ -22,7 +19,7 @@ def test_env_override_wins(monkeypatch, tmp_path):
 
 
 def test_env_empty_forces_spark_default(monkeypatch):
-    # '' means "use Spark's default scratch" even when tmpfs is available
+    # '' means "use Spark's default scratch", same as unset
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "")
     assert _fast_local_dir() is None
 
@@ -35,52 +32,11 @@ def test_default_is_spark_default(monkeypatch):
     assert _fast_local_dir() is None
 
 
-def test_auto_opt_in_is_tmpfs_or_none(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "auto")
-    d = _fast_local_dir()
-    if d is not None:
-        # when tmpfs qualifies, the directory must exist and be writable
-        assert d.startswith("/dev/shm/")
-        assert os.path.isdir(d) and os.access(d, os.W_OK)
-
-
-def test_auto_tmpfs_dir_is_private(monkeypatch):
-    # ADVICE r14: /dev/shm is world-writable — the scratch dir must be
-    # 0700 and owned by us (the selection falls back otherwise)
-    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "auto")
-    d = _fast_local_dir()
-    if d is not None:
-        st = os.stat(d)
-        assert st.st_uid == os.getuid()
-        assert (st.st_mode & 0o777) == 0o700
-
-
 def test_scratch_default_is_repo_tmp(monkeypatch):
     from aws_etl_microservice_redshift_datalake_spark import scratch
 
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
     assert scratch.scratch_root().endswith(".tmp")
-
-
-def test_scratch_auto_root_is_stable_within_process(monkeypatch):
-    # ADVICE r14: the probed (auto) decision is cached per pid — tmpfs
-    # filling mid-process must NOT flip the root under staged state
-    import shutil as _shutil
-
-    from aws_etl_microservice_redshift_datalake_spark import scratch
-
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", "auto")
-    monkeypatch.setattr(scratch, "_DEFAULT_ROOT", None)
-    first = scratch.scratch_root()
-
-    class _Full:
-        free = 0
-    monkeypatch.setattr(_shutil, "disk_usage", lambda _p: _Full)
-    assert scratch.scratch_root() == first  # cached, probe not re-run
-
-    # a fresh process (different pid) would re-probe: simulate by clearing
-    monkeypatch.setattr(scratch, "_DEFAULT_ROOT", (-1, first))
-    assert scratch.scratch_root().endswith(".tmp")  # re-probe sees full tmpfs
 
 
 def test_scratch_env_override_still_live(monkeypatch, tmp_path):
