@@ -14,7 +14,7 @@ Scale notes (100 TB):
 - stages stay LAZY until a sink stage forces them, so Catalyst optimizes
   ACROSS stage boundaries (filter from a late transform reaches the ingest
   scan — impossible in the JDBC-orchestration original);
-- `checkpoint_views` materializes a hot intermediate once when multiple
+- `checkpoint_view` materializes a hot intermediate once when multiple
   sinks fan out from it (the only time eager evaluation pays);
 - everything here is driver-side *metadata* orchestration: no data ever
   moves through Python.
@@ -27,6 +27,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources import io
 
 
 @dataclass
@@ -67,7 +69,8 @@ class EtlJob:
 
     Ingest stages register DataFrames as temp views; transform stages are
     SQL over the views so far (or DataFrame builders), registered as views
-    themselves; sink stages force execution. Counting is deferred to sinks —
+    themselves; sink stages force execution. Sink rows come from the output
+    footers, so no sink runs its view a second time just to count it;
     intermediate stages report rows=None and ~0 s because they only build
     plan metadata.
     """
@@ -108,21 +111,14 @@ class EtlJob:
         return self
 
     def unload(
-        self,
-        view: str,
-        path: str,
-        partition_cols: list[str] | None = None,
-        fmt: str = "parquet",
-        mode: str = "overwrite",
+        self, view: str, path: str, partition_cols: list[str] | None = None
     ) -> "EtlJob":
+        """Sink stage: UNLOAD a view to a parquet lake layout
+        (``sources.io.unload``). Reports the rows in the output footers."""
+
         def run(spark: SparkSession) -> int:
-            df = spark.table(view)
-            n = df.count()
-            writer = df.write.mode(mode)
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            getattr(writer, fmt)(path)
-            return n
+            io.unload(spark.table(view), path, partition_cols)
+            return io._rows_for(io._stat_sig(path))
 
         self._stages.append(_Stage(f"unload:{view}", "sink", run))
         return self
@@ -132,34 +128,17 @@ class EtlJob:
         self._stages.append(_Stage(name, "sink", fn))
         return self
 
-    def compact(self, path: str, target_file_bytes: int | None = None) -> "EtlJob":
-        """Maintenance stage: OPTIMIZE the parquet layout a prior unload
-        produced (footer-planned, in-place atomic swap — sources.maintenance
-        / sources.io.compact). Skips as a no-op when the layout is already
-        at or below the planned file count, so jobs can schedule it
+    def compact(
+        self, path: str, target_file_bytes: int = io.DEFAULT_TARGET_FILE_BYTES
+    ) -> "EtlJob":
+        """Maintenance stage: compact the parquet layout a prior unload
+        produced, in place and per partition directory
+        (``sources.io.compact``). A layout already at or below its planned
+        file count is left as it is, so jobs can schedule this
         unconditionally. Reports the resulting file count as rows."""
 
         def run(spark: SparkSession) -> int:
-            from .sources.maintenance import (
-                DEFAULT_TARGET_FILE_BYTES,
-                plan_compaction,
-            )
-            from .sources.io import compact as swap_compact, _parquet_files
-
-            tgt = target_file_bytes or DEFAULT_TARGET_FILE_BYTES
-            n_now, n_target = plan_compaction(path, tgt)
-            if n_now <= n_target:
-                return n_now  # already compact — no rewrite
-            from .sources.io import _rows_for, _stat_sig
-
-            rows = _rows_for(_stat_sig(path))
-            # CEILING division: rows // n_target undershoots records-per-file,
-            # which overshoots the file count past the plan and makes every
-            # later scheduled compact re-rewrite the table (n_now > n_target
-            # forever) — the exact no-op idempotence this stage promises
-            per_file = max(1, -(-rows // n_target))
-            swap_compact(spark, path, target_records_per_file=per_file)
-            return len(_parquet_files(path))
+            return io.compact(spark, path, target_file_bytes)
 
         self._stages.append(_Stage(f"compact:{path.rsplit('/', 1)[-1]}", "sink", run))
         return self
@@ -173,14 +152,10 @@ class EtlJob:
         .clustered_write)."""
 
         def run(spark: SparkSession) -> int:
-            from .sources.io import _rows_for, _stat_sig
             from .sources.maintenance import clustered_write
 
-            # write first, count from the OUTPUT footers — a count() on the
-            # view would execute its whole (possibly uncached) plan a second
-            # time just for the report
             clustered_write(spark.table(view), path, cluster_cols, n_files)
-            return _rows_for(_stat_sig(path))
+            return io._rows_for(io._stat_sig(path))
 
         self._stages.append(_Stage(f"cluster:{view}", "sink", run))
         return self

@@ -22,6 +22,7 @@ partitionBy + maxRecordsPerFile reproduces slice-parallel UNLOAD layout.
 from __future__ import annotations
 
 import functools as _functools
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,8 +128,6 @@ def table_rows(sf_dir: str, name: str) -> int:
 
 @_functools.lru_cache(maxsize=None)
 def _splits_for(sig: tuple, max_partition_bytes: int, open_cost: int) -> int:
-    import math
-
     import pyarrow.parquet as pq
 
     per_file = 0
@@ -339,44 +338,73 @@ def write_sorted_table(
     out.write.mode("overwrite").parquet(path)
 
 
+DEFAULT_TARGET_FILE_BYTES = 128 << 20  # the maxPartitionBytes-aligned sweet spot
+
+
+def plan_compaction(
+    path: str, target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES
+) -> dict[str, tuple[int, int]]:
+    """{leaf directory: (n_files_now, n_files_target)} for a compaction of
+    ``path``. A leaf is a directory that holds data files: each ``k=v/``
+    partition of a hive layout, or ``path`` itself for a flat table.
+
+    Target = ceil(leaf_bytes / target_file_bytes): one task writes one
+    output file, each ~target size. Pure file-stat metadata, no Spark
+    work, so callers can skip a compaction that has nothing to do."""
+    leaves: dict[str, list[int]] = {}
+    for f, size, _mt in _stat_sig(path):
+        leaves.setdefault(os.path.dirname(f), []).append(size)
+    return {
+        leaf: (len(sizes), max(1, math.ceil(sum(sizes) / target_file_bytes)))
+        for leaf, sizes in leaves.items()
+    }
+
+
 def compact(
-    spark: SparkSession, path: str, target_records_per_file: int = 1_000_000
+    spark: SparkSession, path: str, target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES
 ) -> int:
-    """VACUUM-style small-file compaction: rewrite a parquet directory into
-    ⌈rows / target_records_per_file⌉ right-sized files and atomically swap
-    it in. Returns the new file count.
+    """VACUUM/OPTIMIZE-style small-file compaction of a parquet directory in
+    place. Returns the file count afterwards.
 
     Why it exists at 100 TB: streaming sinks and per-partition writers leave
     thousands of KB-sized files; every downstream scan then pays one task +
     one footer-read per file, and the NameNode/listing layer pays the
-    metadata. Periodic compaction (Redshift VACUUM / OPTIMIZE analog) is
-    standard lake maintenance. The rewrite is one shuffle-free coalesce when
-    shrinking (or a round-robin repartition when the source is a single
-    oversized file), staged to a sibling ``<path>.compacting`` directory and
-    swapped with two renames — readers see the old or the new layout, never
-    a partial one. Hive-partitioned layouts compact per partition directory
-    with the same routine.
+    metadata. Periodic compaction is standard lake maintenance.
 
-    Sibling verb: ``sources.maintenance.compact`` plans by target BYTES
-    (the maxPartitionBytes-aligned form) and rewrites to a destination the
-    caller swaps; ``maintenance.clustered_write`` adds the SORTKEY-style
-    sorted layout. This one stays records-based and in-place for
-    streaming-sink upkeep. Both size the rewrite from parquet FOOTER
-    metadata — no count() action over the data."""
-    import math
+    Planned per leaf directory from file sizes alone (``plan_compaction``),
+    so a hive-partitioned table keeps its ``k=v/`` directories and readers
+    keep their partition filters. When every leaf is at or below its
+    planned file count this returns without a Spark job. Otherwise each
+    leaf is rewritten with one round-robin ``repartition(n)`` (not
+    coalesce: coalesce(n) would also cap the read parallelism at n, making
+    the rewrite single-threaded exactly when the input is one big file),
+    staged to a sibling ``<path>.compacting`` directory and swapped in with
+    two renames — readers see the old or the new layout, never a partial
+    one.
+
+    Larger files pack tighter, so the rewritten leaf can plan fewer files
+    than it was given; the rewrite repeats until every leaf is at or below
+    its plan, which makes the next call a no-op. A leaf's file count never
+    grows (n = min(files now, planned), one file per task whatever the
+    session's maxRecordsPerFile), so the loop ends."""
     import shutil
 
-    df = spark.read.parquet(path)
-    n = _rows_for(_stat_sig(path))
-    n_files = max(1, math.ceil(n / target_records_per_file))
-    staged = path.rstrip("/") + ".compacting"
-    old = path.rstrip("/") + ".old"
-    shutil.rmtree(staged, ignore_errors=True)
-    cur_files = len(_parquet_files(path))
-    out = df.coalesce(n_files) if n_files <= cur_files else df.repartition(n_files)
-    out.write.parquet(staged)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staged, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return n_files
+    plan = plan_compaction(path, target_file_bytes)
+    root = path.rstrip("/")
+    staged, old = root + ".compacting", root + ".old"
+    while any(now > target for now, target in plan.values()):
+        shutil.rmtree(staged, ignore_errors=True)
+        for leaf, (now, target) in plan.items():
+            out = os.path.join(staged, os.path.relpath(leaf, root))
+            (
+                spark.read.parquet(leaf)
+                .repartition(min(now, target))
+                .write.option("maxRecordsPerFile", 0)
+                .parquet(out)
+            )
+        shutil.rmtree(old, ignore_errors=True)
+        os.rename(root, old)
+        os.rename(staged, root)
+        shutil.rmtree(old, ignore_errors=True)
+        plan = plan_compaction(path, target_file_bytes)
+    return sum(now for now, _target in plan.values())

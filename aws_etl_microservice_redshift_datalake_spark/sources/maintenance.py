@@ -18,68 +18,21 @@ Why these are first-class at 100 TB:
   analog of a Redshift SORTKEY. Without it every file's [min,max] spans the
   domain and pushdown inspects all of them.
 
-Both verbs are metadata-driven (parquet footers via sources.io — no eager
-Spark job to size the rewrite) and single-shuffle: compaction is one
-round-robin repartition to the target file count; clustering is one range
-exchange + in-partition sort.
+Both verbs are single-shuffle. Compaction is ``sources.io.compact``: planned
+per partition directory from file sizes (no Spark job to size the rewrite),
+one round-robin repartition per rewritten directory, swapped in place.
+Clustering is one range exchange + in-partition sort.
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import QTY_MAX, money_col, o_money_col, query, rnd
-from .io import _parquet_files, load_table
-
-DEFAULT_TARGET_FILE_BYTES = 128 << 20  # the maxPartitionBytes-aligned sweet spot
-
-
-def table_bytes(path: str) -> int:
-    """Total data bytes under a parquet path, from the filesystem (the same
-    number a catalog's totalSize stat carries)."""
-    return sum(os.path.getsize(f) for f in _parquet_files(path))
-
-
-def plan_compaction(
-    path: str, target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES
-) -> tuple[int, int]:
-    """(n_files_now, n_files_target) for a compaction of ``path``.
-
-    Target = ceil(total_bytes / target_file_bytes) — one task writes one
-    output file, each ~target size. Pure footer/stat metadata; returns
-    without any Spark work so callers can skip no-op compactions (already
-    at or below target) — the idempotence check every OPTIMIZE scheduler
-    needs."""
-    files = _parquet_files(path)
-    target = max(1, math.ceil(table_bytes(path) / target_file_bytes))
-    return len(files), target
-
-
-def compact(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-) -> tuple[int, int]:
-    """Rewrite a many-small-files parquet table into ~target-sized files.
-
-    One round-robin repartition to the planned file count (repartition, not
-    coalesce: coalesce(n) would also CAP the read parallelism at n, making
-    the rewrite itself single-threaded exactly when the input is one big
-    file; the full shuffle costs one pass and buys even output sizes).
-    Writes to ``dst_path`` then the caller swaps — never in place, so a
-    failed rewrite leaves the table readable (the lakehouse OPTIMIZE
-    protocol; true table formats make the swap atomic via their commit
-    log, which plain parquet directories cannot express).
-    Returns (n_files_before, n_files_after)."""
-    n_before, n_target = plan_compaction(src_path, target_file_bytes)
-    df = spark.read.parquet(src_path)
-    df.repartition(n_target).write.mode("overwrite").parquet(dst_path)
-    return n_before, len(_parquet_files(dst_path))
+from .io import _parquet_files, compact, load_table
 
 
 def clustered_write(
@@ -140,13 +93,13 @@ from ..scratch import process_scratch
 def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S-family maintenance: fragment lineitem into many small files (the
     streaming-ingest pathology, forced via tiny maxRecordsPerFile), compact
-    to the footer-planned target, and aggregate the COMPACTED table. The
-    hash match against the oracle on the ORIGINAL table proves the rewrite
-    is lossless; tests/test_maintenance.py additionally asserts the file
-    count collapses and clustered envelopes are disjoint."""
+    the fragment directory in place to the footer-planned target, and
+    aggregate the COMPACTED table. The hash match against the oracle on the
+    ORIGINAL table proves the rewrite is lossless; tests/test_maintenance.py
+    additionally asserts the file count collapses and clustered envelopes
+    are disjoint."""
     tag = sf_dir.strip("/").replace("/", "-")
     frag = f"{process_scratch()}/frag-lineitem-{tag}"
-    compacted = f"{process_scratch()}/compact-lineitem-{tag}"
     src = load_table(spark, sf_dir, "lineitem")
     # Parallelize the fragmentation fixture (r15, guide §6): lineitem at
     # sf0.1 is ONE parquet file → one scan task wrote all ~61 fragment
@@ -165,8 +118,8 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxRecordsPerFile", 10_000)
         .parquet(frag)
     )
-    compact(spark, frag, compacted)
-    back = spark.read.parquet(compacted)
+    compact(spark, frag)
+    back = spark.read.parquet(frag)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         rnd(F.sum(money_col(F.col("l_quantity"), QTY_MAX))).alias("sum_qty"),

@@ -24,22 +24,14 @@ def main() -> None:
     from bench import HEADLINE
 
     from aws_etl_microservice_redshift_datalake_spark import all_queries, get_session
+    from aws_etl_microservice_redshift_datalake_spark.plans.audit import plan_str
 
     spark = get_session("capture-plans")
     qs = all_queries()
     for name in HEADLINE:
         if name not in qs:
             continue
-        df = qs[name](spark, sf_dir)
-        # public API only (ADVICE r14: the _jdf/PythonSQLUtils route is
-        # version-fragile): explain() prints — capture its stdout
-        import contextlib
-        import io
-
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain(mode="formatted")
-        plan = buf.getvalue()
+        plan = plan_str(qs[name](spark, sf_dir), "formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)

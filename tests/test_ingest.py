@@ -148,28 +148,31 @@ def test_write_sorted_table_zone_maps(spark):
 
 
 def test_compact_small_files(spark):
-    """VACUUM analog: a directory fragmented into many small files is
-    rewritten into right-sized files with identical content and an atomic
-    swap (no .compacting/.old residue)."""
+    """VACUUM analog at the default byte target: a directory fragmented by a
+    wide shuffle is rewritten into no more files than planned, with
+    identical content and an atomic swap (no .compacting/.old residue)."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from aws_etl_microservice_redshift_datalake_spark.sources.io import compact, load_table
+    from aws_etl_microservice_redshift_datalake_spark.sources.io import (
+        compact,
+        load_table,
+        plan_compaction,
+    )
     from tests.conftest import SF_MED
 
-    path = "/root/repo/.tmp/compact-test"
+    path = f"{SCRATCH}/compact-test"
     src = load_table(spark, SF_MED, "orders")
     expect_rows = src.count()
     expect_sum = src.agg(F.round(F.sum("o_totalprice"), 2).alias("s")).collect()[0].s
     src.repartition(64).write.mode("overwrite").parquet(path)
     before = sum(1 for f in os.listdir(path) if f.startswith("part-"))
     assert before >= 32, "fixture should start fragmented"
+    ((_now, planned),) = plan_compaction(path).values()
 
-    n_files = compact(spark, path, target_records_per_file=8_000)
+    n_files = compact(spark, path)
 
     after = sum(1 for f in os.listdir(path) if f.startswith("part-"))
-    assert after == n_files <= 2 + expect_rows // 8_000
+    assert after == n_files <= planned
     assert not os.path.exists(path + ".compacting")
     assert not os.path.exists(path + ".old")
     back = spark.read.parquet(path)

@@ -7,45 +7,66 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_MED
-from aws_etl_microservice_redshift_datalake_spark.sources.io import _parquet_files, load_table
+from aws_etl_microservice_redshift_datalake_spark.sources.io import (
+    _parquet_files,
+    compact,
+    load_table,
+    plan_compaction,
+)
 from aws_etl_microservice_redshift_datalake_spark.sources.maintenance import (
     clustered_write,
-    compact,
     file_ranges,
-    plan_compaction,
-    table_bytes,
 )
 
 SCRATCH = "/root/repo/.tmp"
 
 
+def _fingerprint(df):
+    return tuple(df.agg(F.count(F.lit(1)), F.sum(F.hash(*df.columns))).collect()[0])
+
+
 def test_compact_collapses_files_losslessly(spark):
-    frag = f"{SCRATCH}/t-frag-orders"
-    out = f"{SCRATCH}/t-compact-orders"
+    """VACUUM analog: a directory fragmented into many small files is
+    rewritten in place into the planned number of files, with identical
+    content and an atomic swap (no .compacting/.old residue)."""
+    import os
+
+    path = f"{SCRATCH}/t-compact-orders"
     src = load_table(spark, SF_MED, "orders")
-    src.write.mode("overwrite").option("maxRecordsPerFile", 500).parquet(frag)
-    n_frag = len(_parquet_files(frag))
+    src.write.mode("overwrite").option("maxRecordsPerFile", 500).parquet(path)
+    n_frag = len(_parquet_files(path))
     assert n_frag >= 20  # the fragmentation really happened
 
-    n_before, n_after = compact(spark, frag, out)
-    assert n_before == n_frag
-    # total bytes ≪ 128 MiB, so the planned and actual target is ONE file
-    assert plan_compaction(frag)[1] == 1
-    assert n_after == 1
+    tgt = -(-sum(os.path.getsize(f) for f in _parquet_files(path)) // 3)
+    ((n_now, n_target),) = plan_compaction(path, tgt).values()
+    assert (n_now, n_target) == (n_frag, 3)
 
-    # lossless: identical multiset of rows
-    back = spark.read.parquet(out)
-    assert back.count() == src.count()
-    a = src.agg(F.sum("o_orderkey"), F.sum(F.hash("o_orderstatus"))).collect()[0]
-    b = back.agg(F.sum("o_orderkey"), F.sum(F.hash("o_orderstatus"))).collect()[0]
-    assert tuple(a) == tuple(b)
+    n_after = compact(spark, path, tgt)
+    assert n_after == len(_parquet_files(path)) == n_target
+    assert not os.path.exists(path + ".compacting")
+    assert not os.path.exists(path + ".old")
+    assert _fingerprint(spark.read.parquet(path)) == _fingerprint(src)
+
+
+def test_compact_writes_one_file_per_task_under_session_record_cap(spark):
+    """The rewrite ignores a session-wide maxRecordsPerFile: a capped write
+    would leave the leaf above its plan and the rewrite would never stop."""
+    path = f"{SCRATCH}/t-compact-capped"
+    load_table(spark, SF_MED, "orders").write.mode("overwrite").option(
+        "maxRecordsPerFile", 500
+    ).parquet(path)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1000")
+    try:
+        assert compact(spark, path) == len(_parquet_files(path)) == 1
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
 
 
 def test_compact_plan_is_metadata_only():
     # plans without a SparkSession at all — pure footer/stat arithmetic
-    n_now, n_target = plan_compaction(f"{SF_MED}/lineitem.parquet")
+    plan = plan_compaction(f"{SF_MED}/lineitem.parquet")
+    ((n_now, n_target),) = plan.values()
     assert n_now >= 1 and n_target >= 1
-    assert table_bytes(f"{SF_MED}/lineitem.parquet") > 0
 
 
 def test_clustered_write_disjoint_envelopes(spark):

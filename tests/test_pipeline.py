@@ -3,44 +3,54 @@ verified by re-reading the unloaded lake layout against a direct query."""
 
 from __future__ import annotations
 
+import os
+import re
 import shutil
 import uuid
 
 from pyspark.sql import functions as F
 
 from aws_etl_microservice_redshift_datalake_spark.pipeline import EtlJob
+from aws_etl_microservice_redshift_datalake_spark.sources import io
 from aws_etl_microservice_redshift_datalake_spark.sources.io import load_table
 
 from tests.conftest import SF_MED
 
 SCRATCH = "/root/repo/.tmp"
 
+REV_SQL = """
+    SELECT o.o_orderpriority,
+           l.l_returnflag,
+           COUNT(*) AS n_items,
+           ROUND(SUM(l.l_quantity), 2) AS total_qty
+    FROM li l JOIN ord o ON l.l_orderkey = o.o_orderkey
+    GROUP BY o.o_orderpriority, l.l_returnflag
+"""
+
+
+def _revenue_views(name: str) -> EtlJob:
+    return (
+        EtlJob(name)
+        .ingest("li", lambda s: load_table(s, SF_MED, "lineitem"))
+        .ingest("ord", lambda s: load_table(s, SF_MED, "orders"))
+        .transform("rev", REV_SQL)
+    )
+
+
+def _fingerprint(df):
+    return tuple(df.agg(F.count(F.lit(1)), F.sum(F.hash(*df.columns))).collect()[0])
+
 
 def test_etl_job_end_to_end(spark):
     out = f"{SCRATCH}/job-{uuid.uuid4().hex[:8]}"
     try:
-        job = (
-            EtlJob("quarterly_revenue")
-            .ingest("li", lambda s: load_table(s, SF_MED, "lineitem"))
-            .ingest("ord", lambda s: load_table(s, SF_MED, "orders"))
-            .transform(
-                "rev",
-                """
-                SELECT o.o_orderpriority,
-                       l.l_returnflag,
-                       COUNT(*) AS n_items,
-                       ROUND(SUM(l.l_quantity), 2) AS total_qty
-                FROM li l JOIN ord o ON l.l_orderkey = o.o_orderkey
-                GROUP BY o.o_orderpriority, l.l_returnflag
-                """,
-            )
-            .unload("rev", out, partition_cols=["l_returnflag"])
+        job = _revenue_views("quarterly_revenue").unload(
+            "rev", out, partition_cols=["l_returnflag"]
         )
         report = job.run(spark)
 
         assert [s.kind for s in report.stages] == ["ingest", "ingest", "transform", "sink"]
         sink = report.stages[-1]
-        assert sink.rows and sink.rows > 0
 
         # lake roundtrip equals the direct query
         back = spark.read.parquet(out)
@@ -65,9 +75,84 @@ def test_etl_job_end_to_end(spark):
             for r in direct.collect()
         }
         assert got == want
+        assert sink.rows == len(want)
         assert report.total_seconds > 0
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_etl_job_unload_runs_view_once(spark):
+    """An unload stage writes its view once and reads its row count from
+    the output footers: it runs no more Spark jobs than a bare io.unload of
+    the same view (a count() before the write would run the view twice)."""
+    out = f"{SCRATCH}/job-once-{uuid.uuid4().hex[:8]}"
+    sc = spark.sparkContext
+
+    def jobs_in(group: str, fn) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        _revenue_views("views").run(spark)  # scans' schema reads stay outside
+        job = EtlJob("once").unload("rev", out, partition_cols=["l_returnflag"])
+        reports = []
+        stage_jobs = jobs_in(f"{out}-stage", lambda: reports.append(job.run(spark)))
+        bare_jobs = jobs_in(
+            f"{out}-bare",
+            lambda: io.unload(spark.table("rev"), out, partition_cols=["l_returnflag"]),
+        )
+        assert 0 < stage_jobs <= bare_jobs, (stage_jobs, bare_jobs)
+        assert reports[0].stages[-1].rows == spark.table("rev").count()
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_etl_job_compact_keeps_hive_partitions(spark):
+    """Compacting a hive-partitioned unload keeps its k=v directories, so
+    readers keep the partition filter; content is unchanged, and a second
+    compact stage leaves the files as they are. (Regression: compaction
+    read the table with partition discovery and rewrote it as one flat
+    file, turning event_type into a data column.)"""
+    from aws_etl_microservice_redshift_datalake_spark.plans.audit import plan_str
+
+    path = f"{SCRATCH}/job-hive-{uuid.uuid4().hex[:8]}"
+
+    def partition_dirs():
+        return sorted(d for d in os.listdir(path) if d.startswith("event_type="))
+
+    try:
+        events = load_table(spark, SF_MED, "events")
+        io.unload(events, path, partition_cols=["event_type"], max_records_per_file=500)
+        dirs = partition_dirs()
+        assert len(dirs) == 5
+        assert len(io._parquet_files(path)) >= 4 * len(dirs)  # fragmented
+        before = _fingerprint(spark.read.parquet(path))
+
+        sigs = []
+        report = (
+            EtlJob("hive_compact")
+            .compact(path)
+            .sink("stat", lambda s: sigs.append(io._stat_sig(path)))
+            .compact(path)
+            .run(spark)
+        )
+        first, second = [s for s in report.stages if s.name.startswith("compact:")]
+
+        assert partition_dirs() == dirs
+        assert first.rows == len(io._parquet_files(path)) == len(dirs)
+        assert second.rows == first.rows
+        assert io._stat_sig(path) == sigs[0], "second compact rewrote the table"
+        back = spark.read.parquet(path)
+        assert _fingerprint(back) == before
+        plan = plan_str(back.filter("event_type = 'click'"))
+        assert re.search(r"PartitionFilters: \[[^\]]*event_type", plan), plan
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_checkpoint_view_counts(spark):
@@ -157,25 +242,32 @@ def test_etl_job_compact_and_cluster_stages(spark):
     # overshot the planned file count, so every later compact re-rewrote
     # the table): with a target that plans n_target > 1, the rewrite must
     # land AT or UNDER the plan and the next compact must be a no-op
-    from aws_etl_microservice_redshift_datalake_spark.sources.maintenance import (
+    from aws_etl_microservice_redshift_datalake_spark.sources.io import (
+        _stat_sig,
         plan_compaction,
-        table_bytes,
     )
 
     frag2 = f"{base}/orders-multi"
     spark.table("big").write.mode("overwrite").option(
         "maxRecordsPerFile", 500
     ).parquet(frag2)
-    tgt = max(1, table_bytes(frag2) // 3)  # plans ~3-4 files
-    n_before, n_target = plan_compaction(frag2, tgt)
+    tgt = max(1, sum(os.path.getsize(f) for f in _parquet_files(frag2)) // 3)
+    ((_n_before, n_target),) = plan_compaction(frag2, tgt).values()  # ~3-4 files
     assert n_target > 1
-    job2 = EtlJob("maint2").compact(frag2, tgt).compact(frag2, tgt)
+    sigs = []
+    job2 = (
+        EtlJob("maint2")
+        .compact(frag2, tgt)
+        .sink("stat", lambda s: sigs.append(_stat_sig(frag2)))
+        .compact(frag2, tgt)
+    )
     rep2 = job2.run(spark)
     stages2 = [s for s in rep2.stages if s.name.startswith("compact:")]
     n_after = len(_parquet_files(frag2))
-    assert n_after <= n_target, (n_after, n_target)
+    assert 1 < n_after <= n_target, (n_after, n_target)
     # second stage saw an already-compact layout and skipped the rewrite
-    assert stages2[1].rows == n_after
+    assert stages2[0].rows == stages2[1].rows == n_after
+    assert _stat_sig(frag2) == sigs[0]
     ranges = sorted(file_ranges(clus, "o_orderkey"))
     assert len(ranges) == 4
     for (_, hi1), (lo2, _) in zip(ranges, ranges[1:]):
