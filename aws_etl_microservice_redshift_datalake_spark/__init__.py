@@ -29,7 +29,7 @@ from . import registry as _registry
 from .registry import all_oracles, all_queries, dec, o_dec, query
 from .schemas import SCHEMAS, TABLES
 from .session import get_session
-from .sources.io import load_table, register_all
+from .sources.io import load_table
 
 # Import operator modules for their registration side effects.
 from .operators import projection as _projection  # noqa: F401
@@ -64,5 +64,4 @@ __all__ = [
     "load_table",
     "o_dec",
     "query",
-    "register_all",
 ]

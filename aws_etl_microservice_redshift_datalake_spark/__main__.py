@@ -9,8 +9,8 @@ SparkSession).
     python -m aws_etl_microservice_redshift_datalake_spark sql "SELECT COUNT(*) FROM lineitem"
     python -m aws_etl_microservice_redshift_datalake_spark profile lineitem
 
-`run` executes any registered driver-contract query; `sql` registers the ten
-test tables as views and runs ad-hoc SQL; `profile` prints the one-scan
+`run` executes any registered driver-contract query; `sql` runs ad-hoc SQL
+over the test tables it names (``sources.io.sql``); `profile` prints the one-scan
 column profile of a table. Output is line-oriented (tab-separated, header
 first) so the CLI composes with shell tooling the way a service's JSON
 would with jq.
@@ -81,10 +81,9 @@ def main(argv: list[str] | None = None) -> int:
             _out(df, args.limit)
         return 0
     if args.cmd == "sql":
-        from .sources.io import register_all
+        from .sources import io
 
-        register_all(spark, args.sf_dir)
-        _out(spark.sql(args.statement), args.limit)
+        _out(io.sql(spark, args.sf_dir, args.statement), args.limit)
         return 0
     if args.cmd == "profile":
         from .operators.dq import profile_table

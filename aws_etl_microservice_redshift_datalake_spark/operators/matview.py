@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import o_money_col, query, s_money_col
-from ..sources.io import register_all
+from ..sources import io
 
 _MV_REGISTRY: dict[str, str] = {}
 
@@ -73,8 +73,9 @@ def q_sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     the literal form — the hash match proves equivalence). The price sum
     folds the MONEY_MAX conformance guard in both twins (r9 raw-sum wave;
     registry.s_money_col declares the Spark-dialect body)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT o_orderpriority, COUNT(*) AS n_orders,
                ROUND(SUM({s_money_col("o_totalprice")}), 2) AS total_price

@@ -26,7 +26,8 @@ from ..registry import (
     s_exact_sum,
     s_money_col,
 )
-from ..sources.io import load_table, register_all
+from ..sources import io
+from ..sources.io import load_table
 
 
 @query(
@@ -97,15 +98,16 @@ def q_sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10c + E3: GROUPING SETS through the raw SQL parser path over
     registered temp views (Spectrum/external-table analog). Empty input →
     empty report (the q_agg_rollup r8 contract; oracle HAVING mirror)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT c_mktsegment, c_nationkey,
                COUNT(*) AS n,
                ROUND(SUM({s_money_col("c_acctbal")}), 2) AS sum_bal
         FROM customer
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        """
+        """,
     )
 
 
@@ -131,8 +133,9 @@ def q_sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     three-way join + agg + top-k through the parser. Revenue is rounded
     before the ORDER BY so the top-10 cut is deterministic on both engines;
     l_orderkey breaks ties."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT l_orderkey,
                {s_exact_sum("l_extendedprice * (1.0D - l_discount)", 4)} AS revenue,
@@ -146,7 +149,7 @@ def q_sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY l_orderkey, o_orderdate
         ORDER BY revenue DESC, l_orderkey ASC
         LIMIT 10
-        """
+        """,
     )
 
 
@@ -173,8 +176,9 @@ def q_sql_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned-item revenue report — customers who returned the most, with
     their nation, over one quarter. Raw SQL through the parser; revenue
     rounded before ORDER BY for a deterministic top-20 (custkey ties)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT c.c_custkey, c.c_name, n.n_name AS nation,
                {s_exact_sum("l.l_extendedprice * (1.0D - l.l_discount)", 4)} AS revenue,
@@ -189,7 +193,7 @@ def q_sql_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c.c_custkey, c.c_name, n.n_name
         ORDER BY revenue DESC, c_custkey ASC
         LIMIT 20
-        """
+        """,
     )
 
 
@@ -212,8 +216,9 @@ def q_sql_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional aggregation in raw SQL. The price sum inside avg_price
     folds the MONEY_MAX conformance guard in both twins (r9 raw-sum wave;
     registry.s_money_col declares the Spark-dialect body)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT o_orderpriority,
                SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS n_finished,
@@ -223,5 +228,5 @@ def q_sql_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
           AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
         GROUP BY o_orderpriority
-        """
+        """,
     )

@@ -52,7 +52,8 @@ from ..registry import (
     s_exact_sum,
     s_money_col,
 )
-from ..sources.io import load_table, register_all
+from ..sources import io
+from ..sources.io import load_table
 
 # "Very late" shipment: >1800 days after the order date (~p95 of the fixture's
 # ship-delay distribution — FIXTURES.md; the synthetic delays reach ~2400 d).
@@ -346,8 +347,9 @@ def q_sql_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncorrelated scalar subquery once and broadcasts the 1-row result.
     Revenue uses the exact-decimal sum so the MAX-equality cut is
     deterministic (exact_sum docstring)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         WITH rev AS (
             SELECT l_suppkey AS supplier_no,
@@ -362,7 +364,7 @@ def q_sql_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE s_suppkey = supplier_no
           AND total_revenue = (SELECT MAX(total_revenue) FROM rev)
         ORDER BY s_suppkey ASC
-        """
+        """,
     )
 
 
@@ -396,8 +398,9 @@ def q_sql_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     finished multi-supplier order. Exercises Catalyst's decorrelation of
     two subqueries against the same outer row — planned as one semi- plus
     one anti-join on l_orderkey, no per-row re-execution."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT s_name, COUNT(*) AS numwait
         FROM supplier, lineitem l1, orders
@@ -417,7 +420,7 @@ def q_sql_waiting_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY s_name
         ORDER BY numwait DESC, s_name ASC
         LIMIT 20
-        """
+        """,
     )
 
 
@@ -440,8 +443,9 @@ def q_sql_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     an extra join-condition filter (NOT LIKE on priority — the fixture has
     no o_comment), COUNT of a nullable column, then a second aggregation
     over the counts. All-integer output."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         """
         SELECT c_count, COUNT(*) AS custdist
         FROM (
@@ -452,7 +456,7 @@ def q_sql_cust_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) c_orders
         GROUP BY c_count
         ORDER BY custdist DESC, c_count DESC
-        """
+        """,
     )
 
 
@@ -481,8 +485,9 @@ def q_sql_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     an ANSI DIVIDE_BY_ZERO crash: the sums are named in a subquery so the
     guard tests the evaluated denominator once, identically on both
     engines."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT CASE WHEN den <> 0 THEN 100.0D * num / den END AS promo_pct,
                n_lines
@@ -495,7 +500,7 @@ def q_sql_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
               AND l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
               AND l_shipdate <  TIMESTAMP '1997-10-01 00:00:00'
         ) sums
-        """
+        """,
     )
 
 
@@ -519,8 +524,9 @@ def q_sql_disjunctive_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     common ``p_partkey = l_partkey`` stays a hash-join key and the shared
     ``p_brand IN (...)`` implied filter is pushed to the part scan rather
     than evaluating the OR as a nested-loop residual."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT {s_exact_sum(_REV4_S, 4)} AS revenue,
                COUNT(*) AS n_lines
@@ -532,7 +538,7 @@ def q_sql_disjunctive_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AND l_quantity BETWEEN 10.0D AND 30.0D)
             OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
                 AND l_quantity BETWEEN 20.0D AND 40.0D))
-        """
+        """,
     )
 
 
@@ -554,8 +560,9 @@ def q_sql_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three filters reach the parquet scan (PushedFilters, asserted in
     the plan suite); price×discount lives on the 4-decimal grid →
     exact-decimal sum."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT {s_exact_sum("l_extendedprice * l_discount", 4)} AS revenue,
                COUNT(*) AS n_lines
@@ -564,7 +571,7 @@ def q_sql_discount_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
           AND l_discount BETWEEN 0.05D AND 0.07D
           AND l_quantity < 24.0D
-        """
+        """,
     )
 
 
@@ -594,8 +601,9 @@ def q_sql_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.001 for any single nation pair to be populated; FIXTURES.md). Two
     independent nation→region dimension chains broadcast onto one fact
     scan."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT r2.r_name AS cust_region,
                CAST(year(l_shipdate) AS INT) AS l_year,
@@ -611,7 +619,7 @@ def q_sql_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
         GROUP BY cust_region, l_year
         ORDER BY cust_region ASC, l_year ASC
-        """
+        """,
     )
 
 
@@ -654,8 +662,9 @@ def q_sql_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI DIVIDE_BY_ZERO crash (r6 zero-money sweep): sums are named in a
     subquery so the guard tests the evaluated denominator, identically on
     both engines."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT o_year,
                CASE WHEN den <> 0 THEN num / den END AS mkt_share
@@ -681,7 +690,7 @@ def q_sql_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             GROUP BY o_year
         ) sums
         ORDER BY o_year ASC
-        """
+        """,
     )
 
 
@@ -711,8 +720,9 @@ def q_sql_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE arithmetic on both engines, then exact-decimal summed. Plan: one
     lineitem scan, part/supplier/nation broadcast, orders join, one
     aggregation shuffle."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT n_name AS nation,
                CAST(year(o_orderdate) AS INT) AS o_year,
@@ -723,7 +733,7 @@ def q_sql_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND p_name LIKE '%red%'
         GROUP BY n_name, year(o_orderdate)
         ORDER BY nation ASC, o_year DESC
-        """
+        """,
     )
 
 
@@ -752,8 +762,9 @@ def q_sql_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard in all three spots, identically in both twins (r7 extreme-money
     sweep: one 1e308 price otherwise throws the stage out of decimal
     range under ANSI; NaN/±Inf fail the BETWEEN in both engines)."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT l_suppkey,
                CAST(SUM({o_dec("l_extendedprice", 2, 27)}) AS DOUBLE) AS supp_value
@@ -763,7 +774,7 @@ def q_sql_value_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
              > (SELECT SUM({o_dec("l_extendedprice", 2, 27)}) * 0.0105D
                 FROM lineitem)
         ORDER BY supp_value DESC, l_suppkey ASC
-        """
+        """,
     )
 
 
@@ -798,8 +809,9 @@ def q_sql_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     and orders on their keys (shuffle joins on the two fact keys — the only
     big exchanges), dims broadcast. Revenue is exact_sum (grid 4) so the
     ORDER BY on the double is deterministic cross-engine."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT n_name,
                {s_exact_sum(_REV4_S, 4)} AS revenue
@@ -815,7 +827,7 @@ def q_sql_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
           AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
         GROUP BY n_name
         ORDER BY revenue DESC, n_name ASC
-        """
+        """,
     )
 
 
@@ -850,8 +862,9 @@ def q_sql_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs as a two-phase partial/final aggregate over (brand,type,size,
     suppkey). LIMIT 50 carries the full ORDER BY tie-break, so the cut is
     deterministic."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         """
         SELECT p_brand, p_type, p_size,
                COUNT(DISTINCT l_suppkey) AS supplier_cnt
@@ -865,7 +878,7 @@ def q_sql_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY p_brand, p_type, p_size
         ORDER BY supplier_cnt DESC, p_brand ASC, p_type ASC, p_size ASC
         LIMIT 50
-        """
+        """,
     )
 
 
@@ -902,8 +915,9 @@ def q_sql_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r8 degmoney wave: one ±1e308/NaN price otherwise poisons the whole
     month's fold, differently per engine); empty months yield NULL sums on
     both engines identically."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         WITH RECURSIVE months(m) AS (
             SELECT DATE '1995-01-01'
@@ -917,7 +931,7 @@ def q_sql_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM months
         LEFT JOIN orders ON CAST(date_trunc('month', o_orderdate) AS DATE) = m
         GROUP BY m
-        """
+        """,
     )
 
 
@@ -943,8 +957,9 @@ def q_sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the hand-built shape of q_window_topk, derived automatically.
     The money tie-break is o_orderkey, so the LIMIT cut is deterministic
     and the raw parquet doubles hash bit-identically."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         """
         SELECT c_custkey, t.o_orderkey, t.o_totalprice
         FROM customer JOIN LATERAL (
@@ -953,7 +968,7 @@ def q_sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2
         ) t
         WHERE c_mktsegment = 'BUILDING'
-        """
+        """,
     )
 
 
@@ -981,8 +996,9 @@ def q_sql_modern_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND is belt-and-braces on both sides, and the QTY_MAX conformance
     guard inside the SUM (r9 raw-sum wave) nulls finite-absurd sentinels
     identically in both twins."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         f"""
         SELECT l_returnflag, l_linestatus,
                COUNT(*) AS n_rows,
@@ -991,7 +1007,7 @@ def q_sql_modern_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                      FILTER (WHERE l_tax > 0.04), 2) AS qty_taxed
         FROM lineitem
         GROUP BY ALL
-        """
+        """,
     )
 
 
@@ -1028,8 +1044,9 @@ def q_sql_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the distinct order pairs, then NOT IN (non-nullable key) is a
     second plain anti-join. The status domain is data-derived, so the
     query stays correct if the domain grows."""
-    register_all(spark, sf_dir)
-    return spark.sql(
+    return io.sql(
+        spark,
+        sf_dir,
         """
         WITH statuses AS (SELECT DISTINCT o_orderstatus AS st FROM orders),
         missing AS (
@@ -1044,5 +1061,5 @@ def q_sql_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM customer
         WHERE c_custkey NOT IN (SELECT c_custkey FROM missing)
         ORDER BY c_custkey ASC
-        """
+        """,
     )

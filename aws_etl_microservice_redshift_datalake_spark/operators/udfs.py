@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
+from ..session import sibling
 from ..sources.io import load_table
 from .vectors import VEC_ABS_MAX
 
@@ -250,9 +251,11 @@ def q_udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(len(toks) - 1):
                 yield (toks[i] + " " + toks[i + 1],)
 
-    spark.udtf.register("bigram_udtf", BigramUDTF)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(
+    # the UDTF and the view live on a sibling: the caller's catalog is untouched
+    s = sibling(spark)
+    s.udtf.register("bigram_udtf", BigramUDTF)
+    load_table(s, sf_dir, "documents").createOrReplaceTempView("documents")
+    return s.sql(
         """
         SELECT d.doc_id, b.bigram
         FROM documents d, LATERAL bigram_udtf(d.text) b

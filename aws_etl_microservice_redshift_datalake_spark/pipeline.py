@@ -14,8 +14,6 @@ Scale notes (100 TB):
 - stages stay LAZY until a sink stage forces them, so Catalyst optimizes
   ACROSS stage boundaries (filter from a late transform reaches the ingest
   scan — impossible in the JDBC-orchestration original);
-- `checkpoint_view` materializes a hot intermediate once when multiple
-  sinks fan out from it (the only time eager evaluation pays);
 - everything here is driver-side *metadata* orchestration: no data ever
   moves through Python.
 """
@@ -98,16 +96,6 @@ class EtlJob:
             df.createOrReplaceTempView(view)
 
         self._stages.append(_Stage(view, "transform", run))
-        return self
-
-    def checkpoint_view(self, view: str) -> "EtlJob":
-        """Materialize (cache + count) a view that multiple sinks will read."""
-
-        def run(spark: SparkSession) -> int:
-            df = spark.table(view).cache()
-            return df.count()
-
-        self._stages.append(_Stage(f"checkpoint:{view}", "transform", run))
         return self
 
     def unload(

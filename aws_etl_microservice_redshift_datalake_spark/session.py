@@ -13,6 +13,8 @@ Scale notes (100 TB design):
   200 default tasks would dominate wall-clock), large on a real cluster.
 - UTC session timezone: deterministic date_trunc/extract semantics that match
   the DuckDB oracle (which is timezone-naive).
+- One session serves many threads: a query that needs its own temp views or
+  conf takes a ``sibling`` session, never writes to the caller's.
 """
 
 from __future__ import annotations
@@ -63,3 +65,24 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def sibling(spark: SparkSession, conf: dict[str, str] | None = None) -> SparkSession:
+    """A session for one query's temp views and conf, so the caller's
+    session is left as it was found.
+
+    ``spark.newSession()`` shares the caller's SparkContext (executors,
+    cache, broadcasts) but has its own SQL conf and temp-view catalog, so
+    nothing the query registers or sets is visible to the caller or to a
+    query running concurrently on another thread. It starts from a copy of
+    the caller's modifiable SQL conf, so settings made at runtime still
+    apply; ``conf`` is applied on top. This is the only place a query path
+    sets conf."""
+    settings = {
+        k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)
+    }
+    settings.update(conf or {})
+    s = spark.newSession()
+    for k, v in settings.items():
+        s.conf.set(k, v)
+    return s

@@ -11,7 +11,7 @@ Spectrum-external-table surface an ETL microservice drives:
 - S5 write_jdbc          <- warehouse push
 - S6 unload              <- UNLOAD ... PARTITION BY ... MAXFILESIZE
 - S7 unload_csv          <- UNLOAD ... CSV GZIP
-- S8 register_all        <- external-table/catalog registration
+- S8 sql                 <- external-table/catalog registration + SQL
 
 Scale notes: everything here is declarative `spark.read`/`df.write`, so the
 same code drives s3a:// URIs on a cluster — Parquet scans get predicate
@@ -24,11 +24,13 @@ from __future__ import annotations
 import functools as _functools
 import math
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas import TABLES
+from ..session import sibling
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -180,13 +182,23 @@ def load_spread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spread(load_table(spark, sf_dir, name), spark, table_path(sf_dir, name))
 
 
-def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """S8: register every driver table as a temp view (external-table analog).
+def sql(
+    spark: SparkSession, sf_dir: str, statement: str, args: dict | None = None
+) -> DataFrame:
+    """S8: run a SQL statement over the driver tables it names
+    (external-table analog).
 
-    After this, the full SQL surface works via ``spark.sql``.
+    The tables the statement names (whole word, any case) are registered
+    as temp views on a ``session.sibling`` of ``spark``, not on ``spark``
+    itself: the caller's catalog is left as it was, and two statements
+    running concurrently over different ``sf_dir``s cannot resolve each
+    other's views. ``args`` are bound as named parameters by the parser.
     """
+    s = sibling(spark)
     for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        if re.search(rf"\b{name}\b", statement, re.IGNORECASE):
+            load_table(s, sf_dir, name).createOrReplaceTempView(name)
+    return s.sql(statement, args=args)
 
 
 def ingest_csv(

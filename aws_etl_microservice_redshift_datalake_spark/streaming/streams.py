@@ -25,6 +25,10 @@ reads it natively as TimestampNTZType, truncating to µs, while DuckDB
 keeps ns. Oracles therefore truncate to µs (grouping/join arithmetic) or
 seconds (hashed outputs) — SURVEY.md §5.3/§7.4.
 
+Every query builds and runs on ``stream_session(spark)``, a sibling
+session: the caller's conf and catalog are never written, so there is
+nothing to restore and concurrent queries cannot see each other's state.
+
 Scale notes (100 TB):
 - The file source is incremental: on a cluster the same code tails an
   S3 prefix; ``maxFilesPerTrigger`` bounds per-batch volume.
@@ -51,13 +55,9 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import MONEY_MAX as _MONEY_MAX
 from ..registry import money_col, o_money_col, query, rnd
-
 from ..scratch import process_scratch
-
-# stashed caller tz while a watermark stream is in flight — set by
-# stream_events_watermarkable (which pins the session to UTC), restored by
-# run_stream once the stream terminates. None = nothing to restore.
-_PREV_TZ: str | None = None
+from ..session import sibling
+from ..sources.io import load_table, normalize_epoch_ts
 
 # events.parquet is TIMESTAMP(NANOS) with isAdjustedToUTC=false: Spark 4.1's
 # vectorized reader converts it natively to TimestampNTZType (µs-truncated),
@@ -116,34 +116,34 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate in ``normalize_epoch_ts`` converts it correctly either way."""
     raw = spark.readStream.schema(RAW_EVENTS_SCHEMA).parquet(_source_dir(sf_dir))
     if isinstance(raw.schema["ts"].dataType, T.LongType):  # pragma: no cover
-        from ..sources.io import normalize_epoch_ts
-
         raw = raw.withColumn("ts", normalize_epoch_ts("ts"))
     return raw
+
+
+def stream_session(spark: SparkSession) -> SparkSession:
+    """The ``session.sibling`` a stream query builds and runs on. UTC, so
+    ``stream_events_watermarkable`` keeps the wall clock whatever the
+    caller's tz. Shuffle partitions clamped to the core count: stateful
+    streaming locks that count into the state store at start(), and a
+    default-conf session (200) would pay 200 state-store dirs and task
+    launches per stateful operator for a corpus that fits in a handful (on
+    a cluster, defaultParallelism is the executor core total)."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_state = max(1, min(parts, spark.sparkContext.defaultParallelism))
+    return sibling(spark, {"spark.sql.session.timeZone": "UTC",
+                           "spark.sql.shuffle.partitions": str(n_state)})
 
 
 def stream_events_watermarkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9 (watermark variant): events with ``ts`` as TimestampType.
 
     ``withWatermark`` rejects TIMESTAMP_NTZ (EVENT_TIME_IS_NOT_ON_TIMESTAMP
-    _TYPE), so watermark-carrying queries cast NTZ → instant under a pinned
-    UTC session timezone: same wall clock, deterministic regardless of the
-    caller session's tz (the driver's correctness session is vanilla).
-    Timestamp *outputs* of such queries must cast back with
-    ``.cast("timestamp_ntz")`` so results render the same wall clock as the
-    batch twins and the DuckDB oracle.
-
-    The UTC pin is a SESSION-level setting, so it is scoped: the caller's
-    previous tz is stashed and ``run_stream`` restores it after the stream
-    terminates (every watermark query executes inside ``run_stream`` and
-    outputs only NTZ/primitive columns, which are tz-independent once
-    materialized in the sink) — no tz leakage into later batch queries on
-    the same session (ADVICE r3)."""
-    global _PREV_TZ
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    if prev != "UTC" and _PREV_TZ is None:
-        _PREV_TZ = prev
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _TYPE), so watermark-carrying queries cast NTZ → instant under the UTC
+    timezone of ``stream_session``, which ``spark`` must be: same wall
+    clock, deterministic regardless of the tz of the session the query was
+    called with. Timestamp *outputs* of such queries cast back with ``.cast("timestamp_ntz")``
+    inside the stream graph, so the sink holds tz-independent values that
+    render the same wall clock as the batch twins and the DuckDB oracle."""
     s = stream_events(spark, sf_dir)
     if isinstance(s.schema["ts"].dataType, T.TimestampNTZType):
         s = s.withColumn("ts", F.col("ts").cast("timestamp"))
@@ -153,30 +153,22 @@ def stream_events_watermarkable(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_stream(sdf: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFrame:
     """S10 (harness half): run a streaming DataFrame to completion with
     ``trigger(availableNow=True)`` into a memory sink; return the sink
-    contents as a batch DataFrame. Checkpointed like any production query."""
+    contents as a batch DataFrame. Checkpointed like any production query.
+
+    The sink's view is dropped once its rows are bound to the returned
+    DataFrame, so the session's catalog ends as it started and the rows
+    live only as long as the result does."""
     spark = sdf.sparkSession
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = f"{process_scratch()}/ckpt-{name}"
-    # Stateful streaming locks shuffle-partition count into the state store at
-    # start(): a default-conf session (200) then pays 200 state-store dirs and
-    # task launches PER STATEFUL OPERATOR for a corpus that fits in a handful.
-    # Clamp to the session's core count for the harness run and restore after
-    # start — on a real cluster defaultParallelism is the executor-core total,
-    # so the same clamp yields a properly wide state store.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    n_state = max(1, min(int(prev_parts), spark.sparkContext.defaultParallelism))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
         # awaitTermination returns False on timeout — surface that instead of
         # silently returning a partially-filled memory sink
@@ -185,14 +177,9 @@ def run_stream(sdf: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFr
     finally:
         q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
-        # scope the watermark helper's UTC pin: the stream has terminated,
-        # its sink holds only tz-independent (NTZ/primitive) values, so the
-        # caller session's original tz can come back
-        global _PREV_TZ
-        if _PREV_TZ is not None:
-            spark.conf.set("spark.sql.session.timeZone", _PREV_TZ)
-            _PREV_TZ = None
-    return spark.table(name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def stream_to_parquet(
@@ -256,6 +243,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded by the same explicit pre-filter as the batch twin (r8 NULL
     event-time contract): window() emits no group for them anyway, the
     oracle's time_bucket(NULL) would form a NULL group."""
+    spark = stream_session(spark)
     agg = (
         stream_events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -289,6 +277,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2: streaming sliding windows (10 min length, 5 min slide), complete
     mode; each event lands in exactly two windows. NULL-ts rows are
     excluded in both twins (the r8 NULL event-time contract)."""
+    spark = stream_session(spark)
     agg = (
         stream_events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -349,6 +338,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-gap sessionizer formed a session from it — 689 vs 691 sessions
     measured).
     """
+    spark = stream_session(spark)
     s = (
         stream_events_watermarkable(spark, sf_dir)
         .filter(F.col("ts").isNotNull())
@@ -394,14 +384,14 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows whose end precedes the final watermark (max ts - 1h) are
     finalized and emitted; the trailing hour of windows is withheld as
     open state. The oracle's HAVING clause states that bound exactly."""
+    spark = stream_session(spark)
     agg = (
         stream_events_watermarkable(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
-        # NTZ cast INSIDE the stream (under the pinned-UTC execution tz):
-        # the sink must hold only tz-independent values, because by the
-        # time the driver collects, run_stream has restored the caller tz
+        # NTZ cast INSIDE the stream (under the stream session's UTC): the
+        # sink holds only tz-independent values, whatever session reads it
         .select(
             F.col("w.start").cast("timestamp_ntz").alias("window_start"),
             "n_events",
@@ -424,6 +414,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact streaming dedup with watermark-bounded state (the streaming twin
     of operators/dedup). Only the keys are returned: 'first occurrence'
     payloads depend on arrival order, keys do not."""
+    spark = stream_session(spark)
     dd = (
         stream_events_watermarkable(spark, sf_dir)
         .withWatermark("ts", "1 hour")
@@ -455,8 +446,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     → nation dimension chain, aggregated per nation in complete mode. The
     static side is re-planned per micro-batch, so dim updates are picked up
     between batches on a live cluster."""
-    from ..sources.io import load_table
-
+    spark = stream_session(spark)
     dim = (
         load_table(spark, sf_dir, "customer")
         .join(load_table(spark, sf_dir, "nation"),
@@ -493,6 +483,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join condition is time-bounded, so the state store evicts rows once they
     can no longer match (the 100 TB-safe shape); over the finite stream the
     result equals the batch time-bounded self-join."""
+    spark = stream_session(spark)
     clicks = (
         stream_events_watermarkable(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -634,6 +625,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-ts rows are excluded in both twins (the r8 NULL event-time
     contract): a gap against a NULL instant is undefined, and the Arrow
     boundary would otherwise hand the kernel a NaT the SQL twin groups."""
+    spark = stream_session(spark)
     out = (
         stream_events(spark, sf_dir)
         .filter(F.col("ts").isNotNull())

@@ -34,13 +34,22 @@ def test_clear_session_memos_drops_and_rebuilds(spark):
 
 
 def test_dedup_sets_no_session_conf():
-    # operators must not mutate session-global conf: a concurrent query
-    # planned in another driver thread would see the change
+    # no operator or stream module may mutate session conf: a concurrent
+    # query planned in another driver thread would see the change. A query
+    # that needs its own conf takes a session.sibling instead.
+    import importlib
     import inspect
+    import pkgutil
 
-    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+    from aws_etl_microservice_redshift_datalake_spark import operators, streaming
 
-    assert "conf.set" not in inspect.getsource(dedup)
+    seen = []
+    for pkg in (operators, streaming):
+        for m in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{m.name}")
+            assert "conf.set" not in inspect.getsource(mod), mod.__name__
+            seen.append(m.name)
+    assert {"dedup", "streams"} <= set(seen)
 
 
 def test_cc_loop_leaves_shuffle_partitions_unchanged(spark, monkeypatch):

@@ -155,18 +155,6 @@ def test_etl_job_compact_keeps_hive_partitions(spark):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def test_checkpoint_view_counts(spark):
-    job = (
-        EtlJob("ck")
-        .ingest("nat", lambda s: load_table(s, SF_MED, "nation"))
-        .transform("big", "SELECT * FROM nat WHERE n_nationkey >= 10")
-        .checkpoint_view("big")
-    )
-    report = job.run(spark)
-    ck = report.stages[-1]
-    assert ck.rows == 15
-
-
 def test_materialized_view_caches_and_refreshes(spark, tmp_path):
     """MV contract: queries against the view hit the columnar cache
     (InMemoryTableScan in the plan); REFRESH rebuilds from changed base

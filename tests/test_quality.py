@@ -587,10 +587,12 @@ def test_session_memo_distinct_keys_build_in_parallel(spark):
 
 @full_sweeps_only
 def test_concurrent_queries_one_session(spark):
-    """Multi-tenant driver shape: the memo-heavy dedup/vector family run
-    from 6 threads on ONE session must all succeed with the same row counts
-    a serial run produces (shared persisted intermediates, IVF model, and
-    connected-components checkpoints under concurrency)."""
+    """Multi-tenant driver shape: the memo-heavy dedup/vector family, a
+    watermark stream, and one SQL-text query over two sf dirs run from 6
+    threads on ONE session must all match a serial run (shared persisted
+    intermediates, IVF model and connected-components checkpoints under
+    concurrency; no stream conf and no SQL temp view reaching another
+    thread) and leave the session's conf and catalog as they were."""
     from concurrent.futures import ThreadPoolExecutor
 
     names = [
@@ -599,12 +601,26 @@ def test_concurrent_queries_one_session(spark):
         "q_decontaminate_semantic_clustered",
         "q_cross_lingual_neardup_clustered",
     ]
-    serial = {n: QS[n](spark, SF_MED).count() for n in names}
+    jobs = [(n, SF_MED) for n in names] + [
+        ("q_stream_watermark", SF_MED),
+        ("q_sql_waiting_orders", SF_MED),
+        ("q_sql_waiting_orders", SF_SMALL),
+    ]
+
+    def run(job):
+        name, sf = job
+        df = QS[name](spark, sf)
+        # the memo family is pinned by row count; the stream and SQL
+        # results are small enough to compare row for row
+        return job, df.count() if name in names else sorted(map(tuple, df.collect()))
+
+    conf, tables = spark.conf.getAll, spark.catalog.listTables()
+    serial = dict(map(run, jobs))
     with ThreadPoolExecutor(max_workers=6) as ex:
-        concurrent = dict(
-            ex.map(lambda n: (n, QS[n](spark, SF_MED).count()), names)
-        )
+        concurrent = dict(ex.map(run, jobs))
     assert concurrent == serial
+    assert spark.conf.getAll == conf
+    assert spark.catalog.listTables() == tables
 
 
 def test_token_budget_respected(spark):
