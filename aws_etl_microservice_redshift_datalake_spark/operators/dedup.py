@@ -528,7 +528,7 @@ def simhash_hamming_join(d: DataFrame, k: int = SIMHASH_HAM_K) -> DataFrame:
 def simhash_candidates(sims: DataFrame, k: int = SIMHASH_HAM_K) -> DataFrame:
     """The pigeonhole candidate stage of :func:`simhash_hamming_join`,
     split out (the setsim_candidates precedent) so scale_check.py's
-    --simhashcount certificate can count the DISTINCT post-block
+    --count simhash certificate can count the DISTINCT post-block
     candidate pairs directly at both scales: the stage's volume model is
     ~true-pairs (linear in corpus) + n²·(k+1)/2^bbits random block
     collisions (quadratic with a 2^-15 coefficient at the default k=3) —
@@ -636,8 +636,9 @@ CC_DRIVER_MAX_EDGES = 1_000_000  # distinct edges up to which
 # Two spellings of the per-node minimum, picked ADAPTIVELY per round from
 # the measured edge count (both produce identical edges, so the choice is
 # purely physical):
-# - window (1 exchange/operator): fastest while edge sets are modest —
-#   measured 12 s vs 24 s for the ×10 dup graph — but WindowExec
+# - window (1 exchange/operator): fastest while edge sets are modest — on
+#   1.5M distinct random edges at 4 cores, 73–75 s and 58 jobs against
+#   116–122 s and 94 jobs for groupBy-min — but WindowExec
 #   buffers/sorts each node's whole adjacency in ONE task, and in a
 #   converged component the root's degree equals the component size, so a
 #   billion-edge component would spill-sort in a single straggler;
@@ -1969,7 +1970,7 @@ def setsim_candidates(
 ) -> DataFrame:
     """The candidate stage alone: DISTINCT (doc_a, doc_b) pairs surviving
     the prefix + length + positional filters, BEFORE set hydration and the
-    exact verify — split out so `scale_check.py --setsimcount` can certify
+    exact verify — split out so `scale_check.py --count setsim` can certify
     candidate LINEARITY at 10× corpus size with a direct count (VERDICT
     r10 #4: the wall-clock factor alone was the weakest evidence in the
     dedup family; this is the same direct-count treatment the clustered
@@ -2101,7 +2102,7 @@ def containment_candidates(
     """The containment candidate stage alone: DISTINCT ordered (doc_a,
     doc_b) pairs surviving the probe-prefix + length + positional
     filters, BEFORE hydration/verify — split out so `scale_check.py
-    --containcount` can certify candidate LINEARITY at ×10 with a direct
+    --count containment` can certify candidate LINEARITY at ×10 with a direct
     count (the setsim/simhash precedent; this stage's indexed side is
     every token, the family's highest fan-out in principle)."""
     if pref is None:

@@ -320,7 +320,7 @@ COMMENTARY = {
         "pairs hydrated for the exact |∩|/|a| verify. Both relations "
         "persisted + memoized (the setsim barrier discipline); "
         "candidate linearity certified by a direct ×10 count "
-        "(scale_check.py --containcount)."
+        "(scale_check.py --count containment)."
     ),
     "q_dedup_incremental": (
         "Incremental A-vs-B dedup (round 12): the SHARED adaptive LSH "

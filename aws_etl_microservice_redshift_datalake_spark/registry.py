@@ -273,7 +273,7 @@ _RECHECK: frozenset[str] = frozenset(
 #   twins of three hash-green exact queries — cluster assignments are
 #   kmeans-seed-specific, so their gates are the per-query pytest
 #   recall/subset floors vs their exact twins plus the pair-count
-#   certificate (scale_check.py --paircount). Rows-only rows in r4–r5/r9
+#   certificate (scale_check.py --count ivf). Rows-only rows in r4–r5/r9
 #   (and their EXACT twins stay unparked, carrying full hash signal for
 #   the shared conformance population).
 # ADJUDICATED r10 (extending VERDICT r9 #2 to the last unfloored pair so

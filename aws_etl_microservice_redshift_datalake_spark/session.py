@@ -9,8 +9,9 @@ PySpark: one SparkSession with AQE enabled plays the role of the warehouse.
 Scale notes (100 TB design):
 - AQE on: runtime partition coalescing + skew-join splitting replace manual
   DISTKEY tuning.
-- shuffle.partitions is environment-driven: small for local test runs (where
-  200 default tasks would dominate wall-clock), large on a real cluster.
+- shuffle.partitions defaults to 32, not Spark's 200 (200 tasks would
+  dominate wall-clock on local runs); pass ``shuffle_partitions=`` or set
+  ``spark.sql.shuffle.partitions`` at runtime for a real cluster.
 - UTC session timezone: deterministic date_trunc/extract semantics that match
   the DuckDB oracle (which is timezone-naive).
 - One session serves many threads: a query that needs its own temp views or
@@ -23,7 +24,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def _fast_local_dir() -> str | None:

@@ -6,8 +6,9 @@ and prints ONE JSON line:
 
 Headline set: one representative per heavy operator family (scan-agg, star
 join, window, dedup, ANN, events sessionization) — the queries whose plans
-matter at 100 TB. Results are forced with a count() (materializes the whole
-result without driver-side collect overhead distorting the timing).
+matter at 100 TB. Every query is timed by ``time_queries``: memos cleared,
+then the whole result written to Spark's ``noop`` sink, so every output
+column is computed and no driver-side collect distorts the timing.
 """
 
 from __future__ import annotations
@@ -133,6 +134,33 @@ HEADLINE = [
 ]
 
 
+def time_queries(spark, names, sf_dir: str, reps: int) -> dict[str, float]:
+    """Seconds per query: the minimum over ``reps`` cold runs.
+
+    Each rep first drops every memo on the session (minhash pairs, CC
+    labels, shingle/prefix postings, LSH buckets, IVF model), so memoized
+    composites pay their build, then builds the query and writes its whole
+    result to the ``noop`` sink. A ``count()`` would let Catalyst prune every
+    output column the row count does not need. The minimum keeps one
+    contended rep from reading as a plan regression."""
+    from aws_etl_microservice_redshift_datalake_spark import all_queries
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+    )
+
+    qs = all_queries()
+    times: dict[str, float] = {}
+    for name in names:
+        best = float("inf")
+        for _ in range(reps):
+            clear_session_memos(spark)
+            t0 = time.perf_counter()
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            best = min(best, time.perf_counter() - t0)
+        times[name] = round(best, 4)
+    return times
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -145,32 +173,10 @@ def main() -> None:
 
     # warm the JVM + parquet footers once so per-query numbers measure the
     # query, not session startup
-    qs[names[0]](spark, sf_dir).count()
-
-    # min of N fresh runs per query (the scale_check.py protocol): a single
-    # contended-machine run must not read as a plan regression — the min is
-    # the best available estimate of the plan's actual cost on this box
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-    # SPARK_GRAFT_BENCH_COLD=1 (r15, VERDICT r14 #3): clear the session
-    # memos (minhash pairs, CC labels, LSH buckets, IVF model, prefix
-    # postings) before EVERY rep, so memoized composites report their cold
-    # first-call cost instead of a warm persisted read. Opt-in only — the
-    # default path (driver protocol) is unchanged.
-    cold = os.environ.get("SPARK_GRAFT_BENCH_COLD") == "1"
-    if cold:
-        from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
-            clear_session_memos,
-        )
-    times: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(reps):
-            if cold:
-                clear_session_memos(spark)
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 4)
+    time_queries(spark, names[:1], sf_dir, 1)
+    times = time_queries(
+        spark, names, sf_dir, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+    )
 
     total = round(sum(times.values()), 4)
     print(

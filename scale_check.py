@@ -1,32 +1,41 @@
 #!/usr/bin/env python3
-"""Scale-stress check: amplify the sf0.1 tables ~10× (preserving join
-structure and key skew shape), run the headline operators at both scales on
-the same session, and write SCALE.md with wall-clock scaling factors.
+"""Scale-stress check: time the headline operators on a base corpus and on
+a K-fold amplified copy of it, certify that four candidate stages grow
+linearly, and write SCALE.md with the wall-clock scaling factors.
 
 The point: show each operator's cost grows ~linearly with data (shuffle-
 minimal plans), not quadratically — the measurable stand-in for "would this
 hold at 1000 executors / 100 TB". Run: ``python scale_check.py``.
 
-Amplification: each fact row is replicated K times with key offsets that
-keep referential integrity (orderkey/custkey/event user_id spaces shift per
-replica; dimension tables stay fixed, as they would at 100 TB). Documents
-get per-replica doc_id offsets with text perturbed by a replica tag so dedup
-finds the SAME duplicate structure per replica, K× total.
+Amplification is the benchmark's own Arrow amplifier (``perfbench/gen.py``
+``amplify``): fact keys shift per replica so referential integrity holds and
+dimension tables stay fixed; every document token is tagged with its replica
+and every embedding gets a per-replica sign flip, so each replica keeps its
+duplicate structure and replicas never pair with each other. Timing is
+``bench.time_queries``: memos cleared and the whole result written to the
+``noop`` sink, in a fresh process per (scale, repetition).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import pyarrow.parquet as pq
 
-K = int(os.environ.get("SPARK_GRAFT_SCALE_K", "10"))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+
+import gen  # noqa: E402
+
+K = 10
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = f"/root/repo/.tmp/scale-x{K}"
+BASE_NAME = os.path.basename(BASE.rstrip("/"))
+OUT = os.path.join(ROOT, ".tmp", f"scale-{BASE_NAME}-x{K}")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 QUERIES = [
     "q_pricing_summary",
@@ -60,8 +69,8 @@ QUERIES = [
     "q_cms_heavy_hitters",
     "q_decontaminate",
     "q_stratified_sample",
-    # round 4c: star-graph cluster resolution (the log-round CC rebuild),
-    # retrieval with hydration (broadcast queries × streamed targets,
+    # round 4c: star-graph cluster resolution (pair stage + one driver-side
+    # connected-components solve), retrieval with hydration (broadcast queries × streamed targets,
     # linear), and temperature-mixture rates (map-side membership).
     # q_semdedup is deliberately NOT here: it is the exact brute-force twin
     # (quadratic by construction, like the cosine oracle) whose 100 TB form
@@ -122,7 +131,7 @@ QUERIES = [
     "q_simhash_hamming_join",
     # round 11d: leakage-safe cluster split — the dedup_clusters plan plus
     # one broadcast left join and a 2-group aggregate; expected to track
-    # q_dedup_clusters' factor (the CC rounds dominate).
+    # q_dedup_clusters' factor (the shared pair stage dominates).
     "q_cluster_split",
     # round 12: Gopher-rules quality report — row-local HOF rule battery
     # + one |langs|-group aggregate; expected ~linear (scan-bound).
@@ -177,473 +186,206 @@ QUERIES = [
 ]
 
 
-def amplify(spark) -> None:
-    from pyspark.sql import functions as F
-
-    from aws_etl_microservice_redshift_datalake_spark.sources.io import load_table
-
-    MARKER = "v3-tokentag-documents"
-    done = f"{OUT}/_DONE"
-    if os.path.exists(done) and open(done).read() == MARKER:
-        return
-    shutil.rmtree(OUT, ignore_errors=True)
-    os.makedirs(OUT, exist_ok=True)
-    rep = F.explode(F.sequence(F.lit(0), F.lit(K - 1))).alias("rep")
-
-    def key_shift(col, span):
-        return (F.col(col) + F.col("rep") * span).alias(col)
-
-    li = load_table(spark, BASE, "lineitem").select("*", rep)
-    li = li.select(
-        key_shift("l_orderkey", 10_000_000),
-        *[c for c in li.columns if c not in ("l_orderkey", "rep")],
-    )
-    li.repartition(32).write.parquet(f"{OUT}/lineitem.parquet")
-
-    o = load_table(spark, BASE, "orders").select("*", rep)
-    o = o.select(
-        key_shift("o_orderkey", 10_000_000),
-        key_shift("o_custkey", 1_000_000),
-        *[c for c in o.columns if c not in ("o_orderkey", "o_custkey", "rep")],
-    )
-    o.repartition(16).write.parquet(f"{OUT}/orders.parquet")
-
-    c = load_table(spark, BASE, "customer").select("*", rep)
-    c = c.select(
-        key_shift("c_custkey", 1_000_000),
-        *[col for col in c.columns if col not in ("c_custkey", "rep")],
-    )
-    c.repartition(8).write.parquet(f"{OUT}/customer.parquet")
-
-    e = load_table(spark, BASE, "events").select("*", rep)
-    e = e.select(
-        key_shift("event_id", 100_000_000),
-        key_shift("user_id", 1_000_000),
-        *[col for col in e.columns if col not in ("event_id", "user_id", "rep")],
-    )
-    e.repartition(16).write.parquet(f"{OUT}/events.parquet")
-
-    d = load_table(spark, BASE, "documents").select("*", rep)
-    # decorrelate replicas by tagging EVERY token with the replica id: a
-    # consistent relabeling of the token space, so every intra-replica
-    # pairwise Jaccard (word-shingle or token-set) is preserved EXACTLY,
-    # while cross-replica shingle spaces are disjoint (Jaccard = 0). A mere
-    # suffix ("... replicaN") changes only ~3 shingles, leaving cross-replica
-    # copies as TRUE near-dups (J ≈ 0.95) — the exact answer itself then
-    # grows ~K², and the scale row measures output size, not the operator.
-    tagged = F.array_join(
-        F.transform(
-            F.split("text", " "),
-            lambda t: F.concat(t, F.lit("_r"), F.col("rep").cast("string")),
-        ),
-        " ",
-    )
-    d = d.select(
-        key_shift("doc_id", 10_000_000),
-        tagged.alias("text"),
-        "lang",
-        "source",
-        F.length(tagged).alias("n_chars"),
-    )
-    d.repartition(8).write.parquet(f"{OUT}/documents.parquet")
-
-    emb = load_table(spark, BASE, "embeddings").select("*", rep)
-    # decorrelate replicas with a per-(rep, dim) random SIGN FLIP: an isometry
-    # within each replica (all intra-replica cosines preserved exactly) that
-    # drives cross-replica cosines to ~0 — verbatim copies would plant 10
-    # identical twins per vector (C(10,2)×n true near-dup pairs and ~100×
-    # candidate growth), turning the near-dup scale row into an output-size
-    # artifact instead of an operator measurement
-    flip = F.transform(
-        "embedding",
-        lambda x, i: x * (1 - 2 * F.pmod(F.hash(F.col("rep"), i), F.lit(2))).cast("float"),
-    )
-    emb = emb.select(
-        key_shift("vec_id", 10_000_000),
-        flip.alias("embedding"),
-        *[col for col in emb.columns if col not in ("vec_id", "embedding", "rep")],
-    )
-    emb.repartition(8).write.parquet(f"{OUT}/embeddings.parquet")
-
-    for t in ("region", "nation", "supplier", "part"):
-        load_table(spark, BASE, t).write.parquet(f"{OUT}/{t}.parquet")
-    open(f"{OUT}/_DONE", "w").write(MARKER)
-
-
-def run(spark, qs, sf_dir: str) -> dict[str, float]:
-    times = {}
-    for name in QUERIES:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).count()
-        times[name] = round(time.perf_counter() - t0, 3)
-    return times
+def amplify(base: str = BASE, out: str = OUT, k: int = K) -> dict:
+    """Write the ``k``-fold copy of ``base`` to ``out`` unless it is already
+    there; returns {table: {"rows", "bytes"}}. No JVM: pyarrow in and out."""
+    sizes = gen.read_sizes(out)
+    if sizes is None:
+        tables = {t: pq.read_table(os.path.join(base, f"{t}.parquet")) for t in gen.TABLES}
+        sizes = gen.write_dataset(gen.amplify(tables, k), out, files=8)
+    return sizes
 
 
 def _measure(sf_dir: str) -> None:
     """Subprocess entry: fresh JVM, warm one query, time the suite once."""
-    from aws_etl_microservice_redshift_datalake_spark import all_queries, get_session
-
-    spark = get_session("scale-measure")
-    qs = all_queries()
-    qs["q_pricing_summary"](spark, sf_dir).count()  # JIT/session warmup
-    print("SCALE_RESULT " + json.dumps(run(spark, qs, sf_dir)))
-
-
-def _paircount() -> None:
-    """Subprocess entry (VERDICT r6 #2): count the RAW within-cell candidate
-    pairs of the clustered semantic family (multi-probe duplicates included —
-    the actual dot-product evaluations the candidate stage performs, BEFORE
-    the sim threshold) at both scales, and assert the growth matches the
-    analytic Σ|cell|² ≈ n^1.5 shape (factor ≈ K^1.5 with √n cells), not the
-    quadratic K² an all-pairs plan would show. This certifies the
-    q_cross_lingual_neardup_clustered wall-clock factor is join/hydration +
-    host noise, not candidate blowup."""
-    from pyspark.sql import functions as F
+    from bench import time_queries
 
     from aws_etl_microservice_redshift_datalake_spark import get_session
+
+    spark = get_session("scale-measure")
+    time_queries(spark, QUERIES[:1], sf_dir, 1)  # JIT/session warmup
+    print("RESULT " + json.dumps(time_queries(spark, QUERIES, sf_dir, 1)))
+
+
+def _ivf_cell_pairs(spark, sf_dir: str) -> int:
+    from pyspark.sql import functions as F
+
     from aws_etl_microservice_redshift_datalake_spark.operators.vectors import (
         build_ivf_index,
     )
 
-    spark = get_session("scale-paircount")
-    counts = {}
-    for sf_dir in (BASE, OUT):
-        index, _cents = build_ivf_index(spark, sf_dir, n_assign=3)
-        left = index.select("cell", F.col("t_id").alias("id_a"))
-        right = index.select("cell", F.col("t_id").alias("id_b"))
-        counts[sf_dir] = (
-            left.join(right.hint("shuffle_hash"), "cell")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .count()
-        )
-    assert counts[BASE] > 0, (
-        f"base candidate count is 0 at {BASE} — the linearity "
-        "certification is vacuous (empty candidate stage means the "
-        "fixture or the blocking broke, not that growth is linear)"
+    index, _cents = build_ivf_index(spark, sf_dir, n_assign=3)
+    left = index.select("cell", F.col("t_id").alias("id_a"))
+    right = index.select("cell", F.col("t_id").alias("id_b"))
+    return (
+        left.join(right.hint("shuffle_hash"), "cell")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .count()
     )
-    factor = counts[OUT] / counts[BASE]
-    bound = K**1.5 * 1.5  # 1.5× slack for cell-size imbalance at √n cells
-    assert factor <= bound, (
-        f"within-cell candidate pairs grew {factor:.1f}× at {K}× rows "
-        f"(> n^1.5 bound {bound:.0f}×): the clustered candidate stage is "
-        "super-linear — check cell sizing in build_ivf_index"
-    )
-    print("PAIR_RESULT " + json.dumps({"base": counts[BASE], "amplified": counts[OUT]}))
 
 
-def _setsimcount() -> None:
-    """Subprocess entry (VERDICT r10 #4): count q_setsim_join's DISTINCT
-    candidate pairs (post prefix/length/positional prunes, pre-verify) at
-    both scales and assert ~linear growth. The amplified corpus decorrelates
-    replicas (per-token replica tags), so each replica's shingles live in
-    their own token space: per-shingle document frequencies are unchanged,
-    prefix lengths depend only on set size (unchanged), and candidates can
-    only pair within a replica — the analytic expectation is exactly K×.
-    A super-linear count here would mean the prefix filter degraded toward
-    all-pairs (the 2.2× wall factor alone could not distinguish that from
-    shuffle overhead — this count can)."""
-    from pyspark.sql import functions as F  # noqa: F401 — session warm path
+def _setsim_pairs(spark, sf_dir: str) -> int:
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
 
+    return dedup.setsim_candidates(
+        dedup._shingle_arrays_persisted(spark, sf_dir),
+        dedup.SETSIM_TAU,
+        pref=dedup._setsim_prefix_persisted(spark, sf_dir),
+    ).count()
+
+
+def _simhash_pairs(spark, sf_dir: str) -> int:
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+    from aws_etl_microservice_redshift_datalake_spark.sources.io import load_spread
+
+    docs = load_spread(spark, sf_dir, "documents")
+    return dedup.simhash_candidates(
+        dedup.simhash_wide(docs), dedup.SIMHASH_HAM_K
+    ).count()
+
+
+def _containment_pairs(spark, sf_dir: str) -> int:
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    return dedup.containment_candidates(
+        dedup._shingle_arrays_persisted(spark, sf_dir),
+        dedup.CONTAIN_TAU,
+        pref=dedup._containment_prefix_persisted(spark, sf_dir),
+        post=dedup._containment_postings_persisted(spark, sf_dir),
+    ).count()
+
+
+# Candidate-count certifications: name -> (counter, bound on the amplified /
+# base count). Wall-clock factors cannot tell a degraded candidate stage from
+# shuffle overhead; these counts can. An all-pairs plan would grow K².
+COUNTS = {
+    # Raw within-cell pairs of the clustered semantic family, multi-probe
+    # duplicates included (the dot products evaluated before the sim
+    # threshold): Σ|cell|² ≈ n^1.5 with √n cells, so K^1.5, with 1.5× slack
+    # for cell-size imbalance. Check cell sizing in build_ivf_index.
+    "ivf": (_ivf_cell_pairs, K**1.5 * 1.5),
+    # q_setsim_join's distinct post-prune pairs: replicas have disjoint
+    # token spaces, so per-shingle df and prefix lengths are unchanged and
+    # pairs stay within a replica — exactly K×; 1.5× slack for boundary and
+    # df-tie noise. Check the canonical order / positional prune.
+    "setsim": (_setsim_pairs, K * 1.5),
+    # q_simhash_hamming_join's distinct post-block pairs: correlated
+    # within-replica collisions grow K×; random cross-replica block
+    # collisions are quadratic in principle, C(n, 2)·(k+1)/2^15, but under
+    # 1% of the total at this corpus size (printed in SCALE.md). Check block
+    # extraction / fingerprint balance.
+    "simhash": (_simhash_pairs, K * 1.5),
+    # q_containment_join's distinct candidates: probe prefix × FULL
+    # postings, the family's highest fan-out in principle; pairs stay within
+    # a replica, so K×. Check the positional prune in containment_join_sets.
+    "containment": (_containment_pairs, K * 1.5),
+}
+
+
+def _count(name: str) -> None:
+    """Subprocess entry: count one candidate stage at both scales and assert
+    its growth stays under the bound in ``COUNTS``."""
     from aws_etl_microservice_redshift_datalake_spark import get_session
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        SETSIM_TAU,
-        _setsim_prefix_persisted,
-        _shingle_arrays_persisted,
-        setsim_candidates,
-    )
 
-    spark = get_session("scale-setsimcount")
-    counts = {}
-    for sf_dir in (BASE, OUT):
-        counts[sf_dir] = setsim_candidates(
-            _shingle_arrays_persisted(spark, sf_dir),
-            SETSIM_TAU,
-            pref=_setsim_prefix_persisted(spark, sf_dir),
-        ).count()
-    assert counts[BASE] > 0, (
-        f"base candidate count is 0 at {BASE} — the linearity "
-        "certification is vacuous (empty candidate stage means the "
-        "fixture or the blocking broke, not that growth is linear)"
+    counter, bound = COUNTS[name]
+    spark = get_session(f"scale-count-{name}")
+    base, amplified = (counter(spark, d) for d in (BASE, OUT))
+    assert base > 0, (
+        f"base {name} candidate count is 0 at {BASE} — the certification is "
+        "vacuous (the fixture or the blocking broke)"
     )
-    factor = counts[OUT] / counts[BASE]
-    bound = K * 1.5  # 1.5× slack for boundary/df-tie noise on a K× corpus
-    assert factor <= bound, (
-        f"setsim candidate pairs grew {factor:.1f}× at {K}× rows (> linear "
-        f"bound {bound:.0f}×): the prefix filter is degrading toward "
-        "all-pairs — check the canonical order / positional prune in "
-        "setsim_candidates"
+    assert amplified / base <= bound, (
+        f"{name} candidate pairs grew {amplified / base:.1f}× at {K}× rows "
+        f"(> bound {bound:.0f}×): the candidate stage is degrading toward all-pairs"
     )
-    print(
-        "SETSIM_RESULT "
-        + json.dumps({"base": counts[BASE], "amplified": counts[OUT]})
-    )
+    print("RESULT " + json.dumps({"base": base, "amplified": amplified}))
 
 
-def _simhashcount() -> None:
-    """Subprocess entry (VERDICT r11 #3): count q_simhash_hamming_join's
-    DISTINCT post-block candidate pairs (pre-verify) at both scales and
-    assert ~linear growth. The stage is the one candidate relation with a
-    quadratic-in-principle term: besides the true/correlated collisions
-    (docs sharing a 15-bit block because their fingerprints correlate —
-    this replicates per decorrelated replica, so it grows K×), RANDOM
-    block collisions occur across replicas at (k+1)/2^15 per pair —
-    C(K·n, 2)·1.22e-4 pairs, quadratic in corpus. At n=5,000/replica that
-    analytic cross term is ~1.5e5 vs a ~2.4e6/replica correlated base
-    (~0.7% of the ×10 total), so the measured factor must read ≈K; a
-    factor approaching K² would mean the blocking degraded toward
-    all-pairs (block-value skew, fingerprint bug). The analytic cross
-    term is printed so the SCALE.md note records the decomposition."""
-    from pyspark.sql import functions as F  # noqa: F401 — session warm path
-
-    from aws_etl_microservice_redshift_datalake_spark import get_session
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        SIMHASH_HAM_K,
-        simhash_candidates,
-        simhash_wide,
+def _child(*args: str, env: dict | None = None) -> dict:
+    """Run this script with ``args`` in a fresh process; its RESULT line."""
+    p = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), *args],
+        capture_output=True, text=True, timeout=3600, env=env,
     )
-    from aws_etl_microservice_redshift_datalake_spark.sources.io import (
-        load_spread,
-    )
-
-    spark = get_session("scale-simhashcount")
-    counts = {}
-    ndocs = {}
-    for sf_dir in (BASE, OUT):
-        d = load_spread(spark, sf_dir, "documents")
-        ndocs[sf_dir] = d.count()
-        counts[sf_dir] = simhash_candidates(
-            simhash_wide(d), SIMHASH_HAM_K
-        ).count()
-    assert counts[BASE] > 0, (
-        f"base candidate count is 0 at {BASE} — the linearity "
-        "certification is vacuous (empty candidate stage means the "
-        "fixture or the blocking broke, not that growth is linear)"
-    )
-    factor = counts[OUT] / counts[BASE]
-    n_out = ndocs[OUT]
-    # expected cross-replica random collisions at the amplified scale
-    cross = n_out * (n_out - 1) / 2 * (SIMHASH_HAM_K + 1) * 2.0**-15
-    bound = K * 1.5  # 1.5× slack: per-replica correlated-collision counts
-    # vary with the replica hash space, + the (documented, ~0.7%) cross term
-    assert factor <= bound, (
-        f"simhash candidate pairs grew {factor:.1f}× at {K}× rows (> linear "
-        f"bound {bound:.0f}×): the pigeonhole blocking is degrading toward "
-        "all-pairs — check block extraction / fingerprint balance in "
-        "simhash_candidates"
-    )
-    print(
-        "SIMHASH_RESULT "
-        + json.dumps(
-            {
-                "base": counts[BASE],
-                "amplified": counts[OUT],
-                "cross_expected": int(cross),
-            }
-        )
-    )
-
-
-def _containcount() -> None:
-    """Subprocess entry (r12, the setsim/simhash precedent): count
-    q_containment_join's DISTINCT candidate pairs (post probe-prefix +
-    length + positional prunes, pre-verify) at both scales and assert
-    ~linear growth. The probe-prefix × FULL-posting join is the family's
-    highest-fan-out candidate stage in principle (the indexed side is
-    every token, not a prefix); decorrelated replicas keep candidates
-    within a replica, so the analytic expectation is K×."""
-    from pyspark.sql import functions as F  # noqa: F401 — session warm path
-
-    from aws_etl_microservice_redshift_datalake_spark import get_session
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        CONTAIN_TAU,
-        _containment_postings_persisted,
-        _containment_prefix_persisted,
-        _shingle_arrays_persisted,
-        containment_candidates,
-    )
-
-    spark = get_session("scale-containcount")
-    counts = {}
-    for sf_dir in (BASE, OUT):
-        counts[sf_dir] = containment_candidates(
-            _shingle_arrays_persisted(spark, sf_dir),
-            CONTAIN_TAU,
-            pref=_containment_prefix_persisted(spark, sf_dir),
-            post=_containment_postings_persisted(spark, sf_dir),
-        ).count()
-    assert counts[BASE] > 0, (
-        f"base candidate count is 0 at {BASE} — the linearity "
-        "certification is vacuous (empty candidate stage means the "
-        "fixture or the blocking broke, not that growth is linear)"
-    )
-    factor = counts[OUT] / counts[BASE]
-    bound = K * 1.5
-    assert factor <= bound, (
-        f"containment candidate pairs grew {factor:.1f}× at {K}× rows "
-        f"(> linear bound {bound:.0f}×): the probe-prefix filter is "
-        "degrading toward all-pairs — check the canonical order / "
-        "positional prune in containment_join_sets"
-    )
-    print(
-        "CONTAIN_RESULT "
-        + json.dumps({"base": counts[BASE], "amplified": counts[OUT]})
-    )
+    for line in reversed(p.stdout.splitlines()):
+        if line.startswith("RESULT "):
+            return json.loads(line[len("RESULT "):])
+    print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
+    raise RuntimeError(f"scale_check {' '.join(args)} failed (exit {p.returncode})")
 
 
 def main() -> None:
-    # Measurement protocol: amplification runs in its OWN process (a 32-core
-    # write job leaves the JVM/page cache in a state that measurably inflates
-    # the timings that follow it — observed 3-5× on the first queries), then
-    # each (scale, repetition) is timed in a FRESH process; per-query time is
+    # Each (scale, repetition) is timed in a FRESH process; per-query time is
     # the MIN over repetitions, which strips GC/compaction/page-cache noise
     # while preserving the algorithmic cost being compared.
-    import subprocess
+    if sys.argv[1:2] == ["--measure"]:
+        return _measure(sys.argv[2])
+    if sys.argv[1:2] == ["--count"]:
+        return _count(sys.argv[2])
 
-    if len(sys.argv) > 2 and sys.argv[1] == "--measure":
-        _measure(sys.argv[2])
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--paircount":
-        _paircount()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--setsimcount":
-        _setsimcount()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--simhashcount":
-        _simhashcount()
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "--containcount":
-        _containcount()
-        return
+    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
+        SIMHASH_HAM_K,
+    )
 
-    from aws_etl_microservice_redshift_datalake_spark import get_session
-
-    spark = get_session("scale-amplify")
     print(f"amplifying {BASE} x{K} -> {OUT}", file=sys.stderr)
-    amplify(spark)
-    spark.stop()
-
-    reps: dict[str, list[dict]] = {BASE: [], OUT: []}
+    sizes = amplify()
+    # core-scaling column: the amplified corpus again at half the cores —
+    # queries that look serial at the base scale (fixed per-job latency
+    # dominates) must show their data parallelism where the data is big
+    # enough to use the cores. ratio = t(half)/t(all) at ×K; ≈2 = perfect,
+    # ≈1 = still latency-bound at this scale.
+    half = max(1, CPUS // 2)
+    half_env = dict(os.environ, SPARK_GRAFT_CPUS=str(half))
+    runs: dict[str, list[dict]] = {BASE: [], OUT: [], "half": []}
     for rep in range(2):
         for sf_dir in (BASE, OUT):
-            p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--measure", sf_dir],
-                capture_output=True, text=True, timeout=3600,
-            )
-            line = [l for l in p.stdout.splitlines() if l.startswith("SCALE_RESULT ")]
-            if not line:
-                print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-                raise RuntimeError(f"measurement failed for {sf_dir} (rep {rep})")
-            reps[sf_dir].append(json.loads(line[-1][len("SCALE_RESULT "):]))
-            print(f"rep {rep} {sf_dir}: done", file=sys.stderr)
-
-    # core-scaling column (r15, VERDICT r14 #8): the amplified corpus again
-    # at 8 cores — queries that look serial at sf0.1 (fixed per-job latency
-    # dominates) must show their data parallelism where the data is big
-    # enough to use the cores. ratio = t(8c)/t(32c) at ×K; ≈4 = perfect,
-    # ≈1 = still latency-bound at this scale.
-    c8_reps: list[dict] = []
-    env8 = dict(os.environ, SPARK_GRAFT_CPUS="8")
-    for rep in range(2):
-        p = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--measure", OUT],
-            capture_output=True, text=True, timeout=3600, env=env8,
-        )
-        line = [l for l in p.stdout.splitlines() if l.startswith("SCALE_RESULT ")]
-        if not line:
-            print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-            raise RuntimeError(f"8-core measurement failed (rep {rep})")
-        c8_reps.append(json.loads(line[-1][len("SCALE_RESULT "):]))
-        print(f"rep {rep} {OUT} @8c: done", file=sys.stderr)
-
-    base_t = {q: min(r[q] for r in reps[BASE]) for q in QUERIES}
-    big_t = {q: min(r[q] for r in reps[OUT]) for q in QUERIES}
-    c8_t = {q: min(r[q] for r in c8_reps) for q in QUERIES}
-
-    # candidate-pair-count certification for the clustered semantic family
-    # (VERDICT r6 #2) — runs in its own process like the timings, asserts
-    # the n^1.5 bound inside _paircount, and feeds the notes below.
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--paircount"],
-        capture_output=True, text=True, timeout=3600,
+            runs[sf_dir].append(_child("--measure", sf_dir))
+        runs["half"].append(_child("--measure", OUT, env=half_env))
+        print(f"rep {rep}: done", file=sys.stderr)
+    base_t, big_t, half_t = (
+        {q: min(r[q] for r in runs[key]) for q in QUERIES}
+        for key in (BASE, OUT, "half")
     )
-    pline = [l for l in p.stdout.splitlines() if l.startswith("PAIR_RESULT ")]
-    if not pline:
-        print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError("pair-count certification failed")
-    pc = json.loads(pline[-1][len("PAIR_RESULT "):])
-    pair_factor = pc["amplified"] / pc["base"]
-
-    # setsim candidate-count certification (VERDICT r10 #4) — same protocol:
-    # own process, linearity asserted inside _setsimcount, feeds the notes.
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--setsimcount"],
-        capture_output=True, text=True, timeout=3600,
+    counts = {name: _child("--count", name) for name in COUNTS}
+    pc, sc, hc, cc = (counts[n] for n in ("ivf", "setsim", "simhash", "containment"))
+    pair_factor, setsim_factor, simhash_factor, contain_factor = (
+        c["amplified"] / c["base"] for c in (pc, sc, hc, cc)
     )
-    sline = [
-        l for l in p.stdout.splitlines() if l.startswith("SETSIM_RESULT ")
-    ]
-    if not sline:
-        print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError("setsim candidate-count certification failed")
-    sc = json.loads(sline[-1][len("SETSIM_RESULT "):])
-    setsim_factor = sc["amplified"] / sc["base"]
-
-    # simhash candidate-count certification (VERDICT r11 #3) — same
-    # protocol: own process, linearity asserted inside _simhashcount.
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--simhashcount"],
-        capture_output=True, text=True, timeout=3600,
-    )
-    hline = [
-        l for l in p.stdout.splitlines() if l.startswith("SIMHASH_RESULT ")
-    ]
-    if not hline:
-        print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError("simhash candidate-count certification failed")
-    hc = json.loads(hline[-1][len("SIMHASH_RESULT "):])
-    simhash_factor = hc["amplified"] / hc["base"]
-
-    # containment candidate-count certification (r12) — same protocol.
-    p = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), "--containcount"],
-        capture_output=True, text=True, timeout=3600,
-    )
-    cline = [
-        l for l in p.stdout.splitlines() if l.startswith("CONTAIN_RESULT ")
-    ]
-    if not cline:
-        print(p.stdout[-2000:], p.stderr[-4000:], file=sys.stderr)
-        raise RuntimeError("containment candidate-count certification failed")
-    cc = json.loads(cline[-1][len("CONTAIN_RESULT "):])
-    contain_factor = cc["amplified"] / cc["base"]
+    n_out = sizes["documents"]["rows"]
+    cross = int(n_out * (n_out - 1) / 2 * (SIMHASH_HAM_K + 1) * 2.0**-15)
 
     lines = [
         "# SCALE — wall-clock scaling of headline operators",
         "",
-        f"Same plans at sf0.1 vs a {K}× amplified copy (key-shifted, "
-        "decorrelated replicas; dims fixed; dup structure preserved per "
-        "replica). Each scale is timed in a fresh process, min of 2 reps. A "
-        "shuffle-minimal operator should scale ≈ linearly in rows (factor "
-        f"≈ {K} or below on 32 cores as fixed overhead amortizes); "
-        "super-linear growth flags a pairwise/quadratic plan. The last two "
-        f"columns (r15) re-time the ×{K} corpus at 8 cores: 8c/32c ≈ 4 is "
-        "perfect core scaling, ≈ 1 means the query is still per-job-latency "
-        "bound even at this scale. Regenerate: `python scale_check.py`.",
+        f"Base: `{BASE}`. Amplified: its {K}× copy from `perfbench/gen.py` "
+        "`amplify` (key-shifted, decorrelated replicas; dims fixed; dup "
+        "structure preserved per replica). Cores: `local["
+        f"{CPUS}]` on a {os.cpu_count()}-core host, and `local[{half}]` for "
+        "the last two columns. Timing rule: `bench.time_queries` — every "
+        "session memo cleared, then the query built and its whole result "
+        "written to the `noop` sink; each scale in a fresh process, min of 2 "
+        "reps. A shuffle-minimal operator should scale ≈ linearly in rows "
+        f"(factor ≈ {K} or below as fixed overhead amortizes); super-linear "
+        f"growth flags a pairwise/quadratic plan. The last two columns re-time "
+        f"the ×{K} corpus at {half} cores: {half}c/{CPUS}c ≈ {CPUS / half:g} "
+        "is perfect core scaling, ≈ 1 means the query is still "
+        "per-job-latency bound even at this scale. Regenerate: "
+        "`python scale_check.py`.",
         "",
-        "| query | sf0.1 (s) | ×" + str(K) + " (s) | factor | ×"
-        + str(K) + "@8c (s) | 8c/32c |",
+        f"| query | {BASE_NAME} (s) | ×{K} (s) | factor | ×{K}@{half}c (s) "
+        f"| {half}c/{CPUS}c |",
         "| --- | --- | --- | --- | --- | --- |",
     ]
     def _fac(name: str) -> float:
         return big_t[name] / base_t[name] if base_t[name] > 0 else float("nan")
 
     def _core(name: str) -> float:
-        return c8_t[name] / big_t[name] if big_t[name] > 0 else float("nan")
+        return half_t[name] / big_t[name] if big_t[name] > 0 else float("nan")
 
     for name in QUERIES:
         lines.append(
             f"| {name} | {base_t[name]:.2f} | {big_t[name]:.2f} | "
-            f"{_fac(name):.1f}× | {c8_t[name]:.2f} | {_core(name):.1f} |"
+            f"{_fac(name):.1f}× | {half_t[name]:.2f} | {_core(name):.1f} |"
         )
     lines += [
         "",
@@ -673,44 +415,38 @@ def main() -> None:
         "compute and serialization; measured 12.75 s lazy-cached vs 2.95 s",
         "uncached vs ~2.5 s barriered for minhash at ×10). Sub-second rows",
         "(stratified/mixture/decontaminate/pack) are dominated by fixed",
-        "session/job overhead in the fresh-process protocol — warm-session",
-        "re-measurement shows them flat-to-faster at ×10; treat factors on",
+        "session/job overhead in the fresh-process protocol; treat factors on",
         "sub-second absolutes as noise floor, not scaling signal.",
         "`q_ann_topk`/`q_knn_classify` are linear in corpus size by",
         "construction (broadcast queries × streamed targets).",
         "`q_sql_waiting_orders`/`q_merge_upsert` are pure hash semi/anti/",
-        "full-outer joins — near-flat factors as 32 cores amortize fixed",
-        "overhead. `q_dq_profile` spreads the single-file base scan before",
+        "full-outer joins, linear by construction. `q_dq_profile` spreads",
+        "the single-file base scan before",
         "its compute-bound count-distinct Expand (metadata-gated repartition,",
         "a no-op on multi-file corpora — which 100 TB input always is), so",
         "both scales get full parallelism and the factor reads the operator,",
         "not the file layout. Round 5: the clustered semantic family",
         "(`q_semdedup_clustered` / `q_decontaminate_semantic_clustered` /",
         "`q_cross_lingual_neardup_clustered`) has within-cell pair work",
-        "Σ|cell|² ≈ 9·n^1.5 with √n cells and top-3 multi-probe, so the",
-        f"expected wall factor at {K}× rows is ~√{K} ≈ {K**0.5:.1f}× on the",
-        "pair stage plus the once-per-process IVF training shared by all",
-        "three. semdedup/decontaminate sit at or under that bound;",
+        "Σ|cell|² ≈ 9·n^1.5 with √n cells and top-3 multi-probe, so pair",
+        f"work grows ~{K}^1.5 ≈ {K**1.5:.0f}× at {K}× rows, and each query pays",
+        "the IVF training cold. Their wall factors",
+        f"({_fac('q_semdedup_clustered'):.1f}x, {_fac('q_decontaminate_semantic_clustered'):.1f}x, "
+        f"{_fac('q_cross_lingual_neardup_clustered'):.1f}x) sit between the row",
+        "and the pair growth;",
         "`q_cross_lingual_neardup_clustered` adds a corpus-sized language-",
-        "hydration join after the pair stage and has measured 4.0-5.7x",
-        "across quiet/contended windows on this host. Its candidate stage",
-        "is now certified DIRECTLY (VERDICT r6 #2): the raw within-cell",
-        f"pair count measured {pc['base']:,} at sf0.1 -> {pc['amplified']:,}",
+        "hydration join after the pair stage. Its candidate stage is",
+        "certified DIRECTLY: the raw within-cell",
+        f"pair count measured {pc['base']:,} at {BASE_NAME} -> {pc['amplified']:,}",
         f"at x{K} = {pair_factor:.1f}x, against the analytic n^1.5 bound",
         f"~{K**1.5:.0f}x and far from the {K**2}x an all-pairs plan would",
-        "show (asserted in scale_check.py --paircount on every regenerate;",
+        "show (asserted in scale_check.py --count ivf on every regenerate;",
         "treat residual wall-clock factor swings per the BASELINE.md noise",
         "protocol).",
-        "`q_dedup_clusters`'s factor reads the star-contraction rounds:",
-        "edge count grows 10× and the round count grows O(log²), with each",
-        "round a fixed-latency checkpointed job (one action per two star",
-        "rounds since round 5).",
-        "Round 10: the cross-lingual wall-factor question is adjudicated",
-        "CLOSED — decomposition shows the certified pair stage (31x pair",
-        "growth at 10x rows on the n^1.5 curve) times its ~0.15 s base",
-        "share, plus near-flat memoized-probe/hydration work, reproduces",
-        "the measured x10 wall exactly; the lang joins are already",
-        "id-equi-joins on a 2-column projection, nothing to narrow.",
+        "`q_dedup_clusters`'s factor reads its minhash pair stage: the",
+        "verified-pair graph stays under `dedup.CC_DRIVER_MAX_EDGES` at both",
+        "scales, so connected components is one edge collect and a NumPy",
+        "solve on the driver, not the Spark star-contraction rounds.",
         "`q_bm25_search`'s fixed KW_TERMS match nothing on the token-tagged",
         "amplified corpus (the q_keyword_search precedent): the top-k is",
         "legally empty while the row-local tf/dl scan arithmetic — the",
@@ -724,11 +460,11 @@ def main() -> None:
         "the driver-fixture base corpus is its worst case (tiny vocab =>",
         "every shingle common => 409k candidates from 12.5M pairs at",
         "sf0.1); the decorrelated x10 corpus shows the realistic regime.",
-        "Round 11: its candidate stage is certified DIRECTLY (VERDICT r10",
-        f"#4): distinct post-prune candidate pairs measured {sc['base']:,}",
-        f"at sf0.1 -> {sc['amplified']:,} at x{K} = {setsim_factor:.2f}x —",
+        "Its candidate stage is certified DIRECTLY:",
+        f"distinct post-prune candidate pairs measured {sc['base']:,}",
+        f"at {BASE_NAME} -> {sc['amplified']:,} at x{K} = {setsim_factor:.2f}x —",
         f"linear in corpus size (bound {K}x + 1.5x slack, asserted in",
-        "scale_check.py --setsimcount on every regenerate; replicas are",
+        "scale_check.py --count setsim on every regenerate; replicas are",
         "decorrelated so candidates pair only within a replica and the",
         "analytic expectation is exactly Kx), far from the K^2 = "
         f"{K**2}x an all-pairs degradation would show. The wall factor",
@@ -741,9 +477,9 @@ def main() -> None:
         f"`q_quantized_search` ({_fac('q_quantized_search'):.1f}x) are scan-bound row-local arithmetic;",
         f"`q_simhash_hamming_join` ({_fac('q_simhash_hamming_join'):.1f}x) is the pigeonhole-blocked join —",
         'signature aggregation linear, candidates pair only within replicas;',
-        f"`q_cluster_split` ({_fac('q_cluster_split'):.1f}x) rides the dedup_clusters CC plan (shared",
-        'memoized pair relation) plus one broadcast join, so its factor',
-        "tracks the cluster query's round count, not corpus volume.",
+        f"`q_cluster_split` ({_fac('q_cluster_split'):.1f}x) rides the dedup_clusters plan (the same",
+        'pair stage and driver-side CC solve) plus one broadcast join, so',
+        "its factor tracks q_dedup_clusters'.",
         "",
         f"Round 12 members: `q_gopher_rules` ({_fac('q_gopher_rules'):.1f}x) and",
         f"`q_c4_filters` ({_fac('q_c4_filters'):.1f}x) are scan-bound row-local rule",
@@ -758,25 +494,25 @@ def main() -> None:
         "sublinearly (Heaps' law), so this corpus is the adversarial case",
         "for the vocab join, and the factor still sits well under linear.",
         "",
-        "Round 12: `q_simhash_hamming_join`'s candidate stage is certified",
-        "DIRECTLY (VERDICT r11 #3, the setsim precedent): distinct",
-        f"post-block candidate pairs measured {hc['base']:,} at sf0.1 ->",
+        "`q_simhash_hamming_join`'s candidate stage is certified",
+        "DIRECTLY (the setsim precedent): distinct",
+        f"post-block candidate pairs measured {hc['base']:,} at {BASE_NAME} ->",
         f"{hc['amplified']:,} at x{K} = {simhash_factor:.2f}x — linear in",
         f"corpus (bound {K}x + 1.5x slack, asserted in scale_check.py",
-        "--simhashcount on every regenerate). Decomposition: correlated",
+        "--count simhash on every regenerate). Decomposition: correlated",
         "within-replica collisions replicate Kx (replicas are",
         "decorrelated); the quadratic-in-principle cross-replica RANDOM",
-        f"term is analytically C(n,2)*(k+1)/2^15 ~ {hc['cross_expected']:,}",
+        f"term is analytically C(n,2)*(k+1)/2^15 ~ {cross:,}",
         "pairs at the amplified scale — under 1% of the measured total, so",
         f"the factor reads the linear term, far from the K^2 = {K**2}x an",
         "all-pairs degradation would show.",
         "",
-        "Round 12b: `q_containment_join`'s candidate stage (probe-prefix x",
+        "`q_containment_join`'s candidate stage (probe-prefix x",
         "FULL postings — the family's highest fan-out in principle) is",
         f"certified the same way: {cc['base']:,} distinct candidate pairs",
-        f"at sf0.1 -> {cc['amplified']:,} at x{K} = {contain_factor:.2f}x",
+        f"at {BASE_NAME} -> {cc['amplified']:,} at x{K} = {contain_factor:.2f}x",
         f"(bound {K}x + 1.5x slack, asserted in scale_check.py",
-        "--containcount on every regenerate; decorrelated replicas pair",
+        "--count containment on every regenerate; decorrelated replicas pair",
         "only within a replica).",
         "",
         f"Round 13 members: `q_doremi_mixture` ({_fac('q_doremi_mixture'):.1f}x) is the dsir",
@@ -794,7 +530,8 @@ def main() -> None:
         "bit-relation volume, not filter occupancy.",
         "",
     ]
-    open("/root/repo/SCALE.md", "w").write("\n".join(lines))
+    with open(os.path.join(ROOT, "SCALE.md"), "w") as f:
+        f.write("\n".join(lines))
     print(json.dumps({"base": base_t, "amplified": big_t, "k": K}))
 
 

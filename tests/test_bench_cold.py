@@ -1,14 +1,24 @@
-"""Focused tests for the r15 cold-bench hook (clear_session_memos), the
-verify-window sweep subset (conftest.sweep_subset) — VERDICT r14 #2/#3 —
-and connected_components' cost contract: no session-conf mutation and a
-cold job-count pin."""
+"""Focused tests for the one query-timing rule (``bench.time_queries``:
+memos cleared before every rep, the whole result written to the noop sink)
+and its memo hook (clear_session_memos), the scale harness's amplified copy
+(``scale_check.amplify``), the verify-window sweep subset
+(conftest.sweep_subset), and connected_components' cost contract: no
+session-conf mutation and a cold job-count pin."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
 import aws_etl_microservice_redshift_datalake_spark as engine
+from aws_etl_microservice_redshift_datalake_spark import registry
 from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
     _tables,
     clear_session_memos,
+    session_memo,
 )
 
 from tests.conftest import SF_MED, SF_SMALL, sweep_subset
@@ -31,6 +41,72 @@ def test_clear_session_memos_drops_and_rebuilds(spark):
     df2 = _minhash_pairs_persisted(spark, SF_SMALL)
     assert df2.count() == n1
     assert df1.exceptAll(df2).isEmpty() and df2.exceptAll(df1).isEmpty()
+
+
+def test_time_queries_evaluates_every_column(spark, monkeypatch):
+    # count() on this frame returns 3: Catalyst prunes the raising column.
+    # The timed action must compute every output column.
+    import bench
+    from pyspark.sql import functions as F
+
+    def probe(s, sf_dir):
+        return s.range(3).select("id", F.raise_error(F.lit("x")).alias("x"))
+
+    monkeypatch.setitem(registry._QUERIES, "q_probe_raise", probe)
+    assert probe(spark, SF_SMALL).count() == 3
+    with pytest.raises(Exception, match="x"):
+        bench.time_queries(spark, ["q_probe_raise"], SF_SMALL, 1)
+
+
+def test_time_queries_clears_memos_before_every_rep(spark, monkeypatch):
+    import bench
+
+    seen = []
+
+    def probe(s, sf_dir):
+        seen.append(len(_tables(s)[0]))
+        session_memo("q_probe_memo", s, sf_dir, 0, lambda: s.range(2))
+        return s.range(1)
+
+    monkeypatch.setitem(registry._QUERIES, "q_probe_memo", probe)
+    session_memo("q_probe_memo", spark, SF_SMALL, 0, lambda: spark.range(2))
+    assert len(_tables(spark)[0]) >= 1
+    times = bench.time_queries(spark, ["q_probe_memo"], SF_SMALL, 2)
+    assert seen == [0, 0] and set(times) == {"q_probe_memo"}
+    clear_session_memos(spark)
+
+
+def test_scale_amplify_doubles_facts_only(spark, tmp_path):
+    import scale_check
+
+    out = str(tmp_path / "x2")
+    sizes = scale_check.amplify(SF_SMALL, out, 2)
+
+    def read(sf_dir, t):
+        return pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+
+    for t in ("region", "nation", "supplier", "part"):
+        assert read(out, t).equals(read(SF_SMALL, t)), t
+    keys = {
+        "customer": ["c_custkey"],
+        "orders": ["o_orderkey", "o_custkey"],
+        "lineitem": ["l_orderkey"],
+        "events": ["event_id", "user_id"],
+        "documents": ["doc_id"],
+        "embeddings": ["vec_id"],
+    }
+    for t, cols in keys.items():
+        base, amp = read(SF_SMALL, t), read(out, t)
+        assert sizes[t]["rows"] == amp.num_rows == 2 * base.num_rows, t
+        for c in cols:  # each replica's keys are disjoint from the other's
+            n = pc.count_distinct(base[c]).as_py()
+            assert pc.count_distinct(amp[c]).as_py() == 2 * n, (t, c)
+    assert scale_check.amplify(SF_SMALL, out, 2) == sizes  # cached copy
+
+    q = engine.all_queries()["q_ngram_jaccard"]
+    n_base = len(q(spark, SF_SMALL).collect())
+    assert n_base > 0
+    assert len(q(spark, out).collect()) == 2 * n_base
 
 
 def test_dedup_sets_no_session_conf():
