@@ -1,9 +1,9 @@
 """Session-owned memo for persisted relations shared across queries.
 
-Some operator families (MinHash shingles and pairs, CC labels, set-
-similarity prefixes, LSH buckets, the IVF model and index) build one
-expensive relation that several queries in a session re-read. Each is
-persisted once and kept on the ``SparkSession`` it serves, in
+Some operator families (MinHash shingles, CC labels, set-similarity
+prefixes, LSH buckets, the IVF model and index) build one expensive
+relation that several queries in a session re-read. Each is persisted
+once and kept on the ``SparkSession`` it serves, in
 ``spark.__dict__["_graft_memo"]``: entries keyed ``(name, sf_dir, sig)``,
 where ``sig`` is a table-state signature (``sources.io._stat_sig`` or a
 tuple nesting one), and build locks keyed ``(name, sf_dir)``. The table

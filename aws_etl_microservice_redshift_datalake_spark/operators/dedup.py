@@ -627,63 +627,44 @@ def q_simhash_hamming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_MAX_ROUNDS = 20  # safety cap; large-star/small-star needs O(log² n)
 # rounds even on path graphs, so 20 covers any graph that fits on disk
 
-CC_DRIVER_MAX_EDGES = 1_000_000  # distinct edges up to which
-# connected_components solves on the driver in NumPy (one collect of ≤ 16 MB
-# of BIGINT pairs, a solver peak under ~100 MiB at the cap) instead of
+CC_DRIVER_MAX_EDGES = 2_500_000  # distinct edges up to which
+# connected_components solves on the driver in NumPy (one collect of ≤ 40 MB
+# of BIGINT pairs, a solver peak of ~300-340 MB at the cap) instead of
 # running the Spark star-round loop
 
 
-# Two spellings of the per-node minimum, picked ADAPTIVELY per round from
-# the measured edge count (both produce identical edges, so the choice is
-# purely physical):
-# - window (1 exchange/operator): fastest while edge sets are modest — on
-#   1.5M distinct random edges at 4 cores, 73–75 s and 58 jobs against
-#   116–122 s and 94 jobs for groupBy-min — but WindowExec
-#   buffers/sorts each node's whole adjacency in ONE task, and in a
-#   converged component the root's degree equals the component size, so a
-#   billion-edge component would spill-sort in a single straggler;
-# - groupBy-min + equi-join (2 exchanges): the partial min collapses hot
-#   nodes map-side and the join back is an AQE-skew-splittable hash join —
-#   the only shape that survives mega-hub components.
-CC_WINDOW_MAX_EDGES = 5_000_000  # below this, per-round fixed cost dominates
-
-
-def _large_star(e: DataFrame, use_window: bool) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """Large-star (Kiveris et al. '14): every node u links each strictly
     LARGER neighbor to m(u) = min(Γ(u) ∪ {u}). Duplicate emits are left in
-    place; the small-star that follows dedups."""
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    if use_window:
-        from pyspark.sql import Window as W
+    place; the small-star that follows dedups.
 
-        m = F.least(F.min("b").over(W.partitionBy("a")), F.col("a"))
-        withm = sym.withColumn("m", m)
-    else:
-        m = (
-            sym.groupBy("a")
-            .agg(F.min("b").alias("mb"))
-            .select("a", F.least("mb", "a").alias("m"))
-        )
-        withm = sym.join(m.hint("shuffle_hash"), "a")
+    The per-node minimum is a groupBy-min joined back through a
+    shuffle-hash join. In a converged component the root's degree equals
+    the component size; the partial min collapses such a hub map-side and
+    AQE can split the skewed join, where a min-over-window would sort the
+    hub's whole adjacency in one task."""
+    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    m = (
+        sym.groupBy("a")
+        .agg(F.min("b").alias("mb"))
+        .select("a", F.least("mb", "a").alias("m"))
+    )
     return (
-        withm.filter(F.col("b") > F.col("a"))
+        sym.join(m.hint("shuffle_hash"), "a")
+        .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("m").alias("b"))
     )
 
 
-def _small_star(e: DataFrame, use_window: bool) -> DataFrame:
+def _small_star(e: DataFrame) -> DataFrame:
     """Small-star: direct each edge high→low, then every node u links ALL
-    its smaller neighbors (and itself) to m(u) = min of those neighbors."""
+    its smaller neighbors (and itself) to m(u) = min of those neighbors.
+    Same groupBy-min + shuffle-hash join spelling as _large_star."""
     dirs = e.select(
         F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
     ).filter(F.col("a") != F.col("b"))
-    if use_window:
-        from pyspark.sql import Window as W
-
-        withm = dirs.withColumn("m", F.min("b").over(W.partitionBy("a")))
-    else:
-        m = dirs.groupBy("a").agg(F.min("b").alias("m"))
-        withm = dirs.join(m.hint("shuffle_hash"), "a")
+    m = dirs.groupBy("a").agg(F.min("b").alias("m"))
+    withm = dirs.join(m.hint("shuffle_hash"), "a")
     # both emits ((v, m) and (u, m)) come out of ONE row via explode — a
     # union of two projections would evaluate the min subtree twice
     links = withm.select(
@@ -707,9 +688,12 @@ def _min_labels(n: int, u, v):
     then pointer-jumps (lab = lab[lab]) until every node points at a root.
     A label only ever decreases and always names a node of the same
     component, so once a pass changes nothing, every edge joins two nodes
-    of one root and that root is the component's minimum index. Measured
-    at 1M edges on a 4-core Xeon host: 0.05 s on a hub star, 0.3 s on a
-    random graph, 0.5 s on a path with shuffled ids, ≤ 70 MiB peak."""
+    of one root and that root is the component's minimum index.
+
+    The whole driver solve (_cc_on_driver, without the collect), measured
+    on a 4-core Xeon host for a hub star / a random graph / a path with
+    shuffled ids: 0.2 / 0.9 / 1.0 s at 1M edges and 0.6 / 2.7 / 3.5 s at
+    the 2.5M-edge cap, peaking 300-340 MB above the process baseline."""
     import numpy as np
 
     lab = np.arange(n)
@@ -762,9 +746,7 @@ def _cc_on_driver(spark: SparkSession, edges) -> DataFrame:
     return spark.createDataFrame(pa.table({"node": node, "comp": comp}))
 
 
-def connected_components(
-    pairs: DataFrame, col_a: str, col_b: str, reliable: bool = False
-) -> DataFrame:
+def connected_components(pairs: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Reusable connected-components operator over an undirected edge list:
     returns (node, comp) where ``comp`` is the minimum node id reachable
     from ``node``, for every node appearing in any edge (self-loop-only
@@ -773,71 +755,32 @@ def connected_components(
     ONE Spark action first: the distinct edge list, collected through
     ``limit(CC_DRIVER_MAX_EDGES + 1).toArrow()``.
 
-    - At most CC_DRIVER_MAX_EDGES (1M) distinct edges: the components are
+    - At most CC_DRIVER_MAX_EDGES (2.5M) distinct edges: the components are
       solved on the driver in NumPy (``_min_labels``: dense ids, min-label
       hooking + pointer jumping) and handed back through
       ``spark.createDataFrame`` of an Arrow table. Driver memory is bounded
-      by the cap: ≤ 16 MB of BIGINT pairs collected, a solver peak under
-      ~100 MiB. Every verified-pair graph the registry builds stays here.
+      by the cap: ≤ 40 MB of BIGINT pairs collected, a solver peak of
+      ~300-340 MB. Every verified-pair graph the registry builds stays here.
     - Above the cap: the Spark LARGE-STAR / SMALL-STAR alternation (Kiveris
       et al. '14, "Connected Components in MapReduce and Beyond"), the
       only path that runs there. The extra cost of trying the driver first
-      is the one limit job and ≤ 16 MB collected; that job fills a local
+      is the one limit job and ≤ 40 MB collected; that job fills a local
       checkpoint of the distinct edge relation, so the loop starts from it
       without recomputing it. The star rounds contract chains
       doubly-exponentially, so even a path graph converges in O(log² n)
       rounds (a 60-node path needs 4 rounds vs 59 hash-min propagation
       rounds). Fixpoint = the directed edge set is unchanged
       (order-insensitive count + hash compare, one action per round — the
-      driver loops over ROUNDS, never rows). The per-node minimum picks its
-      physical spelling per round from the measured edge count (the sig
-      already carries it): min-over-window below CC_WINDOW_MAX_EDGES (one
-      exchange), groupBy-min + skew-splittable join above it (the only
-      shape that survives a mega-hub component — see the spelling
-      comment). CC_MAX_ROUNDS and ``reliable`` apply to this path only.
+      driver loops over ROUNDS, never rows). The per-node minimum is
+      groupBy-min + shuffle-hash join, the shape that survives a mega-hub
+      component (see _large_star). Round state goes to ``checkpoint()``
+      when the SparkContext has a checkpoint dir (``setCheckpointDir`` —
+      HDFS/S3 on a cluster, so a multi-hour run survives a lost executor)
+      and to ``localCheckpoint()`` otherwise. CC_MAX_ROUNDS applies to this
+      path only.
 
     Both paths give the same rows and the same schema, checked against
     each other and against union-find in tests/test_properties.py."""
-    if reliable:
-        # fail fast with an actionable message: without a configured
-        # checkpoint dir the first action dies with an opaque
-        # SparkException (ADVICE r5)
-        sc = pairs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            raise ValueError(
-                "connected_components(reliable=True) needs a fault-tolerant "
-                "checkpoint dir: call spark.sparkContext.setCheckpointDir("
-                "'hdfs://... or s3://...') first (a local path only makes "
-                "sense in local mode)"
-            )
-
-    pending_unpersist: list[DataFrame] = []
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        # localCheckpoint persists round state on executors — fast, but a
-        # lost executor loses partitions mid-algorithm. ``reliable=True``
-        # writes round state to the fault-tolerant checkpoint dir
-        # (sc.setCheckpointDir — HDFS/S3 on a real cluster) so a 100 TB
-        # multi-hour CC run survives executor churn; same lazy one-action-
-        # per-round protocol either way.
-        if reliable:
-            # persist BEFORE checkpoint: the checkpoint-write job recomputes
-            # the round's RDD from scratch unless its partitions are cached
-            # (ADVICE r5 — a 2× per-round cost at exactly the scale the flag
-            # targets). The cache is only needed until the checkpoint files
-            # exist, i.e. until the round's _sig action completes — _drain
-            # releases it then.
-            df = df.persist()
-            pending_unpersist.append(df)
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
-    def _drain() -> None:
-        # called right after each round's materializing action: checkpoint
-        # files are written, the pre-checkpoint cache is dead weight
-        while pending_unpersist:
-            pending_unpersist.pop().unpersist()
-
     # both endpoints in the node type Spark's union would widen them to
     # (e.g. INT + BIGINT → BIGINT), so the Arrow columns agree; the limit
     # job fills the local checkpoint, which only the star loop reads again
@@ -854,7 +797,29 @@ def connected_components(
         return _cc_on_driver(pairs.sparkSession, collected)
     del collected
 
-    if reliable:
+    fault_tolerant = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
+    pending_unpersist: list[DataFrame] = []
+
+    def _ckpt(df: DataFrame) -> DataFrame:
+        # same lazy one-action-per-round protocol in both modes
+        if not fault_tolerant:
+            return df.localCheckpoint(eager=False)
+        # persist BEFORE checkpoint: the checkpoint-write job recomputes the
+        # round's RDD from scratch unless its partitions are cached (a 2×
+        # per-round cost). The cache is only needed until the checkpoint
+        # files exist, i.e. until the round's _sig action completes —
+        # _drain releases it then.
+        df = df.persist()
+        pending_unpersist.append(df)
+        return df.checkpoint(eager=False)
+
+    def _drain() -> None:
+        # called right after each round's materializing action: checkpoint
+        # files are written, the pre-checkpoint cache is dead weight
+        while pending_unpersist:
+            pending_unpersist.pop().unpersist()
+
+    if fault_tolerant:
         edges = _ckpt(edges)  # the loop's starting state, fault-tolerant too
     e = edges.filter(F.col("a") != F.col("b"))
 
@@ -874,7 +839,7 @@ def connected_components(
         sig = _sig(e)
     finally:
         # failure backstop (r6 review): if the first action dies (executor
-        # loss, checkpoint-dir write failure), the initial reliable-mode
+        # loss, checkpoint-dir write failure), the initial fault-tolerant
         # persist must not stay pinned for the session lifetime
         _drain()
     converged = False
@@ -888,15 +853,9 @@ def connected_components(
         # the fixpoint signature is the round's FIRST action, so it
         # computes, persists, and fingerprints the edges in ONE job — the
         # eager form ran two actions per round and the extra fixed job
-        # latency was 27% of the headline bench (VERDICT r4 #5). On a
-        # real cluster use reliable checkpoint() (localCheckpoint loses
-        # partitions on executor failure) — same one-line swap.
-        # the spelling decision now holds for TWO star rounds, and a
-        # single large-star pass can roughly double the edge set — so the
-        # window spelling is only safe up to HALF the cap, or the second
-        # round could run min-over-window on a graph past the mega-hub
-        # threshold
-        use_window = (sig[0] or 0) <= CC_WINDOW_MAX_EDGES // 2
+        # latency was 27% of the headline bench (VERDICT r4 #5). With a
+        # checkpoint dir set, _ckpt writes checkpoint() files instead, which
+        # survive a lost executor.
         # TWO star rounds per checkpoint/signature (r5): per-action fixed
         # cost (job scheduling + Catalyst on a multi-exchange DAG) is paid
         # per action, so halving the action count nearly halves wall time;
@@ -906,7 +865,7 @@ def connected_components(
         # detected one odd round late).
         new = e
         for _ in range(2):
-            new = _small_star(_large_star(new, use_window), use_window)
+            new = _small_star(_large_star(new))
         new = _ckpt(new)
         try:
             new_sig = _sig(new)
@@ -987,97 +946,51 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative — the "keep one copy per dup group" stage every
     training-data dedup pipeline ends with.
 
-    Components via connected_components: the distinct pair list is
-    collected once and, up to CC_DRIVER_MAX_EDGES (1M) distinct pairs —
-    every corpus this registry is tested on — solved on the driver in
-    NumPy (min-label hooking, ≤ 16 MB collected); above the cap the Spark
-    LARGE-STAR/SMALL-STAR rounds (Kiveris et al. '14) run instead, after
-    one extra limit job. The oracle is a recursive-CTE transitive closure
-    over the IDENTICAL pairs CTE, so either path's answer is hash-checked
-    against exact reachability.
+    Components come from _cc_labels_persisted, the session's one cluster-
+    label relation, which q_cluster_split and q_training_pipeline read too:
+    the pair graph is solved once per session and table state. The oracle
+    is a recursive-CTE transitive closure over the IDENTICAL pairs CTE, so
+    the labels are hash-checked against exact reachability.
 
     Output: one row per clustered doc — (doc_id, canon_id, cluster_size,
-    is_canonical); singletons (docs in no near-dup pair) are not emitted.
-
-    ``SPARK_GRAFT_CC_RELIABLE=1`` flips the star loop's round-state
-    checkpoints from localCheckpoint to the fault-tolerant checkpoint dir
-    (VERDICT r5 #6 — set spark.sparkContext.setCheckpointDir first; see
-    README's tuning table for when to flip it); it matters only above the
-    driver cap. q_training_pipeline inherits the switch through this query.
-    Labels are identical either way — the flag only changes where round
-    state is stored (tests/test_properties.py).
-    """
-    import os
-
-    reliable = os.environ.get("SPARK_GRAFT_CC_RELIABLE", "") == "1"
-    pairs = _minhash_pairs_persisted(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(
-        pairs, "doc_a", "doc_b", reliable=reliable
-    ).withColumnRenamed("node", "doc_id")
-    sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return labels.join(sizes, "comp").select(
+    is_canonical); singletons (docs in no near-dup pair) are not emitted."""
+    labels = _cc_labels_persisted(spark, sf_dir)
+    sizes = labels.groupBy("canon_id").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return labels.join(sizes, "canon_id").select(
         "doc_id",
-        F.col("comp").alias("canon_id"),
+        "canon_id",
         "cluster_size",
-        (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
-    )
-
-
-def _minhash_pairs_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified MinHash pair relation as a shared persisted intermediate
-    for its COMPOSITE consumers (cluster resolution, and through it the
-    training pipeline — q_dedup_minhash_pairs itself stays unmemoized so
-    the registered query always exercises the live plan): the same
-    (session, table-state) rule as the shingle/bucket relations. The pair
-    set is tiny (verified near-dups), so the persist is cheap and the CC
-    loop's initial checkpoint reads materialized rows instead of re-running
-    the band join + verify per call."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        "pairs", spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
-        lambda: q_dedup_minhash_pairs(spark, sf_dir),
+        (F.col("doc_id") == F.col("canon_id")).alias("is_canonical"),
     )
 
 
 def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CONVERGED cluster-label relation (doc_id, canon_id) over the
-    verified MinHash pair graph, as a shared persisted intermediate for its
-    COMPOSITE consumers (the leakage-safe split and the training pipeline —
-    q_dedup_clusters itself stays unmemoized so the registered CC query
-    always exercises the live solve): the same (session, table-state) rule
-    as the pair/shingle relations. connected_components runs EAGERLY: one
-    collect of the distinct pair list, then a driver solve up to
-    CC_DRIVER_MAX_EDGES (1M) distinct pairs, or above the cap the Spark
-    star loop (one action per two star rounds). Without the memo every
-    composite consumer re-pays that per call; at 100 TB this is exactly
-    the artifact a production build writes ONCE and reads from every
-    downstream stage (guide §2.4: remove whole recomputed job chains).
-    Labels are deterministic (min reachable id) and both paths give the
-    same rows, so a memo hit cannot change any result."""
+    """The converged cluster-label relation (doc_id, canon_id) over the
+    verified MinHash pair graph: the one cluster artifact of a session,
+    memoized per (session, table state) like the shingle relations and
+    read by q_dedup_clusters, q_cluster_split and q_training_pipeline.
+
+    The build runs connected_components EAGERLY on q_dedup_minhash_pairs:
+    one collect of the distinct pair list, then a driver solve up to
+    CC_DRIVER_MAX_EDGES (2.5M) distinct pairs, or above the cap the Spark
+    star loop (one action per two star rounds). The pairs have no memo of
+    their own: the labels are their only shared consumer, so the band join
+    and verify run once per build. Labels are deterministic (min reachable
+    id) and both CC paths give the same rows, so a memo hit cannot change
+    any result."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
-    import os
-
-    # the reliable flag is part of the memo IDENTITY (ADVICE r14): labels
-    # are equal either way, but lost-executor recompute goes through
-    # different checkpoint lineage — flipping the flag mid-session must not
-    # serve labels built under the other mode
-    reliable = os.environ.get("SPARK_GRAFT_CC_RELIABLE", "") == "1"
-
     def _build() -> DataFrame:
-        pairs = _minhash_pairs_persisted(spark, sf_dir).select("doc_a", "doc_b")
+        pairs = q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
         return (
-            connected_components(pairs, "doc_a", "doc_b", reliable=reliable)
+            connected_components(pairs, "doc_a", "doc_b")
             .withColumnRenamed("node", "doc_id")
             .withColumnRenamed("comp", "canon_id")
         )
 
     return session_memo(
-        "cc-labels", spark, f"{sf_dir}|reliable={reliable}",
+        "cc-labels", spark, sf_dir,
         lambda: _stat_sig(table_path(sf_dir, "documents")),  # fresh-at-build
         _build,
     )
@@ -1203,7 +1116,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Construction: roots come from the verified MinHash pair graph's
     connected components (q_dedup_clusters' machinery, shared through the
-    memoized pair relation); singletons root to themselves; membership is
+    memoized label relation _cc_labels_persisted); singletons root to themselves; membership is
     the established portable md5 split hash (q_train_test_split's F8
     spelling) applied to the ROOT. Per split: doc count, distinct-cluster
     count, and how many non-canonical dup members rode along. Leakage

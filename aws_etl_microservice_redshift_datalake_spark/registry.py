@@ -207,24 +207,18 @@ _RECHECK_CHANGED: dict[str, int] = {
     # in the r14 window and pass), so they expired and are pruned (the
     # r10–r13 precedent).
     #
-    # r15 OPTIMIZATION batch, recorded at 14 (ships BEFORE the r15 driver
-    # run — the same-round green verifies the new code). All four are
-    # value-identical plan/physical changes, each verified against its
-    # DuckDB oracle at sf0.001 + sf0.01 before commit
-    # (plans/r15/verify_changes.py):
-    "q_simhash_hamming_join": 14,  # simhash_wide parses the 15 md5 hex
-    # digits with ONE conv into a 60-bit bigint (was 15 per-digit convs);
-    # bit extraction proven identical (exceptAll symdiff 0 on sf0.1).
-    "q_dedup_clusters": 14,  # the CC loop sizes its round shuffles'
-    # reduce-task count from the measured edge count (session default as
-    # ceiling, restored after) — labels partitioning-independent.
-    "q_cluster_split": 14,  # consumes the CC labels (inherits the loop
-    # change through _cc_labels_persisted; reliable flag now in memo key).
-    "q_training_pipeline": 14,  # same label-relation consumer.
-    "q_compact_roundtrip": 14,  # the fragmentation fixture write is
-    # parallelized (one task per ~8 planned fragments, footer-derived) —
-    # fragment multiset and compacted aggregate identical; verified at
-    # sf0.001/sf0.01/sf0.1.
+    # All five r15 OPTIMIZATION entries (q_simhash_hamming_join,
+    # q_dedup_clusters, q_cluster_split, q_training_pipeline,
+    # q_compact_roundtrip — recorded at 14) were verified green in
+    # CORRECTNESS_r15 on the changed code, so they expired and are pruned
+    # (the r10–r14 precedent).
+    #
+    # Cluster labels become one memoized artifact, recorded at 15:
+    "q_dedup_clusters": 15,  # reads _cc_labels_persisted instead of its
+    # own connected_components call over the deleted pair memo.
+    "q_cluster_split": 15,  # same label relation, now built straight from
+    # q_dedup_minhash_pairs (no pair memo).
+    "q_training_pipeline": 15,  # same label-relation consumer.
 }
 
 _RECHECK: frozenset[str] = frozenset(

@@ -27,15 +27,6 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def _fast_local_dir() -> str | None:
-    """``spark.local.dir`` for LOCAL mode from ``SPARK_GRAFT_LOCAL_DIR``,
-    or None ('' or unset) for Spark's default. Never applied outside local
-    mode: a cluster's executors keep their own disks. There is no tmpfs
-    default: Spark's own scratch won all four alternating A/B pairs against
-    it on whole-run totals (plans/r15/ab_localdir_results.jsonl)."""
-    return os.environ.get("SPARK_GRAFT_LOCAL_DIR") or None
-
-
 def get_session(
     app_name: str = "aws-etl-datalake-spark",
     shuffle_partitions: int | None = None,
@@ -58,11 +49,6 @@ def get_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
     )
-    fast_dir = _fast_local_dir()
-    if fast_dir:
-        # shuffle/spill scratch on the fastest local storage (see
-        # _fast_local_dir) — local mode only, env-overridable
-        builder = builder.config("spark.local.dir", fast_dir)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -3,7 +3,8 @@ memos cleared before every rep, the whole result written to the noop sink)
 and its memo hook (clear_session_memos), the scale harness's amplified copy
 (``scale_check.amplify``), the verify-window sweep subset
 (conftest.sweep_subset), and connected_components' cost contract: no
-session-conf mutation and a cold job-count pin."""
+session-conf mutation, a cold job-count pin, and one solve shared by the
+three cluster-label queries."""
 
 from __future__ import annotations
 
@@ -26,10 +27,10 @@ from tests.conftest import SF_MED, SF_SMALL, sweep_subset
 
 def test_clear_session_memos_drops_and_rebuilds(spark):
     from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        _minhash_pairs_persisted,
+        _cc_labels_persisted,
     )
 
-    df1 = _minhash_pairs_persisted(spark, SF_SMALL)
+    df1 = _cc_labels_persisted(spark, SF_SMALL)
     n1 = df1.count()
     before = len(_tables(spark)[0])
     assert before >= 1 and df1.storageLevel.useMemory
@@ -38,7 +39,7 @@ def test_clear_session_memos_drops_and_rebuilds(spark):
     assert len(_tables(spark)[0]) == 0
     assert not df1.storageLevel.useMemory
     # cold rebuild must produce the identical relation
-    df2 = _minhash_pairs_persisted(spark, SF_SMALL)
+    df2 = _cc_labels_persisted(spark, SF_SMALL)
     assert df2.count() == n1
     assert df1.exceptAll(df2).isEmpty() and df2.exceptAll(df1).isEmpty()
 
@@ -151,12 +152,12 @@ def test_cold_cc_job_count(spark):
     collects its distinct edges in at most 2 Spark jobs and solves on the
     driver (the star loop runs 20 on this graph)."""
     from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        _minhash_pairs_persisted,
         connected_components,
+        q_dedup_minhash_pairs,
     )
 
-    pairs = _minhash_pairs_persisted(spark, SF_MED).select("doc_a", "doc_b")
-    pairs.count()  # the pair memo is built outside the measured group
+    pairs = q_dedup_minhash_pairs(spark, SF_MED).select("doc_a", "doc_b").persist()
+    pairs.count()  # the pairs are built outside the measured group
     sc = spark.sparkContext
     group = "test-cc-cold"
     sc.setJobGroup(group, "cold connected_components")
@@ -168,6 +169,28 @@ def test_cold_cc_job_count(spark):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 2, f"cold connected_components ran {len(jobs)} Spark jobs"
     assert labels.count() > 0
+    pairs.unpersist()
+
+
+def test_cluster_queries_solve_the_graph_once(spark, monkeypatch):
+    """q_dedup_clusters, q_cluster_split and q_training_pipeline read one
+    label relation, so from cold memos the three together call
+    connected_components exactly once."""
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    calls = []
+    real = dedup.connected_components
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components", counting)
+    clear_session_memos(spark)
+    qs = engine.all_queries()
+    for name in ("q_dedup_clusters", "q_cluster_split", "q_training_pipeline"):
+        assert qs[name](spark, SF_SMALL).count() > 0, name
+    assert len(calls) == 1, f"connected_components ran {len(calls)} times"
 
 
 def test_sweep_subset_full_flag_returns_all(monkeypatch):

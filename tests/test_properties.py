@@ -564,67 +564,41 @@ def test_connected_components_warns_when_rounds_exhausted(spark, monkeypatch):
 
 @full_sweeps_only
 def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
-    """reliable=True routes round state through the fault-tolerant
-    checkpoint dir (the 100 TB executor-churn path) and must produce the
-    identical labeling. The driver cap is 0, so the star loop runs."""
-    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
-
-    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
-    connected_components = dedup.connected_components
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "cc-ckpt"))
-    edges = [(i, i + 1) for i in range(40)] + [(100, 101), (101, 102)]
-    pairs = spark.createDataFrame(edges, "a BIGINT, b BIGINT").coalesce(4)
-    fast = {r.node: r.comp for r in connected_components(pairs, "a", "b").collect()}
-    rel = {
-        r.node: r.comp
-        for r in connected_components(pairs, "a", "b", reliable=True).collect()
-    }
-    assert rel == fast
-    assert rel[40] == 0 and rel[102] == 100
-
-
-def test_connected_components_reliable_requires_checkpoint_dir(spark):
-    """reliable=True without a configured checkpoint dir must fail UP FRONT
-    with an actionable ValueError, not an opaque SparkException at the first
-    fixpoint action deep in the round loop (ADVICE r5)."""
+    """With a checkpoint dir set on the SparkContext the star loop keeps
+    its round state in fault-tolerant checkpoint() files there (the path
+    that survives a lost executor) and labels exactly as the
+    localCheckpoint() run without one. The driver cap is 0, so the star
+    loop runs."""
     from unittest import mock
 
-    import pytest as _pytest
-
-    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
-        connected_components,
-    )
-
-    pairs = spark.createDataFrame([(1, 2)], "a BIGINT, b BIGINT")
-    with mock.patch.object(
-        type(spark.sparkContext), "getCheckpointDir", return_value=None
-    ):
-        with _pytest.raises(ValueError, match="setCheckpointDir"):
-            connected_components(pairs, "a", "b", reliable=True)
-
-
-@full_sweeps_only
-def test_dedup_clusters_reliable_env_switch(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CC_RELIABLE=1 flips q_dedup_clusters (and therefore
-    q_training_pipeline) onto the fault-tolerant checkpoint path and must
-    produce the identical cluster report (VERDICT r5 #6: the switch is
-    exposed through the query surface, not just the operator arg). The
-    driver cap is 0, so the star loop runs."""
-    import aws_etl_microservice_redshift_datalake_spark as engine
     from aws_etl_microservice_redshift_datalake_spark.operators import dedup
-    from tests.conftest import SF_SMALL
 
     monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
-    qs = engine.all_queries()
-    key = lambda df: {
-        (r.doc_id, r.canon_id, r.cluster_size, r.is_canonical)
-        for r in df.collect()
-    }
-    base = key(qs["q_dedup_clusters"](spark, SF_SMALL))
-    assert base, "no clusters at sf0.001 — fixture drifted"
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "cc-reliable"))
-    monkeypatch.setenv("SPARK_GRAFT_CC_RELIABLE", "1")
-    assert key(qs["q_dedup_clusters"](spark, SF_SMALL)) == base
+    sc = spark.sparkContext
+    edges = [(i, i + 1) for i in range(40)] + [(100, 101), (101, 102)]
+    pairs = spark.createDataFrame(edges, "a BIGINT, b BIGINT").coalesce(4)
+
+    def labels():
+        return {
+            r.node: r.comp
+            for r in dedup.connected_components(pairs, "a", "b").collect()
+        }
+
+    ckpt = tmp_path / "cc-ckpt"
+    prev = sc.getCheckpointDir()
+    sc.setCheckpointDir(str(ckpt))
+    try:
+        with mock.patch.object(type(sc), "getCheckpointDir", return_value=None):
+            local = labels()
+        assert not [p for p in ckpt.rglob("*") if p.is_file()]
+        reliable = labels()
+        assert [p for p in ckpt.rglob("*") if p.is_file()]
+    finally:
+        # the checkpoint dir lives on the shared SparkContext: put the
+        # previous setting back so later star-loop runs are unaffected
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(prev))
+    assert reliable == local
+    assert reliable[40] == 0 and reliable[102] == 100
 
 
 # µs instants whose ns encoding (a) exceeds the 4e16 magnitude gate and
@@ -785,30 +759,6 @@ def test_apply_substring_spans_matches_bruteforce(spark, docs, k):
         for r in apply_substring_spans(df, k=k).collect()
     }
     assert got == _brute_apply_spans(docs, k)
-
-
-@given(_edges)
-@settings(**_SETTINGS)
-@full_sweeps_only
-def test_connected_components_groupby_spelling_matches(spark, monkeypatch, edges):
-    """The at-scale per-node-minimum spelling (groupBy-min + skew-splittable
-    join — the only shape that survives a mega-hub component) is never
-    chosen at test scale, so force it by dropping CC_WINDOW_MAX_EDGES to 0
-    (and the driver cap to 0, so the star loop runs): labels must equal
-    brute-force union-find on the same random graphs the window spelling
-    is checked against."""
-    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
-
-    monkeypatch.setattr(dedup, "CC_WINDOW_MAX_EDGES", 0)
-    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
-    pairs = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in edges], "a BIGINT, b BIGINT"
-    )
-    got = {
-        r.node: r.comp
-        for r in dedup.connected_components(pairs, "a", "b").collect()
-    }
-    assert got == _brute_components(edges)
 
 
 # short strings over a tiny alphabet (plus multibyte chars to stress the
