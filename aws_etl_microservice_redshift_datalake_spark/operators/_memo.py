@@ -1,9 +1,16 @@
-"""Session-owned memo for persisted relations shared across queries.
+"""Session-owned memo: the only relations a query leaves persisted, so
+``clear_session_memos`` releases every one of them.
 
-Some operator families (MinHash shingles, CC labels, set-similarity
-prefixes, LSH buckets, the IVF model and index) build one expensive
-relation that several queries in a session re-read. Each is persisted
-once and kept on the ``SparkSession`` it serves, in
+Six entries stay, each with a measured win (the numbers sit at the call
+sites). Barriers inside one query, where a relation feeds several
+branches of one plan and a lazy cache would be recomputed by each:
+``setsim-prefix`` and ``lsh-buckets`` (self-joins). Artifacts shared across
+queries that are also barriers inside each: ``shingles`` (every MinHash,
+n-gram, set-similarity and containment query), ``containment-prefix`` and
+``containment-postings``. Shared across queries only: ``cc-labels`` (the
+three cluster queries solve one graph).
+
+Entries live on the ``SparkSession`` they serve, in
 ``spark.__dict__["_graft_memo"]``: entries keyed ``(name, sf_dir, sig)``,
 where ``sig`` is a table-state signature (``sources.io._stat_sig`` or a
 tuple nesting one), and build locks keyed ``(name, sf_dir)``. The table

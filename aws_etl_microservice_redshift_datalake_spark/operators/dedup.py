@@ -82,22 +82,18 @@ def _elem_gram_sql(arr: str, k: int) -> str:
 
 
 def _shingle_arrays_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shingle-array relation, persisted WITH a materialization barrier
-    and MEMOIZED per (session, table-state): every consumer (minhash,
-    ngram-Jaccard, and the cluster/pipeline queries that compose them)
-    shares ONE cached copy instead of stacking a fresh persist per call —
-    repeated invocations in one session (bench reps, composed queries)
-    were piling identical cached relations into storage memory ("Asked to
-    cache already cached data") until eviction pressure slowed everything.
-    The signature tracks the parquet footer state, so a rewritten corpus
-    re-materializes and the superseded relation is unpersisted
-    (operators._memo.session_memo — the sources.io cache-freshness rule).
+    """The shingle-array relation, memoized per (session, table state)
+    behind the memo's count barrier: every MinHash, n-gram, set-similarity
+    and containment query reads it, most of them from several plan
+    branches, and the prefix and postings memos below are built from it.
+    A rewritten corpus gets a new signature, so it re-materializes and the
+    superseded relation is unpersisted.
 
-    Why persist + count barrier at all (round 4, measured): the relation
-    feeds 3+ plan branches and a LAZY cache races — concurrent leaf stages
-    each recompute AND serialize the same partitions (2.95 s uncached vs
-    12.75 s lazily cached vs ~2.5 s barriered at the 10× corpus). The
-    barrier runs at query-build time, which bench/driver timing includes."""
+    Measured cold (sf0.1, `local[4]`, 3 alternating fresh-process pairs,
+    memos cleared, noop sink), turning this memo off with the prefix and
+    postings memos kept: q_setsim_join 4.82 → 9.17 s, q_containment_join
+    4.79 → 14.23 s, q_containment_apply 5.16 → 15.68 s — each of those
+    relations re-shingles without it."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
@@ -342,13 +338,9 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of the classic inverted-index SELF-JOIN (measured 3.3-46 s
     # AQE flip swings at the 10× corpus for the join form).
     #
-    # The per-doc shingle ARRAYS are persisted/barriered/memoized (see
-    # _shingle_arrays_persisted): the cap's count pass and the posting
-    # probe both need the exploded occurrences; caching the ARRAY form
-    # (one row per doc, 50× fewer rows than exploded) makes the expensive
-    # split→slide→hash→distinct work run exactly once, while each consumer
-    # re-runs only the cheap explode. MEMORY_AND_DISK spills if the corpus
-    # outgrows executor memory.
+    # The per-doc shingle ARRAYS come from the shared memo
+    # (_shingle_arrays_persisted): one row per doc, 50× fewer than the
+    # exploded occurrences, so each consumer re-runs only the cheap explode.
     arrs = _shingle_arrays_persisted(spark, sf_dir)
     sh = arrs.select("doc_id", F.explode("sh").alias("s"))
     rare = (
@@ -364,16 +356,17 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exploded occurrence relation. A shuffled hash join reuses the same
     # hashpartitioning(s) the count pass and the collect_list below already
     # need — one effective wide stage, constant memory per key.
+    # No barrier: inter and both sides of sizes each recompute postings
+    # (three semi-joins; the executed plan reuses no exchange), and that
+    # still beats persisting it. Cold, sf0.1, `local[4]`, 5 alternating
+    # fresh-process pairs, medians: recomputed 3.03 s (17 jobs) against
+    # 3.60 s (16 jobs) memoized behind session_memo's count barrier, lower
+    # in 5 of 5.
     postings = (
         sh.join(rare.hint("SHUFFLE_HASH"), "s", "left_semi")
         .groupBy("s")
         .agg(F.collect_list("doc_id").alias("ds"))
-        .cache()
     )
-    # barrier: inter and sizes below both read postings, and a lazy cache
-    # would race them into duplicate join+collect work (measured ~1 s at
-    # both scales)
-    postings.count()
     inter = (
         postings.select("ds", F.explode("ds").alias("doc_a"))
         .select("doc_a", F.explode("ds").alias("doc_b"))
@@ -764,9 +757,9 @@ def connected_components(pairs: DataFrame, col_a: str, col_b: str) -> DataFrame:
     - Above the cap: the Spark LARGE-STAR / SMALL-STAR alternation (Kiveris
       et al. '14, "Connected Components in MapReduce and Beyond"), the
       only path that runs there. The extra cost of trying the driver first
-      is the one limit job and ≤ 40 MB collected; that job fills a local
-      checkpoint of the distinct edge relation, so the loop starts from it
-      without recomputing it. The star rounds contract chains
+      is the one limit job and ≤ 40 MB collected; that job fills a cache
+      of the distinct edge relation, so the loop starts from it without
+      recomputing it. The star rounds contract chains
       doubly-exponentially, so even a path graph converges in O(log² n)
       rounds (a 60-node path needs 4 rounds vs 59 hash-min propagation
       rounds). Fixpoint = the directed edge set is unchanged
@@ -783,22 +776,24 @@ def connected_components(pairs: DataFrame, col_a: str, col_b: str) -> DataFrame:
     each other and against union-find in tests/test_properties.py."""
     # both endpoints in the node type Spark's union would widen them to
     # (e.g. INT + BIGINT → BIGINT), so the Arrow columns agree; the limit
-    # job fills the local checkpoint, which only the star loop reads again
+    # job fills the cache, which only the star loop reads again: the driver
+    # path releases it at once, the loop once its start is checkpointed
     node_t = pairs.select(col_a).union(pairs.select(col_b)).schema[0].dataType
     edges = (
         pairs.select(
             F.col(col_a).cast(node_t).alias("a"), F.col(col_b).cast(node_t).alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .persist()
     )
     collected = edges.limit(CC_DRIVER_MAX_EDGES + 1).toArrow()
     if collected.num_rows <= CC_DRIVER_MAX_EDGES:
+        edges.unpersist()
         return _cc_on_driver(pairs.sparkSession, collected)
     del collected
 
     fault_tolerant = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
-    pending_unpersist: list[DataFrame] = []
+    pending_unpersist: list[DataFrame] = [edges]
 
     def _ckpt(df: DataFrame) -> DataFrame:
         # same lazy one-action-per-round protocol in both modes
@@ -819,9 +814,7 @@ def connected_components(pairs: DataFrame, col_a: str, col_b: str) -> DataFrame:
         while pending_unpersist:
             pending_unpersist.pop().unpersist()
 
-    if fault_tolerant:
-        edges = _ckpt(edges)  # the loop's starting state, fault-tolerant too
-    e = edges.filter(F.col("a") != F.col("b"))
+    e = _ckpt(edges).filter(F.col("a") != F.col("b"))
 
     # order-insensitive edge-set fingerprint: count + XOR of per-edge hashes
     # (XOR, not SUM — a long SUM overflows under ANSI mode; edges are
@@ -839,8 +832,8 @@ def connected_components(pairs: DataFrame, col_a: str, col_b: str) -> DataFrame:
         sig = _sig(e)
     finally:
         # failure backstop (r6 review): if the first action dies (executor
-        # loss, checkpoint-dir write failure), the initial fault-tolerant
-        # persist must not stay pinned for the session lifetime
+        # loss, checkpoint-dir write failure), the initial persists must
+        # not stay pinned for the session lifetime
         _drain()
     converged = False
     for _ in range(CC_MAX_ROUNDS):
@@ -977,7 +970,15 @@ def _cc_labels_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     their own: the labels are their only shared consumer, so the band join
     and verify run once per build. Labels are deterministic (min reachable
     id) and both CC paths give the same rows, so a memo hit cannot change
-    any result."""
+    any result.
+
+    The memo earns its place across queries, not inside one. Cold and
+    alone, each cluster query is no faster with it (sf0.1, `local[4]`, 3
+    alternating fresh-process pairs, all memos on → off: q_dedup_clusters
+    2.10 → 1.88 s, q_cluster_split 2.01 → 1.94 s). After q_dedup_clusters
+    in the same session, q_cluster_split reads the labels in 0.8–1.0 s
+    where rebuilding them from memoized pairs took 2.6–2.8 s (sf0.01, 3
+    fresh processes per side)."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
@@ -1775,12 +1776,12 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _setsim_prefix_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical-order prefix relation (doc_id, n, pos, h), persisted
-    with the family's count barrier and memoized per (session,
-    table-state) — the candidate stage SELF-JOINS it, and without a
-    materialization point each join side re-runs the whole df-hydration
-    shuffle + per-doc canonical sort (measured ~2x the stage cost; the
-    _shingle_arrays_persisted rationale applies verbatim)."""
+    """The canonical-order prefix relation (doc_id, n, pos, h), memoized
+    per (session, table state) behind the memo's count barrier: the
+    candidate stage SELF-JOINS it, and without a materialization point each
+    join side re-runs the whole df-hydration shuffle + per-doc canonical
+    sort. Cold q_setsim_join with every memo on → off: 3.41 → 6.77 s,
+    19 → 14 jobs (sf0.1, `local[4]`, 3 alternating fresh-process pairs)."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
@@ -2049,9 +2050,11 @@ def _containment_prefix_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """The containment probe-prefix at CONTAIN_TAU (shorter than the
-    Jaccard one, so not shared with _setsim_prefix_persisted), persisted
-    with the family's count barrier and memoized per (session,
-    table-state) — the _setsim_prefix_persisted rationale."""
+    Jaccard one, so not shared with _setsim_prefix_persisted), memoized
+    like it and read by q_containment_join and q_containment_apply. Cold,
+    every memo on → off (sf0.1, `local[4]`, 3 alternating fresh-process
+    pairs): q_containment_join 4.03 → 6.00 s (25 → 16 jobs),
+    q_containment_apply 4.08 → 6.31 s (31 → 22 jobs)."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
@@ -2067,9 +2070,10 @@ def _containment_prefix_persisted(
 def _containment_postings_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The full canonical posting relation (the indexed side), persisted +
-    memoized like the prefix — without the barrier each candidate-join
-    side re-runs the df shuffle + per-doc canonical sort."""
+    """The full canonical posting relation (the indexed side), memoized
+    like the prefix, with the same measured cost: without the barrier each
+    candidate-join side re-runs the df shuffle + per-doc canonical sort
+    (see _containment_prefix_persisted for the on/off times)."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 

@@ -413,14 +413,11 @@ def q_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cartesian/BNLJ over two corpus-sized sides."""
     e = _embeddings(spark, sf_dir)
     t = e.select("vec_id", F.col("embedding").alias("v"))
-    # id+bucket only (~24 B/row × L per vector) — cached because both join
-    # sides read it AND it is narrow-but-expensive (L×k sparse projections
-    # per vector): measured at the 10× corpus, cached 2.90 s vs 4.47 s
-    # recomputed — the opposite trade from the dedup shingle relations,
-    # whose fat arrays make recompute cheaper than caching. Persist +
-    # count barrier (lazy cache races across the two self-join sides),
-    # MEMOIZED per (session, table-state) so repeated calls share one
-    # cached copy instead of stacking persists (the dedup-family rule).
+    # id+bucket only (~24 B/row × L per vector), memoized behind the memo's
+    # count barrier because both self-join sides read it and it is
+    # narrow-but-expensive (L×k sparse projections per vector). Cold
+    # q_cosine_neardup, memo on → off (sf0.1, `local[4]`, 4 alternating
+    # fresh-process pairs): 3.14→3.37, 3.72→3.87, 3.14→3.35, 3.13→3.17 s.
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
@@ -529,7 +526,7 @@ def _ivf_lloyd(x, n_cells: int):
     the surviving cell ids (ascending) and their unit-norm centroids.
 
     Assignment is the first ``argmax`` of ``x @ c.T`` with cells kept in
-    ascending id order — the same tie-break as the index's ``_assign``
+    ascending id order — the same tie-break as ``build_ivf_index``'s
     (higher dot, then lower cell). Scoring runs in IVF_TRAIN_BLOCK-row
     blocks, so the score matrix never exceeds IVF_TRAIN_BLOCK × n_cells
     doubles (32 MB at the 4096-cell ceiling). The new centroid is the
@@ -581,23 +578,24 @@ def build_ivf_index(
        plus one IVF_TRAIN_BLOCK × C score block (≤ 32 MB). The model goes
        back to Spark as an Arrow table.
     2. index: the final assignment of every vector stays in Spark
-       (`_assign` max_by, or the multi-probe top-n below).
+       (max_by, or the multi-probe top-n below).
 
     ``n_assign`` > 1 indexes each vector into its top-n cells (multi-probe
     indexing): membership doubles but pair-recall across cell boundaries
     rises sharply — the standard dedup-side trade, where a missed neighbor
     is a missed duplicate rather than a slightly-worse ANN hit.
 
-    MEMOIZED per (session, table-state) since round 5: the trained centroid
-    relation is shared by every n_assign variant (q_ann_ivf_topk AND the
-    three clustered semantic queries train ONCE per session), and each
-    n_assign's index is persisted separately. Training is deterministic
-    (hash-ordered sample, fixed passes), so a memo hit cannot change any
-    result. At 100 TB this is exactly the production shape: the IVF model
-    is a write-once artifact; queries load it rather than retrain it."""
+    Neither half is memoized. The model is a driver-built Arrow relation
+    with no Spark lineage left to recompute, and the index is a lazy plan
+    that the calling query computes. Persisting both cost more than it
+    saved: cold, memos cleared, sf0.1, `local[4]`, 4 alternating
+    fresh-process pairs, dropping the model and index memos took
+    q_ann_ivf_topk 2.65–3.47 → 1.60–2.24 s and the three clustered queries
+    0.9–2.2 s lower in every pair; a cold build plus one read of its index
+    went 11 + 1 → 2 + 4 Spark jobs (sf0.01)."""
     import math
 
-    from ..sources.io import _stat_sig, spread, table_path
+    from ..sources.io import spread, table_path
 
     path = table_path(sf_dir, "embeddings")
     # one scan, shared: the index assigns over its spread, the training
@@ -609,93 +607,68 @@ def build_ivf_index(
     n = table_rows(sf_dir, "embeddings")
     n_cells = max(4, min(4096, int(math.isqrt(n))))
 
-    def _assign(cents, carry_cols: list[str]):
-        """Argmax-cell assignment via max_by, not a window sort: the
-        broadcast crossJoin's n×C scored rows collapse map-side in the
-        partial aggregate, so the shuffle moves n rows. Tie-break: higher
-        cdot, then lower cell. This spelling indexes; training assigns with
-        `_ivf_lloyd`'s NumPy argmax under the same tie-break — two
-        spellings of one rule, kept from drifting by the reference-parity
-        test in tests/test_ivf_train.py."""
-        payload = F.struct(F.col("cell"), *[F.col(c) for c in ["t_id", *carry_cols]])
-        order = F.struct(F.col("cdot"), (-F.col("cell")).alias("negcell"))
-        return (
-            t.crossJoin(F.broadcast(cents))
-            .select("t_id", *carry_cols, "cell", _dot(F.col("tv"), F.col("cv")).alias("cdot"))
-            .groupBy("t_id")
-            .agg(F.max_by(payload, order).alias("b"))
-            .select("b.cell", "b.t_id", *[F.col(f"b.{c}") for c in carry_cols])
-        )
+    import numpy as np
+    import pyarrow as pa
 
-    def _train() -> DataFrame:
-        import numpy as np
-        import pyarrow as pa
-
-        sample = (
-            raw.filter(_finite_vec(F.col("tv")))
-            .orderBy(F.xxhash64("t_id"))
-            .limit(IVF_TRAIN_PER_CELL * n_cells)
-            .select("tv")
-            .toArrow()
-        )
-        x = sample.column("tv").combine_chunks().flatten().to_numpy().astype(np.float64)
-        del sample  # only the float64 copy lives through the passes
-        cells, c = _ivf_lloyd(x.reshape(-1, DIM), n_cells)
-        return spark.createDataFrame(
-            pa.table({
-                "cell": pa.array(cells, pa.int64()),
-                "cv": pa.array(c.tolist(), pa.list_(pa.float64())),
-            })
-        )
-
-    from ._memo import session_memo
-
-    def _sig() -> tuple:
-        return _stat_sig(path)
-
-    cents = session_memo(
-        "ivf-cents", spark, sf_dir,
-        lambda: (_sig(), n_cells, IVF_ITERS), _train,  # fresh-at-build
+    sample = (
+        raw.filter(_finite_vec(F.col("tv")))
+        .orderBy(F.xxhash64("t_id"))
+        .limit(IVF_TRAIN_PER_CELL * n_cells)
+        .select("tv")
+        .toArrow()
+    )
+    x = sample.column("tv").combine_chunks().flatten().to_numpy().astype(np.float64)
+    del sample  # only the float64 copy lives through the passes
+    cells, c = _ivf_lloyd(x.reshape(-1, DIM), n_cells)
+    cents = spark.createDataFrame(
+        pa.table({
+            "cell": pa.array(cells, pa.int64()),
+            "cv": pa.array(c.tolist(), pa.list_(pa.float64())),
+        })
     )
 
     # final assignment: each vector into its top-n_assign cells. n_assign=1
-    # keeps the max_by shape (map-side argmax, n-row shuffle); n_assign>1
-    # scores the whole centroid set ROW-LOCALLY against a one-row broadcast
-    # array and takes top-n with array_sort + slice — zero shuffle (the
-    # previous Window.partitionBy(t_id) spelling hash-exchanged all n×C
-    # scored rows, ADVICE r4). Sort key (-cdot, cell) ascending ≡ the old
-    # window's (cdot DESC, cell ASC) tie-break, so assignments are
-    # unchanged. At 100 TB this is exactly how an IVF indexer runs: each
-    # row scores C centroids locally; only the (cell, id) index shuffles —
-    # and only if a downstream consumer asks it to.
-    def _final() -> DataFrame:
-        if n_assign == 1:
-            return _assign(cents, ["label", "tv"])
-        cents_arr = cents.agg(F.collect_list(F.struct("cell", "cv")).alias("cs"))
-        top = F.slice(
-            F.array_sort(
-                F.transform(
-                    F.col("cs"),
-                    lambda c: F.struct(
-                        (-_dot(F.col("tv"), c["cv"])).alias("negdot"),
-                        c["cell"].alias("cell"),
-                    ),
-                )
-            ),
-            1,
-            n_assign,
+    # takes the argmax cell with max_by, not a window sort: the broadcast
+    # crossJoin's n×C scored rows collapse map-side in the partial
+    # aggregate, so the shuffle moves n rows. Tie-break: higher cdot, then
+    # lower cell — the rule `_ivf_lloyd`'s NumPy argmax trains with, kept
+    # from drifting by the reference-parity test in tests/test_ivf_train.py.
+    # n_assign>1 scores the whole centroid set ROW-LOCALLY against a
+    # one-row broadcast array and takes top-n with array_sort + slice —
+    # zero shuffle (the previous Window.partitionBy(t_id) spelling
+    # hash-exchanged all n×C scored rows, ADVICE r4). Sort key (-cdot,
+    # cell) ascending ≡ the old window's (cdot DESC, cell ASC) tie-break, so
+    # assignments are unchanged. At 100 TB this is exactly how an IVF
+    # indexer runs: each row scores C centroids locally; only the (cell, id)
+    # index shuffles — and only if a downstream consumer asks it to.
+    if n_assign == 1:
+        order = F.struct(F.col("cdot"), (-F.col("cell")).alias("negcell"))
+        index = (
+            t.crossJoin(F.broadcast(cents))
+            .select("t_id", "label", "tv", "cell", _dot(F.col("tv"), F.col("cv")).alias("cdot"))
+            .groupBy("t_id")
+            .agg(F.max_by(F.struct("cell", "t_id", "label", "tv"), order).alias("b"))
+            .select("b.cell", "b.t_id", "b.label", "b.tv")
         )
-        return (
-            t.crossJoin(F.broadcast(cents_arr))
-            .select("t_id", "label", "tv", F.explode(top).alias("tc"))
-            .select("tc.cell", "t_id", "label", "tv")
-        )
-
-    index = session_memo(
-        "ivf-index", spark, f"{sf_dir}|n_assign={n_assign}",
-        lambda: (_sig(), n_cells, IVF_ITERS, n_assign), _final,
-        # IVF_ITERS in the sig: the index must supersede together with the
-        # model it was assigned from; fresh-at-build callable like the rest
+        return index, cents
+    cents_arr = cents.agg(F.collect_list(F.struct("cell", "cv")).alias("cs"))
+    top = F.slice(
+        F.array_sort(
+            F.transform(
+                F.col("cs"),
+                lambda c: F.struct(
+                    (-_dot(F.col("tv"), c["cv"])).alias("negdot"),
+                    c["cell"].alias("cell"),
+                ),
+            )
+        ),
+        1,
+        n_assign,
+    )
+    index = (
+        t.crossJoin(F.broadcast(cents_arr))
+        .select("t_id", "label", "tv", F.explode(top).alias("tc"))
+        .select("tc.cell", "t_id", "label", "tv")
     )
     return index, cents
 
@@ -714,8 +687,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        Each pass assigns to the argmax-dot centroid in IVF_TRAIN_BLOCK-row
        blocks, then takes the per-cell spherical mean (L2-renormalized).
        Driver memory peaks at the sample (≤ 512 MB at the 4096-cell
-       ceiling) plus one ≤ 32 MB score block; the C×64 model (cached — it
-       IS the model) goes back to Spark as an Arrow table.
+       ceiling) plus one ≤ 32 MB score block; the C×64 model goes back
+       to Spark as an Arrow table.
     2. index: one final assignment → (cell, t_id, tv). At 100 TB this is
        the write-once partitioned index; cells are ~√n vectors, so probe
        cost grows as √n, not n.

@@ -70,8 +70,10 @@ COMMENTARY = {
         "pair aggregate — no inverted-index SELF-JOIN, so no join whose "
         "broadcast-vs-merge choice can vary between runs. Both the count "
         "pass and the list pass partition by shingle, so the groupBy reuses "
-        "the semi-join's exchange. Sizes reuse the cached (narrow, ≤ 50 ids "
-        "per shingle) posting relation."
+        "the semi-join's exchange. Nothing is persisted past the shared "
+        "shingle memo: the pair aggregate and both sides of the size join "
+        "each recompute the posting lists, which measured cheaper than "
+        "persisting them behind a count barrier."
     ),
     "q_sql_waiting_orders": (
         "TPC-H Q21 (round 2): Catalyst decorrelates the EXISTS into a "
@@ -187,14 +189,14 @@ COMMENTARY = {
     "q_semdedup_clustered": (
         "Clustered SemDeDup (round 5 — the registered 100 TB path, shared "
         "candidate stage with the clustered decontamination and cross-"
-        "lingual twins): the memoized IVF model assigns each vector to its "
-        "top-3 cells ROW-LOCALLY against a one-row broadcast centroid "
-        "array (no t_id exchange — ADVICE r4), the within-cell self-join "
-        "is pinned SHUFFLE_HASH (both sides corpus-sized; pair work "
-        "Σ|cell|² ≈ n·√n), and the verify + report tail reuses the exact "
-        "twin's narrow-projection broadcasts. The InMemoryTableScan leaves "
-        "are the per-session persisted model — at 100 TB a write-once "
-        "index artifact."
+        "lingual twins): the driver-trained IVF model (an Arrow-built "
+        "LocalTableScan) assigns "
+        "each vector to its top-3 cells ROW-LOCALLY against a one-row "
+        "broadcast centroid array (no t_id exchange — ADVICE r4), the "
+        "within-cell self-join is pinned SHUFFLE_HASH (both sides "
+        "corpus-sized; pair work Σ|cell|² ≈ n·√n), and the verify + report "
+        "tail reuses the exact twin's narrow-projection broadcasts. Nothing "
+        "is persisted: the index is computed by the query that reads it."
     ),
     "q_dedup_substring": (
         "Exact-substring dedup (round 6 — Lee et al. '21 ExactSubstr as "

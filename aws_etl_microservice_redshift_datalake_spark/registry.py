@@ -101,7 +101,8 @@ def _driver_history(repo: str | None = None) -> tuple[dict[str, int], frozenset[
     # two digits
     for rnd_no, path in sorted(found):
         try:
-            rows = json.load(open(path))
+            with open(path) as f:
+                rows = json.load(f)
         except (OSError, ValueError) as exc:
             # A truncated/corrupt artifact must not SILENTLY make that
             # round's greens look unchecked (it would reshuffle the 50-slot
@@ -219,6 +220,8 @@ _RECHECK_CHANGED: dict[str, int] = {
     "q_cluster_split": 15,  # same label relation, now built straight from
     # q_dedup_minhash_pairs (no pair memo).
     "q_training_pipeline": 15,  # same label-relation consumer.
+    "q_ngram_jaccard": 15,  # postings recomputed per query: the bare
+    # cache it replaced outlived a rewrite of documents.
 }
 
 _RECHECK: frozenset[str] = frozenset(

@@ -129,6 +129,39 @@ def test_dedup_sets_no_session_conf():
     assert {"dedup", "streams"} <= set(seen)
 
 
+def test_no_bare_cache_outside_the_memo():
+    # a relation a query persists goes through _memo.session_memo, so
+    # clear_session_memos can release it; a bare cache() outlives both the
+    # memo and a rewrite of its input. The exceptions: the memo itself,
+    # connected_components' persist-before-checkpoint (released each
+    # round) and the materialized view the caller asked for.
+    import ast
+    import importlib
+    import inspect
+    import pkgutil
+
+    from aws_etl_microservice_redshift_datalake_spark import operators, streaming
+
+    allowed = {
+        ("_memo", "session_memo"),
+        ("dedup", "connected_components"),
+        ("matview", "create_materialized_view"),
+    }
+    found = set()
+    for pkg in (operators, streaming):
+        for m in pkgutil.iter_modules(pkg.__path__):
+            mod = importlib.import_module(f"{pkg.__name__}.{m.name}")
+            for top in ast.parse(inspect.getsource(mod)).body:
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in ("cache", "persist")
+                    ):
+                        found.add((m.name, getattr(top, "name", None)))
+    assert found == allowed
+
+
 def test_cc_loop_leaves_shuffle_partitions_unchanged(spark, monkeypatch):
     # the star loop (driver cap 0) runs at the session's own partition
     # count and hands it back untouched

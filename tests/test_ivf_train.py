@@ -3,9 +3,9 @@
 Training runs on the driver (one Arrow collect, NumPy Lloyd passes) while
 the final index assignment stays in Spark. The two assignment spellings —
 NumPy first-argmax in `_ivf_lloyd`, `max_by` over (cdot, -cell) in
-`_assign` — must keep one tie-break rule. The reference below is the Spark
-Lloyd trainer the driver-side one replaced; parity against it pins the
-trained model bit-for-bit up to float64 summation order."""
+`build_ivf_index` — must keep one tie-break rule. The reference below is
+the Spark Lloyd trainer the driver-side one replaced; parity against it
+pins the trained model bit-for-bit up to float64 summation order."""
 
 from __future__ import annotations
 
@@ -115,16 +115,18 @@ def test_lloyd_empty_sample_trains_empty_model():
 
 
 def test_cold_ivf_build_job_count(spark):
-    """A cold build_ivf_index at sf0.01 — training plus the persisted index —
-    runs at most 12 Spark jobs (the per-pass Spark trainer ran 23)."""
+    """A cold build_ivf_index at sf0.01 plus one noop read of its index
+    runs at most 6 Spark jobs (the per-pass Spark trainer's build alone ran
+    23; the memoized model and index, 11 + 1)."""
     clear_session_memos(spark)
     sc = spark.sparkContext
     group = "test-ivf-cold-build"
     sc.setJobGroup(group, "cold build_ivf_index")
     try:
-        build_ivf_index(spark, SF_MED)
+        index, _cents = build_ivf_index(spark, SF_MED)
+        index.write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 12, f"cold IVF build ran {len(jobs)} Spark jobs"
+    assert len(jobs) <= 6, f"cold IVF build + index read ran {len(jobs)} Spark jobs"

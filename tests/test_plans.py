@@ -503,41 +503,13 @@ def test_ivf_multiprobe_assignment_zero_shuffle(spark):
     scores the one-row broadcast centroid array row-locally and explodes
     top-n — the plan between the embeddings scan and the index rows must
     contain NO exchange (the old window spelling hash-partitioned all n×C
-    scored rows). The memoized index is persisted, so audit the builder's
-    plan, not the memo hit."""
+    scored rows)."""
     from aws_etl_microservice_redshift_datalake_spark.operators import vectors as V
 
-    # audit the assignment SHAPE in isolation: a literal centroid relation
-    # stands in for the trained model (the memoized model's explain text
-    # would drag the whole training lineage into the exchange count)
-    cents = spark.createDataFrame(
-        [(i, [0.1] * 64) for i in range(8)], "cell BIGINT, cv ARRAY<DOUBLE>"
-    )
-    e = V._embeddings(spark, SF_MED)
-    t = e.select(
-        F.col("vec_id").alias("t_id"), "label", F.col("embedding").alias("tv")
-    )
-    cents_arr = cents.agg(F.collect_list(F.struct("cell", "cv")).alias("cs"))
-    top = F.slice(
-        F.array_sort(
-            F.transform(
-                F.col("cs"),
-                lambda c: F.struct(
-                    (-V._dot(F.col("tv"), c["cv"])).alias("negdot"),
-                    c["cell"].alias("cell"),
-                ),
-            )
-        ),
-        1,
-        2,
-    )
-    assign = (
-        t.crossJoin(F.broadcast(cents_arr))
-        .select("t_id", "label", "tv", F.explode(top).alias("tc"))
-        .select("tc.cell", "t_id", "label", "tv")
-    )
+    assign = V.build_ivf_index(spark, SF_MED, n_assign=2)[0]
     p = audit.plan_str(assign, mode="simple")
     assert "ShuffledHashJoin" not in p and "SortMergeJoin" not in p
+    assert "InMemoryTableScan" not in p
     # the precise ADVICE r4 regression signal: the old window spelling
     # hash-partitioned all n×C scored rows on t_id — that exchange must be
     # gone. Allowed exchanges: the tiny centroid aggregate's single

@@ -589,10 +589,11 @@ def test_session_memo_distinct_keys_build_in_parallel(spark):
 def test_concurrent_queries_one_session(spark):
     """Multi-tenant driver shape: the memo-heavy dedup/vector family, a
     watermark stream, and one SQL-text query over two sf dirs run from 6
-    threads on ONE session must all match a serial run (shared persisted
-    intermediates, IVF model and connected-components checkpoints under
-    concurrency; no stream conf and no SQL temp view reaching another
-    thread) and leave the session's conf and catalog as they were."""
+    threads on ONE session must all match a serial run (memoized shingle,
+    bucket and cluster-label relations and connected-components
+    checkpoints under concurrency; no stream conf and no SQL temp view
+    reaching another thread) and leave the session's conf and catalog as
+    they were."""
     from concurrent.futures import ThreadPoolExecutor
 
     names = [
@@ -757,6 +758,27 @@ def test_driver_history_green_predicate(tmp_path):
         last_green2, _ = _driver_history(str(tmp_path))
     assert last_green2.get("q_all_green") == 1
     assert any("CORRECTNESS_r02" in str(w.message) for w in caught)
+
+
+def test_driver_history_closes_artifacts(tmp_path):
+    """Every artifact file is closed once read, including a corrupt one."""
+    import gc
+    import json
+    import warnings
+
+    from aws_etl_microservice_redshift_datalake_spark.registry import _driver_history
+
+    row = {"rows_match": True, "schema_match": True, "hash_match": True,
+           "spark_rows": 1, "err": None}
+    for rnd in range(1, 4):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps({"q_a": row}))
+    (tmp_path / "CORRECTNESS_r04.json").write_text("{truncated")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        last_green, _ = _driver_history(str(tmp_path))
+        gc.collect()
+    assert last_green == {"q_a": 3}
+    assert not [w for w in caught if issubclass(w.category, ResourceWarning)]
 
 
 def test_session_memo_supersede_is_freshness_ordered(spark):

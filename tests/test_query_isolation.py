@@ -5,17 +5,29 @@ and stream queries their UTC/shuffle conf and memory sink, all on a
 ``session.sibling`` of the caller. These tests pin that the caller's catalog
 and conf are untouched, that concurrent SQL-text queries over different sf
 dirs on one session cannot resolve each other's views, and that a conf the
-caller set at runtime still reaches the query.
+caller set at runtime still reaches the query. Every relation a query
+persists goes through the session memo, so ``clear_session_memos`` releases
+it and a rewritten corpus is read afresh.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 from concurrent.futures import ThreadPoolExecutor
 
-import aws_etl_microservice_redshift_datalake_spark as engine
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
 
-from tests.conftest import SF_MED, SF_SMALL
+import aws_etl_microservice_redshift_datalake_spark as engine
+from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+    clear_session_memos,
+)
+
+from tests.conftest import SF_MED, SF_SMALL, run_compare, sweep_subset
 
 QS = engine.all_queries()
 ISOLATED = ["q_sql_cust_distribution", "q_udtf_bigrams", "q_stream_watermark"]
@@ -78,3 +90,50 @@ def test_sql_registers_only_the_tables_it_names(spark):
                 "ON o.o_custkey = c.c_custkey WHERE o_orderkey > 0")
     assert _temp_views(df.sparkSession) == ["customer", "orders"]
     assert df.collect()[0].n > 0
+
+
+# at least one query through each persist site: every memo, CC and the
+# former IVF and n-gram postings caches; the sweep subset adds the rest
+PERSISTING = [
+    "q_ngram_jaccard", "q_dedup_minhash_pairs", "q_dedup_clusters",
+    "q_cluster_split", "q_setsim_join", "q_containment_apply",
+    "q_dedup_incremental", "q_cosine_neardup", "q_ann_ivf_topk",
+    "q_semdedup_clustered",
+]
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("name", sorted(set(PERSISTING) | set(sweep_subset(QS, QS))))
+def test_clear_session_memos_releases_what_a_query_persisted(spark, name):
+    clear_session_memos(spark)
+    before = _persistent_rdds(spark)
+    QS[name](spark, SF_SMALL).write.format("noop").mode("overwrite").save()
+    clear_session_memos(spark)
+    assert _persistent_rdds(spark) <= before
+
+
+def test_ngram_jaccard_reads_a_rewritten_corpus(spark, duck, tmp_path):
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(SF_SMALL):
+        shutil.copy(os.path.join(SF_SMALL, f), sf / f)
+    name = "q_ngram_jaccard"
+    first = QS[name](spark, str(sf)).count()
+
+    # a second copy of every document under fresh ids: each doc gains an
+    # exact duplicate, so the pair set grows
+    path = str(sf / "documents.parquet")
+    docs = pq.read_table(path)
+    dup = docs.set_column(
+        docs.schema.get_field_index("doc_id"), "doc_id",
+        pc.add(docs["doc_id"], pc.max(docs["doc_id"]).as_py() + 1),
+    )
+    pq.write_table(pa.concat_tables([docs, dup]), path + ".new")
+    os.replace(path + ".new", path)
+    clear_session_memos(spark)
+
+    run_compare(spark, duck, name, QS[name], engine.all_oracles()[name], str(sf))
+    assert QS[name](spark, str(sf)).count() > first
