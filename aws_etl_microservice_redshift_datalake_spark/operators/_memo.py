@@ -10,16 +10,18 @@ n-gram, set-similarity and containment query), ``containment-prefix`` and
 ``containment-postings``. Shared across queries only: ``cc-labels`` (the
 three cluster queries solve one graph).
 
-Entries live on the ``SparkSession`` they serve, in
-``spark.__dict__["_graft_memo"]``: entries keyed ``(name, sf_dir, sig)``,
-where ``sig`` is a table-state signature (``sources.io._stat_sig`` or a
-tuple nesting one), and build locks keyed ``(name, sf_dir)``. The table
-dies with its session. A ``WeakKeyDictionary`` keyed by session would never
-clear, since each memoized DataFrame references its session.
+Slots live on the ``SparkSession`` they serve, in
+``spark.__dict__["_graft_memo"]``, one per ``(name, sf_dir)``: a build
+lock, the table-state signature the relation was built under
+(``sources.io._stat_sig`` or a tuple nesting one) and the persisted
+relation. The table dies with its session. A ``WeakKeyDictionary`` keyed
+by session would never clear, since each memoized DataFrame references
+its session.
 
-Installing an entry unpersists the same key's entries whose signature is
-strictly older by max file mtime. On a tie both stay: coarse-mtime
-filesystems can stamp a pre- and post-rewrite state alike.
+A slot holds at most one relation. When the signature has moved, the held
+relation is unpersisted before the new one is built: Spark's CacheManager
+matches cached plans by file path, so a rewritten table's new plan would
+otherwise find the stale cache, read its rows and refuse to cache anew.
 """
 
 from __future__ import annotations
@@ -32,10 +34,27 @@ from pyspark.sql import DataFrame, SparkSession
 _MUTEX = threading.Lock()
 
 
-def _tables(spark: SparkSession) -> tuple[dict, dict]:
-    """(entries, locks) of ``spark``'s memo, created on first use."""
+class _Slot:
+    """One ``(name, sf_dir)``: its build lock, and the relation ``df``
+    persisted for the table state ``sig`` (``df`` is None when empty)."""
+
+    def __init__(self) -> None:
+        self.lock, self.sig, self.df = threading.Lock(), None, None
+
+    def drop(self) -> int:
+        """Unpersist and forget the held relation (lock held); returns how
+        many were dropped."""
+        if self.df is None:
+            return 0
+        _unpersist(self.df)
+        self.df = None
+        return 1
+
+
+def _slots(spark: SparkSession) -> dict[tuple[str, str], _Slot]:
+    """``spark``'s memo slots, created on first use."""
     with _MUTEX:
-        return spark.__dict__.setdefault("_graft_memo", ({}, {}))
+        return spark.__dict__.setdefault("_graft_memo", {})
 
 
 def _unpersist(df: DataFrame) -> None:
@@ -45,63 +64,47 @@ def _unpersist(df: DataFrame) -> None:
         pass
 
 
-def _sig_fresh(sig: object) -> int:
-    """Max mtime_ns in a (nested) tuple of ``(path, size, mtime_ns)``."""
-    if isinstance(sig, tuple):
-        if len(sig) == 3 and isinstance(sig[0], str) and isinstance(sig[2], int):
-            return sig[2]
-        return max((_sig_fresh(s) for s in sig), default=0)
-    return 0
-
-
 def clear_session_memos(spark: SparkSession) -> int:
     """Unpersist and drop every relation memoized on ``spark``; returns how
-    many. Key locks are taken one at a time, never nested, so a build in
-    flight finishes first and its entry is dropped too."""
-    entries, locks = _tables(spark)
+    many. Slot locks are taken one at a time, never nested, so a build in
+    flight finishes first and its relation is dropped too."""
+    slots = _slots(spark)
     dropped = 0
     while True:
         with _MUTEX:
-            pending = list(locks.items())
-        for lkey, lock in pending:
-            with lock, _MUTEX:
-                gone = [entries.pop(k) for k in list(entries) if k[:2] == lkey]
-            for df in gone:
-                _unpersist(df)
-            dropped += len(gone)
+            pending = list(slots.values())
+        for slot in pending:
+            with slot.lock:
+                dropped += slot.drop()
         with _MUTEX:
-            if not entries:
+            if all(slot.df is None for slot in slots.values()):
                 return dropped
 
 
 def session_memo(
-    name: str, spark: SparkSession, sf_dir: str, sig: object,
+    name: str, spark: SparkSession, sf_dir: str, sig: Callable[[], object],
     build: Callable[[], DataFrame],
 ) -> DataFrame:
-    """The relation memoized on ``spark`` under (``name``, ``sf_dir``,
-    ``sig``). On a miss ``build()`` is persisted behind a ``count()``
-    barrier: a lazy cache read by several unmaterialized stages of one
-    action is recomputed by each. A callable ``sig`` is evaluated under the
-    key lock and again after the build; if they differ, a rewrite landed
-    mid-build, so the relation is returned unpersisted and not installed."""
-    entries, locks = _tables(spark)
+    """The relation memoized on ``spark`` under (``name``, ``sf_dir``) for
+    the table state ``sig()``. Under the slot lock: a matching signature
+    returns the held relation; otherwise the held one is unpersisted and
+    ``build()`` is persisted behind a ``count()`` barrier (a lazy cache
+    read by several unmaterialized stages of one action is recomputed by
+    each). ``sig()`` is evaluated again after the barrier; if it moved, a
+    rewrite landed mid-build, so the relation is returned unpersisted and
+    not installed."""
+    slots = _slots(spark)
     with _MUTEX:
-        lock = locks.setdefault((name, sf_dir), threading.Lock())
-    with lock:
-        sig_fn = sig if callable(sig) else None
-        key = (name, sf_dir, sig_fn() if sig_fn else sig)
-        if key in entries:
-            return entries[key]
+        slot = slots.setdefault((name, sf_dir), _Slot())
+    with slot.lock:
+        want = sig()
+        if slot.df is not None and slot.sig == want:
+            return slot.df
+        slot.drop()
         df = build().persist()
         df.count()
-        if sig_fn is not None and sig_fn() != key[2]:
+        if sig() != want:
             _unpersist(df)
             return df
-        fresh = _sig_fresh(key[2])
-        with _MUTEX:
-            entries[key] = df
-            stale = [entries.pop(k) for k in list(entries)
-                     if k[:2] == key[:2] and _sig_fresh(k[2]) < fresh]
-        for odf in stale:
-            _unpersist(odf)
+        slot.sig, slot.df = want, df
         return df

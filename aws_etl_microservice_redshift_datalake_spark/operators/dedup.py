@@ -86,8 +86,8 @@ def _shingle_arrays_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind the memo's count barrier: every MinHash, n-gram, set-similarity
     and containment query reads it, most of them from several plan
     branches, and the prefix and postings memos below are built from it.
-    A rewritten corpus gets a new signature, so it re-materializes and the
-    superseded relation is unpersisted.
+    A rewritten corpus gets a new signature: the superseded relation is
+    unpersisted and the shingles re-materialize from the new files.
 
     Measured cold (sf0.1, `local[4]`, 3 alternating fresh-process pairs,
     memos cleared, noop sink), turning this memo off with the prefix and

@@ -158,7 +158,7 @@ def _scan_splits(path: str, max_partition_bytes: int = 128 << 20) -> int:
     return _splits_for(_stat_sig(path), max_partition_bytes, 4 << 20)
 
 
-def spread(df: DataFrame, spark: SparkSession, path: str | None = None) -> DataFrame:
+def spread(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     """Round-robin repartition a narrow scan up to the session's parallelism —
     but ONLY when the source actually under-splits (the sf* corpus tables ship
     as one single-row-group parquet file each, which pins every downstream
@@ -166,12 +166,10 @@ def spread(df: DataFrame, spark: SparkSession, path: str | None = None) -> DataF
     corpus the scan already yields >= parallelism splits and this is a no-op —
     no gratuitous full shuffle ahead of every pipeline.
 
-    With ``path`` the under-split check is pure parquet-footer metadata
-    (cached, zero Spark jobs); without it, falls back to the RDD partition
-    probe (eager plan conversion — avoid in queries())."""
+    The under-split check reads ``path``'s parquet footers only (cached,
+    zero Spark jobs)."""
     target = spark.sparkContext.defaultParallelism
-    splits = _scan_splits(path) if path is not None else df.rdd.getNumPartitions()
-    if splits >= target:
+    if _scan_splits(path) >= target:
         return df
     return df.repartition(target)
 

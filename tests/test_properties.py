@@ -495,7 +495,7 @@ def test_connected_components_random_graph_400(spark, monkeypatch, cap):
     assert got == _brute_components(edges)
 
 
-def test_normalize_epoch_ts_gate_boundary(spark):
+def test_normalize_epoch_ts_seeded_regimes(spark):
     """normalize_epoch_ts's 4e16 magnitude gate, exercised exactly at and
     around the boundary plus seeded values from both regimes, all in ONE
     Spark job (per-example Spark calls are too slow for hypothesis).

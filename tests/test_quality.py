@@ -502,14 +502,14 @@ def test_session_memo_evicts_superseded(spark):
     s = spark.newSession()
     sig1 = (("/x/part-0.parquet", 100, 1_000),)
     sig2 = (("/x/part-0.parquet", 120, 2_000),)  # a rewrite: fresher mtime
-    a = session_memo("t", s, "/x", sig1, lambda: s.range(5))
+    a = session_memo("t", s, "/x", lambda: sig1, lambda: s.range(5))
     assert a.storageLevel.useMemory
     # same signature: memo hit, the build lambda must not run
-    b = session_memo("t", s, "/x", sig1,
+    b = session_memo("t", s, "/x", lambda: sig1,
                      lambda: (_ for _ in ()).throw(AssertionError("rebuilt")))
     assert b is a
     # new signature at the same sf_dir: superseded entry unpersisted, replaced
-    c = session_memo("t", s, "/x", sig2, lambda: s.range(7))
+    c = session_memo("t", s, "/x", lambda: sig2, lambda: s.range(7))
     assert c is not a
     assert not a.storageLevel.useMemory, "superseded relation still pinned"
     assert c.storageLevel.useMemory
@@ -539,7 +539,7 @@ def test_session_memo_concurrent_single_build(spark):
 
     def call(_):
         gate.wait()  # maximize the race window
-        return session_memo("t", s, "/race", "s1", build)
+        return session_memo("t", s, "/race", lambda: "s1", build)
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)  # switch threads as often as possible
@@ -573,7 +573,7 @@ def test_session_memo_distinct_keys_build_in_parallel(spark):
             started.wait()  # BrokenBarrierError if the other build is blocked
             return s.range(3)
 
-        results[sf_dir] = session_memo("t", s, sf_dir, "s", build)
+        results[sf_dir] = session_memo("t", s, sf_dir, lambda: "s", build)
 
     threads = [threading.Thread(target=call, args=(d,)) for d in ("/p1", "/p2")]
     for t in threads:
@@ -781,56 +781,36 @@ def test_driver_history_closes_artifacts(tmp_path):
     assert not [w for w in caught if issubclass(w.category, ResourceWarning)]
 
 
-def test_session_memo_supersede_is_freshness_ordered(spark):
-    """Signature-keyed coexistence: a caller whose stat signature predates a
-    concurrent rewrite must NOT unpersist the newer relation out from under
-    its consumers — it gets a relation matching ITS OWN signature (built if
-    absent), which also keeps an mtime-preserving restore / snapshot
-    rollback CORRECT (the on-disk state wins; the memo can never pin
-    newer-mtimed data forever). Eviction is freshness-ordered: installing a
-    relation evicts only STRICTLY older sigs of the same (name, sf_dir) —
-    on a freshness tie both entries coexist (coarse-mtime filesystems can
-    stamp pre- and post-rewrite states with the same mtime_ns, and evicting
-    on the tie would let a stale-sig straggler unpersist the newer
-    relation). Signatures are real _stat_sig shapes ((path, size, mtime_ns)
-    tuples, optionally nested)."""
+def test_session_memo_unpersists_before_rebuild(spark):
+    """A slot holds one relation: when the signature moves, the held
+    relation is unpersisted BEFORE ``build()`` runs. Spark's CacheManager
+    matches cached plans by file path, so a rebuild of a rewritten table
+    that ran while the stale cache was still registered would read the
+    stale rows and never be cached itself. A signature moving back is a
+    plain rebuild: nothing older is kept."""
     from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
-        _sig_fresh,
         clear_session_memos,
         session_memo,
     )
 
-    old_sig = (("/d/part-0.parquet", 100, 1_000),)
-    new_sig = (("/d/part-0.parquet", 120, 2_000),)
-    assert _sig_fresh(old_sig) == 1_000 and _sig_fresh(new_sig) == 2_000
-    # composite (IVF-style) signatures order by the nested stat sig
-    assert _sig_fresh((new_sig, 32, 4)) == 2_000
-
     s = spark.newSession()
-    fresh = session_memo("t", s, "/ord", new_sig, lambda: s.range(9))
-    # stale-sig arrival (restore-to-older-snapshot / racing pre-rewrite
-    # caller): builds ITS OWN relation; the newer one survives persisted
-    got = session_memo("t", s, "/ord", old_sig, lambda: s.range(7))
-    assert got is not fresh and got.count() == 7
-    assert fresh.storageLevel.useMemory, "newer relation was unpersisted"
-    # exact-sig re-arrival is a plain hit on the coexisting entry
-    assert session_memo("t", s, "/ord", old_sig, lambda: 1 / 0) is got
-    assert session_memo("t", s, "/ord", new_sig, lambda: 1 / 0) is fresh
-    # freshness TIE (coarse-mtime rewrite: same mtime_ns, different size):
-    # the tied arrival coexists — it must NOT evict the equally-fresh entry
-    tied_sig = (("/d/part-0.parquet", 121, 2_000),)
-    tied = session_memo("t", s, "/ord", tied_sig, lambda: s.range(3))
-    assert tied is not fresh and fresh.storageLevel.useMemory, (
-        "tied-sig arrival evicted the equally-fresh relation"
-    )
-    # strictly newer signature supersedes ALL older-and-tied entries
-    newest_sig = (("/d/part-0.parquet", 130, 3_000),)
-    nxt = session_memo("t", s, "/ord", newest_sig, lambda: s.range(4))
-    assert nxt is not fresh and not fresh.storageLevel.useMemory
-    assert not got.storageLevel.useMemory
-    assert not tied.storageLevel.useMemory
-    assert session_memo("t", s, "/ord", newest_sig, lambda: 1 / 0) is nxt
-    assert clear_session_memos(s) == 1, "an evicted entry stayed in the table"
+    old_sig = (("/d/part-0.parquet", 100, 1_000),)
+    new_sig = (("/d/part-0.parquet", 120, 1_000),)  # same mtime, new size
+    held = session_memo("t", s, "/ord", lambda: old_sig, lambda: s.range(9))
+    assert held.storageLevel.useMemory
+    seen = []
+
+    def build():
+        seen.append(held.storageLevel.useMemory)
+        return s.range(7)
+
+    got = session_memo("t", s, "/ord", lambda: new_sig, build)
+    assert seen == [False], "the held relation was still cached at build()"
+    assert got.storageLevel.useMemory and got.count() == 7
+    assert session_memo("t", s, "/ord", lambda: new_sig, lambda: 1 / 0) is got
+    back = session_memo("t", s, "/ord", lambda: old_sig, lambda: s.range(3))
+    assert back.count() == 3 and not got.storageLevel.useMemory
+    assert clear_session_memos(s) == 1, "a replaced relation stayed in the slot"
 
 
 def test_exact_substring_production_k50(spark):
@@ -868,15 +848,15 @@ def test_session_memo_isolates_newSession_siblings(spark):
     )
 
     s1, s2 = spark.newSession(), spark.newSession()
-    a = session_memo("t", s1, "/iso", "s", lambda: s1.range(3))
-    b = session_memo("t", s2, "/iso", "s", lambda: s2.range(4))
+    a = session_memo("t", s1, "/iso", lambda: "s", lambda: s1.range(3))
+    b = session_memo("t", s2, "/iso", lambda: "s", lambda: s2.range(4))
     assert a is not b and a.count() == 3 and b.count() == 4
     # same key again: each session still gets ITS relation back
-    assert session_memo("t", s1, "/iso", "s", lambda: 1 / 0) is a
-    assert session_memo("t", s2, "/iso", "s", lambda: 1 / 0) is b
+    assert session_memo("t", s1, "/iso", lambda: "s", lambda: 1 / 0) is a
+    assert session_memo("t", s2, "/iso", lambda: "s", lambda: 1 / 0) is b
     assert clear_session_memos(s1) == 1
     assert not a.storageLevel.useMemory and b.storageLevel.useMemory
-    assert session_memo("t", s2, "/iso", "s", lambda: 1 / 0) is b
+    assert session_memo("t", s2, "/iso", lambda: "s", lambda: 1 / 0) is b
     assert clear_session_memos(s2) == 1
 
 
@@ -931,15 +911,17 @@ def test_session_memo_callable_sig_fresh_at_build(spark):
     s = spark.newSession()
     state = {"sig": (("/p", 1, 100),)}
     a = session_memo("t", s, "/cal", lambda: state["sig"], lambda: s.range(2))
-    # keyed by the evaluated signature: the plain value is a hit
-    assert session_memo("t", s, "/cal", (("/p", 1, 100),), lambda: 1 / 0) is a
+    # matched on the evaluated signature: any callable returning it hits
+    hit = session_memo("t", s, "/cal", lambda: (("/p", 1, 100),), lambda: 1 / 0)
+    assert hit is a
     # a rewrite lands before the next arrival: the fresh signature is what
     # the call keys on, so it MISSES the old entry and supersedes it
     state["sig"] = (("/p", 2, 200),)
     b = session_memo("t", s, "/cal", lambda: state["sig"], lambda: s.range(3))
     assert b is not a and b.count() == 3
     assert not a.storageLevel.useMemory, "superseded relation still pinned"
-    assert session_memo("t", s, "/cal", (("/p", 2, 200),), lambda: 1 / 0) is b
+    hit = session_memo("t", s, "/cal", lambda: (("/p", 2, 200),), lambda: 1 / 0)
+    assert hit is b
     assert clear_session_memos(s) == 1
 
 
@@ -1014,7 +996,9 @@ def test_session_memo_racing_rewrite_across_threads(spark):
     assert builds == [2, 5], "B must rebuild from the rewritten state"
     assert results["a"].count() == 2 and results["b"].count() == 5
     # exactly one surviving entry: B's, keyed by the POST-rewrite signature
-    hit = session_memo("t", s, "/rewrite-race", (("/p", 2, 200),), lambda: 1 / 0)
+    hit = session_memo(
+        "t", s, "/rewrite-race", lambda: (("/p", 2, 200),), lambda: 1 / 0
+    )
     assert hit is results["b"]
     assert not results["a"].storageLevel.useMemory, "stale relation still pinned"
     assert clear_session_memos(s) == 1
@@ -1041,11 +1025,13 @@ def test_clear_session_memos_waits_for_inflight_build(spark):
     def build():
         in_build.set()
         assert release.wait(30), "orchestration stalled"
-        results["inner"] = session_memo("t-inner", s, "/gate", "s", lambda: s.range(2))
+        results["inner"] = session_memo(
+            "t-inner", s, "/gate", lambda: "s", lambda: s.range(2)
+        )
         return results["inner"].select("id")
 
     def call():
-        results["a"] = session_memo("t", s, "/gate", "s", build)
+        results["a"] = session_memo("t", s, "/gate", lambda: "s", build)
 
     def clear():
         results["dropped"] = clear_session_memos(s)

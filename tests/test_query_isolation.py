@@ -137,3 +137,35 @@ def test_ngram_jaccard_reads_a_rewritten_corpus(spark, duck, tmp_path):
 
     run_compare(spark, duck, name, QS[name], engine.all_oracles()[name], str(sf))
     assert QS[name](spark, str(sf)).count() > first
+
+
+def test_memo_rebuilds_a_table_rewritten_in_place(spark, duck, tmp_path):
+    # no clear_session_memos between the reads: the memo alone sees the
+    # moved signature, drops the stale shingles and caches the rebuild
+    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
+        _shingle_arrays_persisted,
+    )
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for f in os.listdir(SF_SMALL):
+        shutil.copy(os.path.join(SF_SMALL, f), sf / f)
+    name = "q_setsim_join"
+    first = QS[name](spark, str(sf)).count()
+    n_docs = _shingle_arrays_persisted(spark, str(sf)).count()
+
+    path = str(sf / "documents.parquet")
+    docs = pq.read_table(path)
+    dup = docs.set_column(
+        docs.schema.get_field_index("doc_id"), "doc_id",
+        pc.add(docs["doc_id"], pc.max(docs["doc_id"]).as_py() + 1),
+    )
+    pq.write_table(pa.concat_tables([docs, dup]), path + ".new")
+    os.replace(path + ".new", path)
+
+    run_compare(spark, duck, name, QS[name], engine.all_oracles()[name], str(sf))
+    assert QS[name](spark, str(sf)).count() > first
+    shingles = _shingle_arrays_persisted(spark, str(sf))
+    assert shingles.storageLevel.useMemory, "the rebuilt shingles are not cached"
+    assert shingles.count() == 2 * n_docs
+    clear_session_memos(spark)
