@@ -1,14 +1,13 @@
 """Session-owned memo: the only relations a query leaves persisted, so
 ``clear_session_memos`` releases every one of them.
 
-Six entries stay, each with a measured win (the numbers sit at the call
-sites). Barriers inside one query, where a relation feeds several
+Three entries stay, each with a measured win (the numbers sit at the
+call sites). A barrier inside one query, where a relation feeds several
 branches of one plan and a lazy cache would be recomputed by each:
-``setsim-prefix`` and ``lsh-buckets`` (self-joins). Artifacts shared across
-queries that are also barriers inside each: ``shingles`` (every MinHash,
-n-gram, set-similarity and containment query), ``containment-prefix`` and
-``containment-postings``. Shared across queries only: ``cc-labels`` (the
-three cluster queries solve one graph).
+``lsh-buckets`` (a self-join). An artifact shared across queries that is
+also a barrier inside each: ``shingles`` (every MinHash, n-gram,
+set-similarity and containment query). Shared across queries only:
+``cc-labels`` (the three cluster queries solve one graph).
 
 Slots live on the ``SparkSession`` they serve, in
 ``spark.__dict__["_graft_memo"]``, one per ``(name, sf_dir)``: a build

@@ -85,15 +85,15 @@ def _shingle_arrays_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shingle-array relation, memoized per (session, table state)
     behind the memo's count barrier: every MinHash, n-gram, set-similarity
     and containment query reads it, most of them from several plan
-    branches, and the prefix and postings memos below are built from it.
+    branches.
     A rewritten corpus gets a new signature: the superseded relation is
     unpersisted and the shingles re-materialize from the new files.
 
     Measured cold (sf0.1, `local[4]`, 3 alternating fresh-process pairs,
-    memos cleared, noop sink), turning this memo off with the prefix and
-    postings memos kept: q_setsim_join 4.82 → 9.17 s, q_containment_join
-    4.79 → 14.23 s, q_containment_apply 5.16 → 15.68 s — each of those
-    relations re-shingles without it."""
+    memos cleared, noop sink), turning this memo off with the since
+    deleted set-similarity prefix and postings memos kept: q_setsim_join
+    4.82 → 9.17 s, q_containment_join 4.79 → 14.23 s, q_containment_apply
+    5.16 → 15.68 s — each of those relations re-shingles without it."""
     from ..sources.io import _stat_sig, table_path
     from ._memo import session_memo
 
@@ -1759,7 +1759,8 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     build per session/corpus); document frequencies are one linear
     token shuffle; the canonical per-set order is a ROW-LOCAL sort_array
     over (df, hash) structs after one df-hydration join (never a global
-    vocabulary sort); candidates join prefix-token to prefix-token
+    vocabulary sort), computed once per query and read by both join sides;
+    candidates join prefix-token to prefix-token
     (SHUFFLE_HASH — both sides corpus-scale on a crawl) and dedupe to
     distinct pairs BEFORE the verify; the verify hydrates the two full
     sets by doc_id and computes exact |∩|/|∪| row-locally
@@ -1771,26 +1772,6 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return setsim_join_sets(
         _shingle_arrays_persisted(spark, sf_dir),
         SETSIM_TAU,
-        pref=_setsim_prefix_persisted(spark, sf_dir),
-    )
-
-
-def _setsim_prefix_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical-order prefix relation (doc_id, n, pos, h), memoized
-    per (session, table state) behind the memo's count barrier: the
-    candidate stage SELF-JOINS it, and without a materialization point each
-    join side re-runs the whole df-hydration shuffle + per-doc canonical
-    sort. Cold q_setsim_join with every memo on → off: 3.41 → 6.77 s,
-    19 → 14 jobs (sf0.1, `local[4]`, 3 alternating fresh-process pairs)."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        "setsim-prefix", spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),
-        lambda: _setsim_prefix(
-            _shingle_arrays_persisted(spark, sf_dir), SETSIM_TAU
-        ),
     )
 
 
@@ -1799,9 +1780,18 @@ def _canonical_ordered(sets: DataFrame) -> DataFrame:
     canonical rare-first order (ascending document frequency, ties by
     hash) — one linear token shuffle for df, one df-hydration join, then
     a ROW-LOCAL sort_array over (df, h) structs; never a global
-    vocabulary sort. Shared by the Jaccard prefix relation and the
-    containment postings so the two joins can never disagree on the
-    order (their positional filters compare positions ACROSS relations)."""
+    vocabulary sort. Every prefix and posting relation of the family is
+    read from it by :func:`_positions`, so the joins can never disagree
+    on the order (their positional filters compare positions ACROSS
+    relations).
+
+    Not memoized: behind the memo's count barrier it measured slower per
+    cold query (sf0.1, `local[4]`, 4g heap, `bench.time_queries`, 6
+    rotating fresh-process rounds, medians, memo on → off):
+    q_containment_join 3.10 → 2.56 s (off lower in 6 of 6), q_setsim_join
+    3.08 → 2.79 s (5 of 6), q_containment_apply 3.92 → 3.63 s (4 of 6).
+    Only the three run in one session with memos kept read it faster
+    memoized: 9.09 → 11.00 s, 41 → 53 jobs."""
     tok = sets.select("doc_id", F.explode("sh").alias("h"))
     dfreq = tok.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     return (
@@ -1815,33 +1805,33 @@ def _canonical_ordered(sets: DataFrame) -> DataFrame:
     )
 
 
-def _setsim_prefix(sets: DataFrame, tau: float) -> DataFrame:
-    """(doc_id, n, pos, h): each set's canonical-order PREFIX of length
-    n − ceil(τ·n) + 1, with 1-based position and the set size (order via
-    :func:`_canonical_ordered`).
+def _positions(ordered: DataFrame, tau: float | None = None) -> DataFrame:
+    """(doc_id, n, pos, h) from the canonical order: with ``tau``, each
+    set's PREFIX of length n − ceil(τ·n) + 1; without it, EVERY position
+    (the containment join's indexed side). ``pos`` is 1-based and ``n``
+    is the set size. A row-local slice + posexplode, so each join side
+    re-runs only this step over the shared order.
 
     The ceil carries the same 1e-9 slack as the overlap threshold `need`
-    in setsim_join_sets: for a caller-supplied τ whose double repr sits a
+    in setsim_candidates: for a caller-supplied τ whose double repr sits a
     hair ABOVE the exact rational (e.g. a τ meant as 7/10), a bare ceil
     could overshoot an integer boundary and SHORTEN the prefix by one —
     the lossy direction. Subtracting 1e-9 before the ceil can only lower
     it, i.e. only LENGTHEN the prefix, which is always sound (ADVICE
     r10)."""
-    ranked = _canonical_ordered(sets)
     n = F.size("ordered")
-    p = (n - F.ceil(F.lit(tau) * n - F.lit(1e-9)) + 1).cast("int")
-    return ranked.select(
-        "doc_id",
-        n.alias("n"),
-        F.posexplode(F.slice("ordered", 1, p)).alias("pos0", "e"),
+    arr = F.col("ordered")
+    if tau is not None:
+        p = (n - F.ceil(F.lit(tau) * n - F.lit(1e-9)) + 1).cast("int")
+        arr = F.slice(arr, 1, p)
+    return ordered.select(
+        "doc_id", n.alias("n"), F.posexplode(arr).alias("pos0", "e")
     ).select(
         "doc_id", "n", (F.col("pos0") + 1).alias("pos"), F.col("e.h").alias("h")
     )
 
 
-def setsim_join_sets(
-    sets: DataFrame, tau: float, pref: DataFrame | None = None
-) -> DataFrame:
+def setsim_join_sets(sets: DataFrame, tau: float) -> DataFrame:
     """Library form of q_setsim_join over any (doc_id, sh: array<long>)
     relation of DISTINCT-element sets — split out so the brute-force
     property twin can certify the prefix filter's losslessness on random
@@ -1865,7 +1855,7 @@ def setsim_join_sets(
     Both twins of every qualifying pair reach the verify regardless, so
     the filters affect COST, never output — the brute-force oracle and
     the random-corpus property certify exactly that."""
-    cand = setsim_candidates(sets, tau, pref=pref)
+    cand = setsim_candidates(sets, tau)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     i = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1879,9 +1869,7 @@ def setsim_join_sets(
     )
 
 
-def setsim_candidates(
-    sets: DataFrame, tau: float, pref: DataFrame | None = None
-) -> DataFrame:
+def setsim_candidates(sets: DataFrame, tau: float) -> DataFrame:
     """The candidate stage alone: DISTINCT (doc_a, doc_b) pairs surviving
     the prefix + length + positional filters, BEFORE set hydration and the
     exact verify — split out so `scale_check.py --count setsim` can certify
@@ -1889,8 +1877,7 @@ def setsim_candidates(
     r10 #4: the wall-clock factor alone was the weakest evidence in the
     dedup family; this is the same direct-count treatment the clustered
     semantic family's Σ|cell|² certificate gives)."""
-    if pref is None:
-        pref = _setsim_prefix(sets, tau)
+    pref = _positions(_canonical_ordered(sets), tau)
     a = pref.select(
         F.col("doc_id").alias("doc_a"), F.col("n").alias("na"),
         F.col("pos").alias("ia"), "h",
@@ -1934,29 +1921,7 @@ def setsim_candidates(
 CONTAIN_TAU = 0.8
 
 
-def _containment_postings(sets: DataFrame) -> DataFrame:
-    """(doc_id, n, pos, h) for EVERY position — the full canonical-order
-    posting relation (the indexed side of the containment join; the
-    probe side reuses the Jaccard prefix machinery at the containment
-    τ). Shares :func:`_canonical_ordered` with _setsim_prefix so the two
-    relations' positions are comparable by construction."""
-    ranked = _canonical_ordered(sets)
-    n = F.size("ordered")
-    return ranked.select(
-        "doc_id",
-        n.alias("n"),
-        F.posexplode("ordered").alias("pos0", "e"),
-    ).select(
-        "doc_id", "n", (F.col("pos0") + 1).alias("pos"), F.col("e.h").alias("h")
-    )
-
-
-def containment_join_sets(
-    sets: DataFrame,
-    tau: float,
-    pref: DataFrame | None = None,
-    post: DataFrame | None = None,
-) -> DataFrame:
+def containment_join_sets(sets: DataFrame, tau: float) -> DataFrame:
     """EXACT containment join over (doc_id, sh: array<long>) sets: every
     ORDERED pair (a, b), a ≠ b, with C(a→b) = |a∩b| / |a| ≥ τ — "τ of
     a's shingles also appear in b". The asymmetric sibling of
@@ -1970,7 +1935,7 @@ def containment_join_sets(
     (the family's slack — it can only LOWER t, admitting more):
 
     - PROBE PREFIX (the Jaccard prefix theorem verbatim, since
-      _setsim_prefix's length n − ceil(τ·n) + 1 = n − t + 1): if
+      _positions' prefix length n − ceil(τ·n) + 1 = n − t + 1): if
       |a∩b| ≥ t, the first common element in canonical order sits within
       a's first n − t + 1 positions — so probing with a's prefix only is
       sound. The INDEXED side is the FULL posting relation: containment
@@ -1987,12 +1952,12 @@ def containment_join_sets(
 
     The verify hydrates both sets by doc_id and computes exact
     |∩|/|a| row-locally — one correctly-rounded division of exact ints,
-    bit-identical across engines. Scale shape mirrors setsim: memoized
-    persisted probe/posting relations, SHUFFLE_HASH candidate join
-    (both sides corpus-scale on a crawl), distinct before hydration;
-    candidates pair only within decorrelated replicas at ×K, so the
-    stage scales like the Jaccard member's certified-linear one."""
-    cand = containment_candidates(sets, tau, pref=pref, post=post)
+    bit-identical across engines. Scale shape mirrors setsim: probe and
+    posting relations read from one canonical order, SHUFFLE_HASH
+    candidate join (both sides corpus-scale on a crawl), distinct before
+    hydration; candidates pair only within decorrelated replicas at ×K,
+    so the stage scales like the Jaccard member's certified-linear one."""
+    cand = containment_candidates(sets, tau)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     cont = (
@@ -2007,27 +1972,19 @@ def containment_join_sets(
     )
 
 
-def containment_candidates(
-    sets: DataFrame,
-    tau: float,
-    pref: DataFrame | None = None,
-    post: DataFrame | None = None,
-) -> DataFrame:
+def containment_candidates(sets: DataFrame, tau: float) -> DataFrame:
     """The containment candidate stage alone: DISTINCT ordered (doc_a,
     doc_b) pairs surviving the probe-prefix + length + positional
     filters, BEFORE hydration/verify — split out so `scale_check.py
     --count containment` can certify candidate LINEARITY at ×10 with a direct
     count (the setsim/simhash precedent; this stage's indexed side is
     every token, the family's highest fan-out in principle)."""
-    if pref is None:
-        pref = _setsim_prefix(sets, tau)
-    if post is None:
-        post = _containment_postings(sets)
-    a = pref.select(
+    ordered = _canonical_ordered(sets)
+    a = _positions(ordered, tau).select(
         F.col("doc_id").alias("doc_a"), F.col("n").alias("na"),
         F.col("pos").alias("ia"), "h",
     )
-    b = post.select(
+    b = _positions(ordered).select(
         F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"),
         F.col("pos").alias("jb"), F.col("h").alias("h2"),
     )
@@ -2043,46 +2000,6 @@ def containment_candidates(
         )
         .select("doc_a", "doc_b")
         .distinct()
-    )
-
-
-def _containment_prefix_persisted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The containment probe-prefix at CONTAIN_TAU (shorter than the
-    Jaccard one, so not shared with _setsim_prefix_persisted), memoized
-    like it and read by q_containment_join and q_containment_apply. Cold,
-    every memo on → off (sf0.1, `local[4]`, 3 alternating fresh-process
-    pairs): q_containment_join 4.03 → 6.00 s (25 → 16 jobs),
-    q_containment_apply 4.08 → 6.31 s (31 → 22 jobs)."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        "containment-prefix", spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),
-        lambda: _setsim_prefix(
-            _shingle_arrays_persisted(spark, sf_dir), CONTAIN_TAU
-        ),
-    )
-
-
-def _containment_postings_persisted(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The full canonical posting relation (the indexed side), memoized
-    like the prefix, with the same measured cost: without the barrier each
-    candidate-join side re-runs the df shuffle + per-doc canonical sort
-    (see _containment_prefix_persisted for the on/off times)."""
-    from ..sources.io import _stat_sig, table_path
-    from ._memo import session_memo
-
-    return session_memo(
-        "containment-postings", spark, sf_dir,
-        lambda: _stat_sig(table_path(sf_dir, "documents")),
-        lambda: _containment_postings(
-            _shingle_arrays_persisted(spark, sf_dir)
-        ),
     )
 
 
@@ -2118,8 +2035,6 @@ def q_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_join_sets(
         _shingle_arrays_persisted(spark, sf_dir),
         CONTAIN_TAU,
-        pref=_containment_prefix_persisted(spark, sf_dir),
-        post=_containment_postings_persisted(spark, sf_dir),
     )
 
 
@@ -2238,12 +2153,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def containment_apply(
-    sets: DataFrame,
-    tau: float = CONTAIN_TAU,
-    pref: DataFrame | None = None,
-    post: DataFrame | None = None,
-) -> DataFrame:
+def containment_apply(sets: DataFrame, tau: float = CONTAIN_TAU) -> DataFrame:
     """The asymmetric REMOVAL decision q_containment_join exists to
     inform (VERDICT r12 #5 — the clipped-page/boilerplate-subset case):
     per document, whether it is contained at C ≥ τ in a canonically
@@ -2267,7 +2177,7 @@ def containment_apply(
     one LEFT join back to the per-doc size relation so untouched docs
     report removed = false. No new corpus-side shuffle beyond doc_id
     hash partitioning."""
-    pairs = containment_join_sets(sets, tau, pref=pref, post=post)
+    pairs = containment_join_sets(sets, tau)
     sizes = sets.select("doc_id", F.size("sh").alias("n_set"))
     na = sizes.select(
         F.col("doc_id").alias("doc_a"), F.col("n_set").alias("na")
@@ -2362,15 +2272,13 @@ def q_containment_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     decision (drop the contained member, keep the container; equal-size
     mutual pairs keep exactly the smallest doc_id). The decision a
     100 TB clipped-page/boilerplate pass commits before rewriting the
-    corpus. Rides the same memoized shingle/prefix/posting relations as
-    q_containment_join — any candidate-stage drift would move both
+    corpus. Rides the same memoized shingle relation and candidate stage
+    as q_containment_join — any candidate-stage drift would move both
     hashes. best_containment is one correctly-rounded division of exact
     ints (MAX over identical doubles) — no rounding discipline needed."""
     return containment_apply(
         _shingle_arrays_persisted(spark, sf_dir),
         CONTAIN_TAU,
-        pref=_containment_prefix_persisted(spark, sf_dir),
-        post=_containment_postings_persisted(spark, sf_dir),
     )
 
 

@@ -248,9 +248,10 @@ COMMENTARY = {
         "Exact set-similarity join (round 10): AllPairs prefix filter + "
         "PPJoin length/positional prunes. Canonical rare-first order is "
         "one linear token shuffle (df) + a row-local per-set sort — no "
-        "global vocabulary sort; the prefix relation is persisted + "
-        "memoized (its self-join would otherwise re-run the df-hydration "
-        "chain per side); candidates join prefix-token to prefix-token "
+        "global vocabulary sort; both sides of the prefix self-join "
+        "slice + posexplode one per-doc canonical order (not persisted: "
+        "it measured faster without a barrier); "
+        "candidates join prefix-token to prefix-token "
         "pinned SHUFFLE_HASH (both sides corpus-scale on a crawl), dedupe "
         "BEFORE the verify, and the verify hydrates full sets by doc_id "
         "for a row-local exact intersect. All three prunes are provably "
@@ -319,8 +320,9 @@ COMMENTARY = {
         "containment tau SHUFFLE_HASH-joined to the FULL canonical "
         "posting relation (no upper bound on |b| exists for "
         "containment), lossless length + positional prunes, distinct "
-        "pairs hydrated for the exact |∩|/|a| verify. Both relations "
-        "persisted + memoized (the setsim barrier discipline); "
+        "pairs hydrated for the exact |∩|/|a| verify. Both sides are "
+        "posexploded from one per-doc canonical order (the q_setsim_join "
+        "spelling, not persisted); "
         "candidate linearity certified by a direct ×10 count "
         "(scale_check.py --count containment)."
     ),

@@ -222,6 +222,12 @@ _RECHECK_CHANGED: dict[str, int] = {
     "q_training_pipeline": 15,  # same label-relation consumer.
     "q_ngram_jaccard": 15,  # postings recomputed per query: the bare
     # cache it replaced outlived a rewrite of documents.
+    # The set-similarity family builds one canonical order per query,
+    # recorded at 15: prefix and posting relations are posexploded from it
+    # per join side instead of read from three separate memos.
+    "q_setsim_join": 15,
+    "q_containment_join": 15,
+    "q_containment_apply": 15,
 }
 
 _RECHECK: frozenset[str] = frozenset(

@@ -150,6 +150,21 @@ def stream_events_watermarkable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s
 
 
+def _run_to_end(writer, timeout_s: int = 300) -> None:
+    """Start ``writer`` with ``trigger(availableNow=True)`` and wait for the
+    stream to drain; the query is stopped however the wait ends.
+    awaitTermination returns False on timeout — raise TimeoutError instead
+    of leaving a partly-filled sink that looks complete."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"stream {q.name or q.id} did not finish in {timeout_s}s"
+            )
+    finally:
+        q.stop()
+
+
 def run_stream(sdf: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFrame:
     """S10 (harness half): run a streaming DataFrame to completion with
     ``trigger(availableNow=True)`` into a memory sink; return the sink
@@ -161,21 +176,15 @@ def run_stream(sdf: DataFrame, output_mode: str, timeout_s: int = 300) -> DataFr
     spark = sdf.sparkSession
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = f"{process_scratch()}/ckpt-{name}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        # awaitTermination returns False on timeout — surface that instead of
-        # silently returning a partially-filled memory sink
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(f"stream {name} did not finish in {timeout_s}s")
+        _run_to_end(
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt),
+            timeout_s,
+        )
     finally:
-        q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
@@ -191,32 +200,18 @@ def stream_to_parquet(
         sdf.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
     )
     if partition_cols:
         w = w.partitionBy(*partition_cols)
-    q = w.start()
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("parquet sink stream did not finish in 300s")
-    finally:
-        q.stop()
+    _run_to_end(w)
 
 
 def stream_foreach_batch(sdf: DataFrame, fn, checkpoint: str) -> None:
     """S10 (upsert half): ``foreachBatch`` — the micro-batch escape hatch for
     idempotent MERGE/JDBC sinks (batch_id makes retries idempotent)."""
-    q = (
-        sdf.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    _run_to_end(
+        sdf.writeStream.foreachBatch(fn).option("checkpointLocation", checkpoint)
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("foreachBatch stream did not finish in 300s")
-    finally:
-        q.stop()
 
 
 # --------------------------------------------------------------------------

@@ -137,12 +137,12 @@ HEADLINE = [
 def time_queries(spark, names, sf_dir: str, reps: int) -> dict[str, float]:
     """Seconds per query: the minimum over ``reps`` cold runs.
 
-    Each rep first drops every memo on the session (shingles, set-similarity
-    and containment prefixes and postings, LSH buckets, CC labels), so
-    memoized composites pay their build, then builds the query and writes
-    its whole result to the ``noop`` sink. A ``count()`` would let Catalyst
-    prune every output column the row count does not need. The minimum keeps one
-    contended rep from reading as a plan regression."""
+    Each rep first drops every memo on the session (shingles, LSH buckets,
+    CC labels), so memoized composites pay their build, then builds the
+    query and writes its whole result to the ``noop`` sink. A ``count()``
+    would let Catalyst prune every output column the row count does not
+    need. The minimum keeps one contended rep from reading as a plan
+    regression."""
     from aws_etl_microservice_redshift_datalake_spark import all_queries
     from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
         clear_session_memos,

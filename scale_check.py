@@ -230,7 +230,6 @@ def _setsim_pairs(spark, sf_dir: str) -> int:
     return dedup.setsim_candidates(
         dedup._shingle_arrays_persisted(spark, sf_dir),
         dedup.SETSIM_TAU,
-        pref=dedup._setsim_prefix_persisted(spark, sf_dir),
     ).count()
 
 
@@ -250,8 +249,6 @@ def _containment_pairs(spark, sf_dir: str) -> int:
     return dedup.containment_candidates(
         dedup._shingle_arrays_persisted(spark, sf_dir),
         dedup.CONTAIN_TAU,
-        pref=dedup._containment_prefix_persisted(spark, sf_dir),
-        post=dedup._containment_postings_persisted(spark, sf_dir),
     ).count()
 
 

@@ -4,8 +4,9 @@ and its memo hook (clear_session_memos), the scale harness's amplified copy
 (``scale_check.amplify``), the verify-window sweep subset
 (conftest.sweep_subset), and connected_components' cost contract: no
 session-conf mutation, a cold job-count pin, and one solve shared by the
-three cluster-label queries. Two source lints ride along: no bare cache
-outside the memo, and no test module defining one name twice."""
+three cluster-label queries; one canonical order per set-similarity query.
+Two source lints ride along: no bare cache outside the memo, and no test
+module defining one name twice."""
 
 from __future__ import annotations
 
@@ -245,6 +246,28 @@ def test_cluster_queries_solve_the_graph_once(spark, monkeypatch):
     for name in ("q_dedup_clusters", "q_cluster_split", "q_training_pipeline"):
         assert qs[name](spark, SF_SMALL).count() > 0, name
     assert len(calls) == 1, f"connected_components ran {len(calls)} times"
+
+
+def test_set_similarity_queries_order_the_sets_once(spark, monkeypatch):
+    """q_setsim_join, q_containment_join and q_containment_apply read every
+    prefix and posting relation from one canonical order, so each of them
+    calls _canonical_ordered exactly once from cold memos."""
+    from aws_etl_microservice_redshift_datalake_spark.operators import dedup
+
+    calls = []
+    real = dedup._canonical_ordered
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_canonical_ordered", counting)
+    qs = engine.all_queries()
+    for name in ("q_setsim_join", "q_containment_join", "q_containment_apply"):
+        clear_session_memos(spark)
+        calls.clear()
+        assert qs[name](spark, SF_SMALL).count() > 0, name
+        assert len(calls) == 1, f"{name} ran _canonical_ordered {len(calls)} times"
 
 
 def test_sweep_subset_full_flag_returns_all(monkeypatch):

@@ -1665,3 +1665,37 @@ def test_dedup_incremental_planted_cross_split_duplicates(spark, tmp_path):
     if extra_new is not None:
         assert rows[extra_new].is_new is True
         assert rows[extra_new].best_jaccard is None
+
+
+def test_stream_timeout_raises_and_stops():
+    """A stream that does not finish within the limit raises TimeoutError,
+    and the query is still stopped: awaitTermination returning False must
+    never pass for a drained sink."""
+    from aws_etl_microservice_redshift_datalake_spark.streaming.streams import (
+        _run_to_end,
+    )
+
+    class FakeQuery:
+        name, id, stopped = "fake", "fake-id", False
+
+        def awaitTermination(self, timeout_s):
+            assert timeout_s == 7
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    class FakeWriter:
+        query = FakeQuery()
+
+        def trigger(self, availableNow):
+            assert availableNow is True
+            return self
+
+        def start(self):
+            return self.query
+
+    writer = FakeWriter()
+    with pytest.raises(TimeoutError, match="fake did not finish in 7s"):
+        _run_to_end(writer, 7)
+    assert writer.query.stopped
