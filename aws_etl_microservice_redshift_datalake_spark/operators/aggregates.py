@@ -27,8 +27,10 @@ from pyspark.sql import functions as F
 from ..registry import (
     QTY_MAX,
     exact_sum,
+    md5_bucket,
     money_col,
     o_exact_sum,
+    o_md5_bucket,
     o_money_col,
     query,
     rnd,
@@ -652,8 +654,7 @@ HH_SAMPLE_PCT = 10  # candidate-generation hash-sample (% of rows)
     oracle=f"""
     WITH cand AS (
         SELECT DISTINCT user_id FROM events
-        WHERE ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 6))::BIGINT % 100
-              < {HH_SAMPLE_PCT}
+        WHERE {o_md5_bucket("event_id")} % 100 < {HH_SAMPLE_PCT}
     )
     SELECT user_id, COUNT(*) AS n_events
     FROM events
@@ -691,9 +692,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     t_min = math.ceil(HH_SUPPORT * table_rows(sf_dir, "events"))
-    bucket = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 100
+    bucket = md5_bucket(F.col("event_id")) % 100
     cand = e.filter(bucket < HH_SAMPLE_PCT).select("user_id").distinct()
     sketch = cms_build(e.select("user_id"), "user_id")
     pruned = (

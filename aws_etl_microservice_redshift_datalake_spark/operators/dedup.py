@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import query
+from ..registry import md5_bucket, o_md5_bucket, query
 from ..sources.io import load_spread, table_rows
 
 N_HASHES = 32
@@ -321,9 +321,11 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-key quadratic (the 100 TB skew killer), and everything downstream of
     it — sizes, intersections, the ratio — is defined on the same capped
     universe, so the oracle (identical filter) matches on ANY corpus. On
-    corpora where no shingle exceeds the cap (true for the test corpus:
-    max df ≈ 50) capped Jaccard equals exact Jaccard. Jaccard is an integer
-    ratio → IEEE-exact, unrounded. The exact twin of q_dedup_minhash_pairs:
+    corpora where no shingle exceeds the cap (every shipped corpus: max
+    shingle df 9, 7 and 25 at sf0.001, sf0.01 and sf0.1) capped Jaccard
+    equals exact Jaccard; a planted corpus pins the cap firing
+    (tests/test_degenerate.py). Jaccard is an integer ratio → IEEE-exact,
+    unrounded. The exact twin of q_dedup_minhash_pairs:
     same shingles, no sketch; candidates from posting lists vs minhash
     bands."""
     # DF cap in CONSTANT space per shingle: a count aggregate (partial
@@ -1095,7 +1097,7 @@ def q_training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tagged AS (
         SELECT doc_id, root,
-               CASE WHEN ('0x' || substr(md5(CAST(root AS VARCHAR)), 1, 6))::BIGINT % 100 < 80
+               CASE WHEN {o_md5_bucket("root")} % 100 < 80
                     THEN 'train' ELSE 'test' END AS split
         FROM withroot
     )
@@ -1146,13 +1148,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     withroot = d.join(F.broadcast(comp), "doc_id", "left").select(
         "doc_id", F.coalesce("canon_id", "doc_id").alias("root")
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("root").cast("string")), 1, 6), 16, 10
-        ).cast("bigint")
-        % 100
-    )
-    split = F.when(bucket < 80, "train").otherwise("test")
+    split = F.when(md5_bucket(F.col("root")) % 100 < 80, "train").otherwise("test")
     return (
         withroot.select(split.alias("split"), "root", "doc_id")
         .groupBy("split")
@@ -1170,34 +1166,75 @@ DECON_NGRAM = 8  # published-pipeline decontamination n-gram length: long
 # enough that random docs share none, short enough to catch partial overlap
 
 
-@query(
-    "q_decontaminate_ngram",
-    oracle=f"""
-    WITH sh AS (
+def ngram_hits(toks: DataFrame) -> DataFrame:
+    """q_decontaminate_ngram's hit stage: the distinct ``doc_id`` of every
+    test-split row of ``toks`` (doc_id, toks) that shares a
+    DECON_NGRAM-token n-gram with any train-split row. Oracle twin:
+    :func:`_ngram_hits_sql`.
+
+    The token array must arrive MATERIALIZED in its own projection:
+    inlining split() into the transform lambda re-evaluates it per gram
+    position, O(tokens²) per doc (the _shingle_arrays rule; a 50k-token
+    advtext doc once turned the composed gate into a >30-minute hang).
+    NULL-text docs produce NO n-grams (r7 degraded-twin gate: concat_ws
+    never returns NULL, so a NULL doc's whole-doc gram silently became ''
+    and every null train doc 'contaminated' every null test doc; the
+    oracle's array_to_string keeps NULL, which IN () excludes)."""
+    n = DECON_NGRAM
+    grams = F.when(
+        F.size("toks") >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size("toks") - (n - 1)),
+            lambda i: F.array_join(F.slice("toks", i, n), " "),
+        ),
+    ).when(F.col("toks").isNotNull(), F.array(F.concat_ws(" ", "toks")))
+    sh = toks.select(
+        "doc_id",
+        (md5_bucket(F.col("doc_id")) % 100 < 80).alias("is_train"),
+        F.explode(
+            F.array_distinct(F.transform(grams, lambda s: F.xxhash64(s)))
+        ).alias("s"),
+    )
+    train_s = sh.filter("is_train").select("s").distinct()
+    return (
+        sh.filter(~F.col("is_train"))
+        .join(train_s, "s", "left_semi")
+        .select("doc_id")
+        .distinct()
+    )
+
+
+def _ngram_hits_sql() -> str:
+    """Oracle CTEs of :func:`ngram_hits`: ``g_hit`` holds the distinct
+    doc_id of every contaminated test doc. They run on raw n-gram strings,
+    so a match also certifies no xxhash64 collision bit."""
+    return f"""
+    g_sh AS (
         SELECT DISTINCT doc_id,
+               {o_md5_bucket("doc_id")} % 100 < 80 AS is_train,
                unnest(CASE WHEN len(toks) >= {DECON_NGRAM}
                  THEN list_transform(generate_series(1, len(toks) - {DECON_NGRAM - 1}),
                                      i -> {_elem_gram_sql("toks", DECON_NGRAM)})
                  ELSE [array_to_string(toks, ' ')] END) AS s
         FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
     ),
+    g_hit AS (
+        SELECT DISTINCT doc_id FROM g_sh
+        WHERE NOT is_train AND s IN (SELECT s FROM g_sh WHERE is_train)
+    )"""
+
+
+@query(
+    "q_decontaminate_ngram",
+    oracle=f"""
+    WITH {_ngram_hits_sql()},
     split AS (
-        SELECT doc_id, lang,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 < 80
-                   AS is_train
+        SELECT doc_id, lang, {o_md5_bucket("doc_id")} % 100 < 80 AS is_train
         FROM documents
-    ),
-    train_s AS (
-        SELECT DISTINCT s FROM sh JOIN split USING (doc_id) WHERE is_train
-    ),
-    cont AS (
-        SELECT DISTINCT sh.doc_id FROM sh
-        JOIN split USING (doc_id)
-        WHERE NOT is_train AND s IN (SELECT s FROM train_s)
     )
     SELECT lang,
            COUNT(*) AS n_test,
-           COUNT(*) FILTER (WHERE doc_id IN (SELECT doc_id FROM cont))
+           COUNT(*) FILTER (WHERE doc_id IN (SELECT doc_id FROM g_hit))
                AS n_contaminated
     FROM split WHERE NOT is_train
     GROUP BY lang
@@ -1219,43 +1256,15 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit (probability ~n²/2⁶⁵). At 100 TB the semi-join shuffles hash-
     partitioned longs; a hot (boilerplate) n-gram adds semi-join skew that
     AQE splits — there is no df² pair blowup anywhere (semi-join, not
-    inner)."""
+    inner). NULL-text docs still COUNT in n_test — no text just can't
+    leak."""
     d = load_spread(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.split("text", " ").alias("toks")
     )
-    n = DECON_NGRAM
-    # NULL-text docs produce NO n-grams (r7 degraded-twin gate: concat_ws
-    # never returns NULL, so a NULL doc's whole-doc gram silently became ''
-    # and every null train doc 'contaminated' every null test doc; the
-    # oracle's array_to_string keeps NULL, which IN () excludes). They still
-    # COUNT in n_test below — no text just can't leak.
-    grams = F.when(
-        F.size("toks") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - (n - 1)),
-            lambda i: F.array_join(F.slice("toks", i, n), " "),
-        ),
-    ).when(F.col("toks").isNotNull(), F.array(F.concat_ws(" ", "toks")))
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 100
-    sh = d.select(
-        "doc_id",
-        "lang",
-        (bucket < 80).alias("is_train"),
-        F.explode(
-            F.array_distinct(F.transform(grams, lambda s: F.xxhash64(s)))
-        ).alias("s"),
+    cont = ngram_hits(d).withColumn("hit", F.lit(1))
+    test_docs = d.select("doc_id", "lang").filter(
+        md5_bucket(F.col("doc_id")) % 100 >= 80
     )
-    train_s = sh.filter("is_train").select("s").distinct()
-    cont = (
-        sh.filter(~F.col("is_train"))
-        .join(train_s, "s", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    test_docs = d.select("doc_id", "lang").filter(bucket >= 80)
     return test_docs.join(cont, "doc_id", "left").groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_test"),
         F.count("hit").alias("n_contaminated"),
@@ -2052,8 +2061,7 @@ INCR_NEW_PCT = 20  # the md5 doc_id split: buckets >= 80 play the new batch
     WITH {{PAIRS_CTES}},
     split AS (
         SELECT doc_id,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
-                   % 100 < {100 - INCR_NEW_PCT} AS is_base
+               {o_md5_bucket("doc_id")} % 100 < {100 - INCR_NEW_PCT} AS is_base
         FROM documents WHERE text IS NOT NULL
     ),
     xpairs AS (
@@ -2102,13 +2110,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrs = _shingle_arrays_persisted(spark, sf_dir)
     n_bands, rows_per_band = _minhash_params(table_rows(sf_dir, "documents"))
     bands = minhash_bands(arrs, n_bands, rows_per_band)
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-        ).cast("bigint")
-        % 100
-    )
-    is_base = bucket < (100 - INCR_NEW_PCT)
+    is_base = md5_bucket(F.col("doc_id")) % 100 < (100 - INCR_NEW_PCT)
     tagged = bands.select("doc_id", "band", "bh", is_base.alias("is_base"))
     newb = tagged.filter(~F.col("is_base")).select(
         F.col("doc_id").alias("doc_new"), "band", "bh"

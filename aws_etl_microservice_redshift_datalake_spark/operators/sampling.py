@@ -19,16 +19,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import N_CHARS_MAX, exact_sum, o_exact_sum, query, rnd
+from ..registry import (
+    N_CHARS_MAX,
+    exact_sum,
+    md5_bucket,
+    o_exact_sum,
+    o_md5_bucket,
+    query,
+    rnd,
+)
 from ..sources.io import load_spread, load_table
 
 
 @query(
     "q_hash_sample",
-    oracle="""
+    oracle=f"""
     SELECT o_orderkey, o_custkey, o_totalprice
     FROM orders
-    WHERE ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 6))::BIGINT % 100 < 10
+    WHERE {o_md5_bucket("o_orderkey")} % 100 < 10
     """,
 )
 def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,10 +45,9 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5, F8): first 6 hex digits mod 100 — same rows selected on any
     engine, any partitioning, any row order."""
     o = load_table(spark, sf_dir, "orders")
-    bucket = F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10).cast(
-        "bigint"
-    ) % 100
-    return o.filter(bucket < 10).select("o_orderkey", "o_custkey", "o_totalprice")
+    return o.filter(md5_bucket(F.col("o_orderkey")) % 100 < 10).select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
 
 
 @query(
@@ -48,7 +55,7 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT split, COUNT(*) AS n_docs, CAST(SUM(n_chars_ok) AS BIGINT) AS total_chars
     FROM (
-        SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT AS BIGINT) % 100 < 80
+        SELECT CASE WHEN {o_md5_bucket("doc_id")} % 100 < 80
                     THEN 'train' ELSE 'test' END AS split,
                CASE WHEN n_chars BETWEEN 0 AND {N_CHARS_MAX}
                     THEN n_chars END AS n_chars_ok
@@ -67,10 +74,7 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Long.MAX sentinel threw the ANSI SUM while DuckDB's int128 SUM
     diverged past it)."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10).cast(
-        "bigint"
-    ) % 100
-    split = F.when(bucket < 80, "train").otherwise("test")
+    split = F.when(md5_bucket(F.col("doc_id")) % 100 < 80, "train").otherwise("test")
     n_chars_ok = F.when(
         (F.col("n_chars") >= 0) & (F.col("n_chars") <= N_CHARS_MAX),
         F.col("n_chars"),
@@ -113,7 +117,7 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stratified_sample",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
         SELECT lang, COUNT(*) AS n_lang FROM documents GROUP BY lang
     ), m AS (
@@ -125,8 +129,7 @@ def stratified_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT d.lang,
            COUNT(*) FILTER (
-               WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 6))::BIGINT % 10000
-                     < cut) AS n_sampled,
+               WHERE {o_md5_bucket("d.doc_id")} % 10000 < cut) AS n_sampled,
            MIN(n_lang) AS n_total
     FROM documents d JOIN rated ON d.lang = rated.lang
     GROUP BY d.lang
@@ -152,9 +155,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cut"),
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 10000
+    bucket = md5_bucket(F.col("doc_id")) % 10000
     return (
         d.select("lang", "doc_id")
         .join(F.broadcast(rates), "lang")
@@ -260,7 +261,7 @@ def _mix_case_sql() -> str:
         FROM stats
     )
     SELECT lang,
-           COUNT(*) FILTER (WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 10000
+           COUNT(*) FILTER (WHERE {o_md5_bucket("doc_id")} % 10000
                                   < CAST(floor(rate * 10000) AS BIGINT)) AS n_selected,
            MIN(n_lang) AS n_lang
     FROM rated
@@ -295,9 +296,7 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = counts.crossJoin(F.broadcast(total)).select(
         "lang", "n_lang", F.floor(rate * 10000).cast("bigint").alias("cut")
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 10000
+    bucket = md5_bucket(F.col("doc_id")) % 10000
     return (
         d.select("lang", "doc_id")
         .join(F.broadcast(rates), "lang")
@@ -309,21 +308,45 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_decontaminate",
-    oracle="""
-    WITH split AS (
-        SELECT lang, md5(text) AS h,
-               CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 < 80
-                    THEN 'train' ELSE 'test' END AS split
+def exact_hits(d: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """q_decontaminate's hit stage: every test-split row of ``d`` (its
+    ``carry`` columns kept), with ``hit`` = 1 where the md5 of its text
+    equals a train doc's and NULL elsewhere. Oracle twin:
+    :func:`_exact_hits_sql`."""
+    tagged = d.select(
+        *carry,
+        F.md5("text").alias("h"),
+        (md5_bucket(F.col("doc_id")) % 100 < 80).alias("is_train"),
+    )
+    train_h = tagged.filter("is_train").select("h").distinct()
+    test = tagged.filter(~F.col("is_train"))
+    return test.join(train_h.withColumn("hit", F.lit(1)), "h", "left")
+
+
+def _exact_hits_sql() -> str:
+    """Oracle CTEs of :func:`exact_hits`: ``x_test`` holds every test-split
+    doc (doc_id, lang) with ``x_hit`` true where its text hash matches a
+    train doc's."""
+    return f"""
+    x_split AS (
+        SELECT doc_id, lang, md5(text) AS h,
+               {o_md5_bucket("doc_id")} % 100 < 80 AS is_train
         FROM documents
     ),
-    train_h AS (SELECT DISTINCT h FROM split WHERE split = 'train')
+    x_test AS (
+        SELECT doc_id, lang, h IN (SELECT h FROM x_split WHERE is_train) AS x_hit
+        FROM x_split WHERE NOT is_train
+    )"""
+
+
+@query(
+    "q_decontaminate",
+    oracle=f"""
+    WITH {_exact_hits_sql()}
     SELECT lang,
            COUNT(*) AS n_test,
-           COUNT(*) FILTER (WHERE h IN (SELECT h FROM train_h)) AS n_contaminated
-    FROM split
-    WHERE split = 'test'
+           COUNT(*) FILTER (WHERE x_hit) AS n_contaminated
+    FROM x_test
     GROUP BY lang
     """,
 )
@@ -341,18 +364,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     published LLM data pipelines, minus the n-gram generalization
     (q_ngram_jaccard's capped posting lists provide that form)."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 100
-    tagged = d.select(
-        "lang",
-        F.md5("text").alias("h"),
-        (bucket < 80).alias("is_train"),
-    )
-    train_h = tagged.filter("is_train").select("h").distinct()
-    test = tagged.filter(~F.col("is_train"))
-    hit = test.join(train_h.withColumn("hit", F.lit(1)), "h", "left")
-    return hit.groupBy("lang").agg(
+    return exact_hits(d, ("lang",)).groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_test"),
         F.count("hit").alias("n_contaminated"),
     )
@@ -367,7 +379,7 @@ WSAMPLE_K = 64  # weighted-sample size
     SELECT doc_id, lang, n_chars
     FROM (
         SELECT doc_id, lang, n_chars,
-               pow((('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT + 1.0)
+               pow(({o_md5_bucket("doc_id")} + 1.0)
                        / 16777217.0,
                    1.0 / n_chars) AS priority
         FROM documents
@@ -395,10 +407,7 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and 1/w would DIVIDE_BY_ZERO under ANSI mode — so zero-weight rows
     # are excluded up front (oracle twin carries the same WHERE)
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint")
-    u = (bucket + F.lit(1.0)) / F.lit(16777217.0)
+    u = (md5_bucket(F.col("doc_id")) + F.lit(1.0)) / F.lit(16777217.0)
     priority = F.pow(u, F.lit(1.0) / F.col("n_chars"))
     return (
         d.select("doc_id", "lang", "n_chars", priority.alias("priority"))
@@ -445,8 +454,7 @@ def _temp_oracle() -> str:
            MIN(r.n_lang) AS n_lang,
            MIN(r.cut_bp) AS cut_bp,
            COUNT(*) FILTER (
-               WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 6))::BIGINT
-                     % 10000 < r.cut_bp) AS n_selected
+               WHERE {o_md5_bucket("d.doc_id")} % 10000 < r.cut_bp) AS n_selected
     FROM documents d JOIN rates r ON d.lang = r.lang
     GROUP BY d.lang
     """
@@ -500,9 +508,7 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(rate * 10000.0).cast("bigint").alias("cut_bp"),
         )
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 10000
+    bucket = md5_bucket(F.col("doc_id")) % 10000
     return (
         d.select("lang", "doc_id")
         .join(F.broadcast(rates), "lang")
@@ -617,69 +623,22 @@ def q_token_budget_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decon_report_oracle() -> str:
-    # assembled from the three siblings' oracle fragments VERBATIM (the
-    # q_decontaminate content-hash CTE, q_decontaminate_ngram's linear
-    # element-indexed gram CTE, q_decontaminate_semantic's conform-filtered
-    # pair CTE) so the composite can never drift from the per-method twins
-    from .dedup import DECON_NGRAM, _elem_gram_sql
-    from .vectors import O_VEC_CONFORM, SEMDECON_TAU
+    # assembled from the three drill-downs' own oracle CTE builders, so the
+    # composite cannot drift from the per-method twins
+    from .dedup import _ngram_hits_sql
+    from .vectors import _semantic_hits_sql
 
+    g_hit = "doc_id IN (SELECT doc_id FROM g_hit)"
+    s_hit = "doc_id IN (SELECT vec_id FROM s_hit)"
     return f"""
-    WITH split AS (
-        SELECT doc_id, lang,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT % 100 < 80
-                   AS is_train
-        FROM documents
-    ),
-    hx AS (SELECT doc_id, md5(text) AS h FROM documents),
-    train_h AS (
-        SELECT DISTINCT h FROM hx JOIN split USING (doc_id) WHERE is_train
-    ),
-    exact_hit AS (
-        SELECT DISTINCT hx.doc_id FROM hx JOIN split USING (doc_id)
-        WHERE NOT is_train AND h IN (SELECT h FROM train_h)
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               unnest(CASE WHEN len(toks) >= {DECON_NGRAM}
-                 THEN list_transform(generate_series(1, len(toks) - {DECON_NGRAM - 1}),
-                                     i -> {_elem_gram_sql("toks", DECON_NGRAM)})
-                 ELSE [array_to_string(toks, ' ')] END) AS s
-        FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-    ),
-    train_s AS (
-        SELECT DISTINCT s FROM sh JOIN split USING (doc_id) WHERE is_train
-    ),
-    ngram_hit AS (
-        SELECT DISTINCT sh.doc_id FROM sh
-        JOIN split USING (doc_id)
-        WHERE NOT is_train AND s IN (SELECT s FROM train_s)
-    ),
-    e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 6))::BIGINT % 100 < 80
-                   AS is_train
-        FROM embeddings
-        WHERE {O_VEC_CONFORM}
-    ),
-    sem_hit AS (
-        SELECT DISTINCT b.vec_id AS doc_id
-        FROM e a JOIN e b ON a.is_train AND NOT b.is_train
-        WHERE list_inner_product(a.v, b.v) >= {SEMDECON_TAU}
-    )
+    WITH {_exact_hits_sql()}, {_ngram_hits_sql()}, {_semantic_hits_sql()}
     SELECT lang,
            COUNT(*) AS n_test,
-           COUNT(*) FILTER (WHERE doc_id IN (SELECT doc_id FROM exact_hit))
-               AS n_exact,
-           COUNT(*) FILTER (WHERE doc_id IN (SELECT doc_id FROM ngram_hit))
-               AS n_ngram,
-           COUNT(*) FILTER (WHERE doc_id IN (SELECT doc_id FROM sem_hit))
-               AS n_semantic,
-           COUNT(*) FILTER (WHERE doc_id IN (SELECT doc_id FROM exact_hit)
-                               OR doc_id IN (SELECT doc_id FROM ngram_hit)
-                               OR doc_id IN (SELECT doc_id FROM sem_hit))
-               AS n_any
-    FROM split WHERE NOT is_train
+           COUNT(*) FILTER (WHERE x_hit) AS n_exact,
+           COUNT(*) FILTER (WHERE {g_hit}) AS n_ngram,
+           COUNT(*) FILTER (WHERE {s_hit}) AS n_semantic,
+           COUNT(*) FILTER (WHERE x_hit OR {g_hit} OR {s_hit}) AS n_any
+    FROM x_test
     GROUP BY lang
     """
 
@@ -692,101 +651,34 @@ def q_decontaminate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     each method flags and how many ANY method flags. This is the report an
     evaluation-integrity review actually reads — the per-method queries
     (q_decontaminate, q_decontaminate_ngram, q_decontaminate_semantic) are
-    its drill-downs, and every stage here re-spells its sibling's twin
-    EXACTLY (same split hash, same gram construction, same `_finite_vec`
-    conformance population and `_dot` ≥ τ cut), so the composite cannot
-    drift from the parts.
+    its drill-downs, and it is assembled from their hit stages
+    (exact_hits, ngram_hits, semantic_hits) and their oracle CTE builders,
+    so the composite cannot drift from the parts: each n_* column counts
+    the test docs its drill-down's hit stage flags.
 
     Scale shape = the union of the siblings' shapes, each already
-    documented: one 16-byte-hash semi-join (exact), one n-gram-hash
-    semi-join with row-local shingling (n-gram), one broadcast-test ×
-    streamed-train cosine pass (semantic — the clustered drop-in swaps in
-    at 100 TB), then three tiny per-doc flag joins into one ≤ |langs|
-    aggregate. Docs without a conforming embedding simply cannot be
-    flagged semantically (both twins spell the same population); NULL-text
-    docs produce no hash and no grams — counted in n_test, never
-    leakable."""
-    from .dedup import DECON_NGRAM
-    from .vectors import SEMDECON_TAU, _dot, _embeddings, _finite_vec, _train_bucket
+    documented: one 16-byte-hash join tagging every test doc (exact — its
+    output is the report's spine), one n-gram-hash semi-join with
+    row-local shingling (n-gram), one broadcast-test × streamed-train
+    cosine pass (semantic — the clustered drop-in swaps in at 100 TB),
+    then two tiny per-doc flag joins into one ≤ |langs| aggregate. Docs
+    without a conforming embedding simply cannot be flagged semantically
+    (both twins spell the same population); NULL-text docs produce no hash
+    and no grams — counted in n_test, never leakable."""
+    from .dedup import ngram_hits
+    from .vectors import _decon_tagged, semantic_hits
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    bucket = _train_bucket(F.col("doc_id"))
-    tagged = d.select(
-        "doc_id", "lang", "text", (bucket < 80).alias("is_train")
-    )
-
-    # exact content-hash hits (the q_decontaminate stage, per-doc)
-    hx = tagged.select("doc_id", "is_train", F.md5("text").alias("h"))
-    train_h = hx.filter("is_train").select("h").distinct()
-    exact_hit = (
-        hx.filter(~F.col("is_train"))
-        .join(train_h, "h", "left_semi")
-        .select("doc_id")
+    d = load_table(spark, sf_dir, "documents")
+    spine = exact_hits(d, ("doc_id", "lang")).withColumnRenamed("hit", "x_hit")
+    ngram = ngram_hits(
+        d.select("doc_id", F.split("text", " ").alias("toks"))
+    ).withColumn("g_hit", F.lit(1))
+    sem = (
+        semantic_hits(_decon_tagged(spark, sf_dir))
         .distinct()
-        .withColumn("x_hit", F.lit(1))
+        .select(F.col("t_id").alias("doc_id"), F.lit(1).alias("s_hit"))
     )
-
-    # n-gram hits (the q_decontaminate_ngram stage). The token array is
-    # MATERIALIZED in its own projection first — inlining split() into the
-    # transform lambda re-evaluates it per gram position, O(tokens²) per
-    # doc (the _shingle_arrays rule; the first cut of this query inlined
-    # it and a 50k-token advtext doc turned the composed gate into a
-    # >30-minute hang).
-    n = DECON_NGRAM
-    tok_rel = tagged.select(
-        "doc_id", "is_train", F.split("text", " ").alias("toks")
-    )
-    grams = F.when(
-        F.size("toks") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - (n - 1)),
-            lambda i: F.array_join(F.slice(F.col("toks"), i, n), " "),
-        ),
-    ).when(F.col("toks").isNotNull(), F.array(F.concat_ws(" ", "toks")))
-    sh = tok_rel.select(
-        "doc_id",
-        "is_train",
-        F.explode(
-            F.array_distinct(F.transform(grams, lambda s: F.xxhash64(s)))
-        ).alias("s"),
-    )
-    train_s = sh.filter("is_train").select("s").distinct()
-    ngram_hit = (
-        sh.filter(~F.col("is_train"))
-        .join(train_s, "s", "left_semi")
-        .select("doc_id")
-        .distinct()
-        .withColumn("g_hit", F.lit(1))
-    )
-
-    # semantic hits (the q_decontaminate_semantic stage; vec_id == doc_id)
-    e = (
-        _embeddings(spark, sf_dir)
-        .filter(_finite_vec(F.col("embedding")))
-        .select(
-            "vec_id",
-            "embedding",
-            (_train_bucket(F.col("vec_id")) < 80).alias("is_train"),
-        )
-    )
-    train_v = e.filter("is_train").select(F.col("embedding").alias("tv"))
-    test_v = e.filter(~F.col("is_train")).select(
-        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("qv")
-    )
-    sem_hit = (
-        train_v.crossJoin(F.broadcast(test_v))
-        .filter(_dot(F.col("tv"), F.col("qv")) >= SEMDECON_TAU)
-        .select("doc_id")
-        .distinct()
-        .withColumn("s_hit", F.lit(1))
-    )
-
-    test_docs = tagged.filter(~F.col("is_train")).select("doc_id", "lang")
-    flagged = (
-        test_docs.join(exact_hit, "doc_id", "left")
-        .join(ngram_hit, "doc_id", "left")
-        .join(sem_hit, "doc_id", "left")
-    )
+    flagged = spine.join(ngram, "doc_id", "left").join(sem, "doc_id", "left")
     any_hit = F.when(
         F.col("x_hit").isNotNull()
         | F.col("g_hit").isNotNull()
@@ -862,12 +754,7 @@ def dsir_weights(
         .select(
             "doc_id",
             "lang",
-            (
-                F.conv(F.substring(F.md5("gram"), 1, 6), 16, 10).cast(
-                    "bigint"
-                )
-                % buckets
-            ).alias("bucket"),
+            (md5_bucket(F.col("gram")) % buckets).alias("bucket"),
         )
     )
     from pyspark.sql import Window
@@ -928,7 +815,7 @@ def _dsir_oracle() -> str:
     ),
     b AS (
         SELECT doc_id, lang,
-               ('0x' || substr(md5(gram), 1, 6))::BIGINT % {B} AS bucket
+               {o_md5_bucket("gram")} % {B} AS bucket
         FROM grams
     ),
     stats AS (
@@ -1047,10 +934,7 @@ def doremi_mixture(d: DataFrame) -> DataFrame:
     )
     b = grams.select(
         "lang",
-        (
-            F.conv(F.substring(F.md5("tok"), 1, 6), 16, 10).cast("bigint")
-            % B
-        ).alias("bucket"),
+        (md5_bucket(F.col("tok")) % B).alias("bucket"),
     )
     from pyspark.sql import Window
 
@@ -1180,12 +1064,7 @@ def doremi_mixture(d: DataFrame) -> DataFrame:
         F.floor(a * F.lit(1000000.0)).cast("bigint").alias("weight_ppm"),
         F.floor(rate * F.lit(10000.0)).cast("bigint").alias("cut_bp"),
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
-        ).cast("bigint")
-        % 10000
-    )
+    bucket = md5_bucket(F.col("doc_id")) % 10000
     return (
         d.filter(in_tuple)
         .select("lang", "doc_id")
@@ -1268,7 +1147,7 @@ def _doremi_oracle() -> str:
     ),
     b AS (
         SELECT lang,
-               ('0x' || substr(md5(tok), 1, 6))::BIGINT % {B} AS bucket
+               {o_md5_bucket("tok")} % {B} AS bucket
         FROM grams
     ),
     stats AS (SELECT bucket, COUNT(*) AS c FROM b GROUP BY bucket),
@@ -1333,8 +1212,7 @@ def _doremi_oracle() -> str:
            MIN(r.weight_ppm) AS weight_ppm,
            MIN(r.cut_bp) AS cut_bp,
            COUNT(*) FILTER (
-               WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 6))::BIGINT
-                     % 10000 < r.cut_bp) AS n_selected
+               WHERE {o_md5_bucket("d.doc_id")} % 10000 < r.cut_bp) AS n_selected
     FROM documents d JOIN rates r ON d.lang = r.lang
     GROUP BY d.lang
     """

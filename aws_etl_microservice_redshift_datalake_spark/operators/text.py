@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..registry import N_CHARS_MAX, query, rnd
+from ..registry import N_CHARS_MAX, md5_bucket, o_md5_bucket, query, rnd
 from ..sources.io import load_spread, load_table, table_rows
 
 
@@ -609,21 +609,52 @@ def q_token_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_unigram_logprob",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+def unigram_doc_scores(d: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Per-doc unigram LM score (doc_id, *carry, n_tokens, sum_logp):
+    sum_logp = Σ ln P(w) over the doc's tokens, P from the corpus's own
+    unigram counts. Shared by q_unigram_logprob and q_ccnet_buckets
+    (``carry`` rides the per-doc aggregate). Oracle twin:
+    :func:`_unigram_scores_sql`."""
+    toks = d.select("doc_id", *carry, F.explode(F.split("text", " ")).alias("w"))
+    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
+    tot = toks.agg(F.count(F.lit(1)).alias("n_tot"))
+    per_tok = F.round(F.log(F.col("c") / F.col("n_tot")), 6).cast(
+        T.DecimalType(27, 6)
+    )
+    return (
+        toks.join(uni, "w")
+        .crossJoin(F.broadcast(tot))
+        .groupBy("doc_id", *carry)
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.round(F.sum(per_tok), 4).cast("double").alias("sum_logp"),
+        )
+    )
+
+
+def _unigram_scores_sql(carry: tuple[str, ...] = ()) -> str:
+    """Oracle CTEs of :func:`unigram_doc_scores`: ``sc`` holds (doc_id,
+    *carry, n_tokens, sum_logp)."""
+    keys = ", ".join(("doc_id", *carry))
+    return f"""
+    toks AS (
+        SELECT {keys}, unnest(string_split(text, ' ')) AS w FROM documents
     ),
     uni AS (SELECT w, COUNT(*) AS c FROM toks GROUP BY w),
-    tot AS (SELECT COUNT(*) AS n_tot FROM toks)
-    SELECT doc_id,
-           COUNT(*) AS n_tokens,
-           CAST(ROUND(SUM(CAST(ROUND(ln(CAST(c AS DOUBLE) / n_tot), 6)
-                               AS DECIMAL(27,6))), 4) AS DOUBLE) AS sum_logp
-    FROM toks JOIN uni USING (w) CROSS JOIN tot
-    GROUP BY doc_id
-    """,
+    tot AS (SELECT COUNT(*) AS n_tot FROM toks),
+    sc AS (
+        SELECT {keys},
+               COUNT(*) AS n_tokens,
+               CAST(ROUND(SUM(CAST(ROUND(ln(CAST(c AS DOUBLE) / n_tot), 6)
+                                   AS DECIMAL(27,6))), 4) AS DOUBLE) AS sum_logp
+        FROM toks JOIN uni USING (w) CROSS JOIN tot
+        GROUP BY {keys}
+    )"""
+
+
+@query(
+    "q_unigram_logprob",
+    oracle=f"WITH {_unigram_scores_sql()} SELECT * FROM sc",
 )
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram language-model quality scoring — the corpus-LM perplexity
@@ -643,22 +674,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded shuffle), token→count hash join (hot stopwords = AQE skew
     split), one per-doc aggregate. No text moves after the explode; no
     Python anywhere."""
-    toks = load_spread(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    )
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    tot = toks.agg(F.count(F.lit(1)).alias("n_tot"))
-    logp = F.log(F.col("c") / F.col("n_tot"))
-    per_tok = F.round(logp, 6).cast(T.DecimalType(27, 6))
-    return (
-        toks.join(uni, "w")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.sum(per_tok), 4).cast("double").alias("sum_logp"),
-        )
-    )
+    return unigram_doc_scores(load_spread(spark, sf_dir, "documents"))
 
 
 @query(
@@ -875,7 +891,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fuzzy_join",
-    oracle="""
+    oracle=f"""
     WITH conf AS (
         SELECT * FROM customer WHERE length(c_name) <= 1000
     ),
@@ -884,7 +900,7 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
                substr(c_name, 1, 9) || 'x' || substr(c_name, 11) AS probe_name,
                substr(c_name, 15, 4) AS blk
         FROM conf
-        WHERE ('0x' || substr(md5(CAST(c_custkey AS VARCHAR)), 1, 6))::BIGINT % 100 < 10
+        WHERE {o_md5_bucket("c_custkey")} % 100 < 10
     )
     SELECT probe_id, probe_name, c_custkey AS matched_id,
            CAST(levenshtein(probe_name, c_name) AS BIGINT) AS dist
@@ -926,10 +942,7 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     space can degenerate, add a mirrorable block-size cap
     (COUNT() OVER block ≤ B) before the join."""
     c = load_table(spark, sf_dir, "customer").filter(F.length("c_name") <= 1000)
-    bucket = F.conv(
-        F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 6), 16, 10
-    ).cast("bigint") % 100
-    probes = c.filter(bucket < 10).select(
+    probes = c.filter(md5_bucket(F.col("c_custkey")) % 100 < 10).select(
         F.col("c_custkey").alias("probe_id"),
         F.concat(
             F.substring("c_name", 1, 9), F.lit("x"), F.expr("substr(c_name, 11)")
@@ -2213,20 +2226,7 @@ CCNET_BUCKETS = 3  # head / middle / tail (Wenzek et al. '20)
 @query(
     "q_ccnet_buckets",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-        FROM documents
-    ),
-    uni AS (SELECT w, COUNT(*) AS c FROM toks GROUP BY w),
-    tot AS (SELECT COUNT(*) AS n_tot FROM toks),
-    sc AS (
-        SELECT doc_id, lang, COUNT(*) AS n_tokens,
-               CAST(ROUND(SUM(CAST(ROUND(ln(CAST(c AS DOUBLE) / n_tot), 6)
-                                   AS DECIMAL(27,6))), 4) AS DOUBLE)
-                   AS sum_logp
-        FROM toks JOIN uni USING (w) CROSS JOIN tot
-        GROUP BY doc_id, lang
-    ),
+    WITH {_unigram_scores_sql(("lang",))},
     rk AS (
         SELECT lang, n_tokens, sum_logp / n_tokens AS mean_logp,
                NTILE({CCNET_BUCKETS}) OVER (PARTITION BY lang
@@ -2248,10 +2248,9 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     and split into head/middle/tail thirds; report each bucket's doc
     count, token mass, and score range. The head/middle/tail split is the
     published selection knob (CCNet trains on head+middle, audits tail).
-    The scoring pipeline re-spells q_unigram_logprob's twin EXACTLY
-    (same grid-rounded per-vocab-word logprob, same exact decimal doc
-    sum — the q_decontaminate_report sibling convention), with lang
-    carried through the per-doc aggregate.
+    The scores are q_unigram_logprob's own (unigram_doc_scores and its
+    oracle CTEs, with lang carried through the per-doc aggregate), so the
+    two cannot drift.
 
     Float discipline: mean_logp = sum_logp / n_tokens is one correctly-
     rounded IEEE division of bit-identical operands (never re-rounded —
@@ -2263,23 +2262,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     |lang|-partitioned window over the DOC-level relation (corpus-scale
     text never enters the window — only (lang, n_tokens, mean) rows) and
     a ≤ |langs|·{CCNET_BUCKETS}-group final aggregate."""
-    toks = load_spread(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
-    )
-    uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    tot = toks.agg(F.count(F.lit(1)).alias("n_tot"))
-    per_tok = F.round(F.log(F.col("c") / F.col("n_tot")), 6).cast(
-        T.DecimalType(27, 6)
-    )
-    sc = (
-        toks.join(uni, "w")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.sum(per_tok), 4).cast("double").alias("sum_logp"),
-        )
-    )
+    sc = unigram_doc_scores(load_spread(spark, sf_dir, "documents"), ("lang",))
     mean = F.col("sum_logp") / F.col("n_tokens")
     w = Window.partitionBy("lang").orderBy(
         mean.desc(), F.col("doc_id").asc()
@@ -2304,8 +2287,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repetition, per-doc flags from the SAME shared cores the three
 # drill-down reports aggregate (gopher_doc_flags / c4_doc_flags /
 # repetition_doc_flags — the composite cannot drift from the
-# drill-downs, the q_decontaminate_report discipline done by extraction
-# instead of re-spelling).
+# drill-downs, the discipline q_decontaminate_report follows too).
 # --------------------------------------------------------------------------
 
 

@@ -20,10 +20,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..registry import exact_sum, o_exact_sum, query
+from ..registry import exact_sum, md5_bucket, o_exact_sum, o_md5_bucket, query
 from ..sources.io import load_spread, load_table, table_rows
 
 TOP_K = 5
@@ -793,26 +793,33 @@ def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDECON_TAU = 0.45  # cross-split cosine flagging threshold
 
 
-@query(
-    "q_decontaminate_semantic",
-    oracle=f"""
-    WITH e AS (
+def _semantic_hits_sql() -> str:
+    """Oracle CTEs of :func:`semantic_hits`: ``s_e`` is the split-tagged
+    conforming population and ``s_hit`` the distinct vec_id of every
+    contaminated test vector."""
+    return f"""
+    s_e AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 6))::BIGINT % 100 < 80
-                   AS is_train
+               {o_md5_bucket("vec_id")} % 100 < 80 AS is_train
         FROM embeddings
         WHERE {O_VEC_CONFORM}
     ),
-    cont AS (
+    s_hit AS (
         SELECT DISTINCT b.vec_id
-        FROM e a JOIN e b ON a.is_train AND NOT b.is_train
+        FROM s_e a JOIN s_e b ON a.is_train AND NOT b.is_train
         WHERE list_inner_product(a.v, b.v) >= {SEMDECON_TAU}
-    )
+    )"""
+
+
+@query(
+    "q_decontaminate_semantic",
+    oracle=f"""
+    WITH {_semantic_hits_sql()}
     SELECT label,
            COUNT(*) AS n_test,
-           COUNT(*) FILTER (WHERE vec_id IN (SELECT vec_id FROM cont))
+           COUNT(*) FILTER (WHERE vec_id IN (SELECT vec_id FROM s_hit))
                AS n_contaminated
-    FROM e WHERE NOT is_train
+    FROM s_e WHERE NOT is_train
     GROUP BY label
     """,
 )
@@ -831,25 +838,23 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical verify arithmetic and report tail — shared code, so the
     two cannot drift)."""
     tagged = _decon_tagged(spark, sf_dir)
+    return _decon_report(tagged, semantic_hits(tagged))
+
+
+def semantic_hits(tagged: DataFrame) -> DataFrame:
+    """q_decontaminate_semantic's hit stage: ``t_id`` of every test vector
+    of ``tagged`` (:func:`_decon_tagged`) within cosine ≥ SEMDECON_TAU of a
+    train vector, once per such pair. Oracle twin:
+    :func:`_semantic_hits_sql`."""
     train = tagged.filter("is_train").select(F.col("embedding").alias("tv"))
     test = tagged.filter(~F.col("is_train")).select(
         F.col("vec_id").alias("t_id"), F.col("embedding").alias("qv")
     )
-    cont = (
+    return (
         train.crossJoin(F.broadcast(test))
         .filter(_dot(F.col("tv"), F.col("qv")) >= SEMDECON_TAU)
         .select("t_id")
     )
-    return _decon_report(tagged, cont)
-
-
-def _train_bucket(idcol: Column) -> Column:
-    """The deterministic 0-99 split bucket (md5 prefix of the id) — the SAME
-    hash both decontamination twins and the oracle use, computable row-local
-    on either side of a pair with no join back to the corpus."""
-    return F.conv(F.substring(F.md5(idcol.cast("string")), 1, 6), 16, 10).cast(
-        "bigint"
-    ) % 100
 
 
 def _decon_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -860,7 +865,7 @@ def _decon_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _embeddings(spark, sf_dir).filter(_finite_vec(F.col("embedding")))
     return e.select(
         "vec_id", "label", "embedding",
-        (_train_bucket(F.col("vec_id")) < 80).alias("is_train"),
+        (md5_bucket(F.col("vec_id")) % 100 < 80).alias("is_train"),
     )
 
 
@@ -899,8 +904,8 @@ def q_decontaminate_semantic_clustered(spark: SparkSession, sf_dir: str) -> Data
     by the recall test."""
     tagged = _decon_tagged(spark, sf_dir)
     pairs = _clustered_pairs(spark, sf_dir, SEMDECON_TAU)
-    a_train = _train_bucket(F.col("id_a")) < 80
-    b_train = _train_bucket(F.col("id_b")) < 80
+    a_train = md5_bucket(F.col("id_a")) % 100 < 80
+    b_train = md5_bucket(F.col("id_b")) % 100 < 80
     cont = (
         pairs.select("id_a", "id_b", a_train.alias("at"), b_train.alias("bt"))
         .filter(F.col("at") != F.col("bt"))

@@ -121,23 +121,11 @@ def _driver_history(repo: str | None = None) -> tuple[dict[str, int], frozenset[
             # oracled row needs rows+schema+hash all true, and a rows-only
             # (no_oracle) row needs a nonempty result — a schema-only
             # mismatch or an empty rows-only result is a failure that must
-            # re-enter the window, not rank out of it. Exception (ADVICE
-            # r6): a rows-only query whose CORRECT answer is empty would be
-            # pinned red forever by the row-count inference, so queries
-            # declared in _ROWS_ONLY_EMPTY_OK are green on a clean
-            # zero-row run (the artifact has no success/failure field to
-            # distinguish these, so the declaration lives with the query
-            # contract here). Empty today — every current rows-only query
-            # guarantees nonempty output by construction.
+            # re-enter the window, not rank out of it. Every rows-only
+            # query guarantees nonempty output by construction; a missing
+            # spark_rows means the run died before counting.
             if row.get("err") == "no_oracle":
-                # the empty-OK branch requires an EXPLICIT integer 0 in the
-                # artifact — a missing/None spark_rows means the run died
-                # before counting, which must re-enter the window, not rank
-                # green (r7 full-round review)
-                green = (row.get("spark_rows") or 0) > 0 or (
-                    name in _ROWS_ONLY_EMPTY_OK
-                    and row.get("spark_rows") == 0
-                )
+                green = (row.get("spark_rows") or 0) > 0
             else:
                 green = bool(
                     row.get("rows_match")
@@ -151,13 +139,6 @@ def _driver_history(repo: str | None = None) -> tuple[dict[str, int], frozenset[
                 red.add(name)
     return last_green, frozenset(red)
 
-
-# Rows-only queries whose correct driver-corpus answer MAY legitimately be
-# empty (ADVICE r6): list a name here when registering such a query so a
-# clean zero-row run ranks as green instead of pinning a window slot red
-# forever. Keep empty unless a query genuinely guarantees-nothing — an
-# unexpectedly-empty result from any other query must stay red.
-_ROWS_ONLY_EMPTY_OK: frozenset[str] = frozenset()
 
 _LAST_GREEN, _DRIVER_RED = _driver_history()
 _DRIVER_CHECKED: frozenset[str] = frozenset(_LAST_GREEN) - _DRIVER_RED
@@ -228,6 +209,11 @@ _RECHECK_CHANGED: dict[str, int] = {
     "q_setsim_join": 15,
     "q_containment_join": 15,
     "q_containment_apply": 15,
+    # The composite decontamination report is assembled from its three
+    # drill-downs' hit stages, recorded at 15: the exact stage's tagged
+    # test rows are now its spine (one documents scan and one exchange
+    # fewer).
+    "q_decontaminate_report": 15,
 }
 
 _RECHECK: frozenset[str] = frozenset(
@@ -516,3 +502,22 @@ def o_guarded_bigint(expr: str, bound: float = QTY_MAX) -> str:
         f"CASE WHEN {expr} BETWEEN -{bound:.0f} AND {bound:.0f}"
         f" THEN CAST({expr} AS BIGINT) END"
     )
+
+
+def md5_bucket(col: Column) -> Column:
+    """The portable split hash every sampling, split and decontamination
+    query keys on: the first 6 hex digits of ``md5(cast(col as string))``
+    as a BIGINT in ``[0, 2^24)``. Both engines implement md5 and hex
+    parsing identically, so a row lands in the same bucket on any engine,
+    partitioning or row order; NULL stays NULL. Callers apply their own
+    ``% 100``, ``% 10000``, ``% B`` or ``+ 1.0``. Spark drops the cast on a
+    string column, so gram buckets share the spelling. Oracle twin:
+    :func:`o_md5_bucket`."""
+    return F.conv(F.substring(F.md5(col.cast("string")), 1, 6), 16, 10).cast(
+        "bigint"
+    )
+
+
+def o_md5_bucket(expr: str) -> str:
+    """DuckDB-side twin of :func:`md5_bucket`."""
+    return f"('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 6))::BIGINT"

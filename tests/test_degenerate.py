@@ -183,6 +183,42 @@ def test_alldup_semantic_family(spark, alldup_sf):
     assert clus == sem
 
 
+def test_ngram_jaccard_shingle_df_cap_fires(spark, duck, tmp_path):
+    """q_ngram_jaccard drops shingles in more than MAX_SHINGLE_DF (50) docs.
+    No shipped corpus reaches the cap (max shingle df 9, 7 and 25 at
+    sf0.001, sf0.01 and sf0.1; alldup sits exactly at 50), so plant it:
+    sf0.001 plus 60 copies of doc 0's text under fresh ids puts doc 0's
+    shingles in 61 docs. The oracle must still agree, and the capped
+    result must differ from the uncapped q_setsim_join's, which it
+    matches on every shipped corpus."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.conftest import run_compare
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet")
+    doc0 = docs.filter(pc.equal(docs["doc_id"], 0))
+    assert doc0.num_rows == 1
+    start = pc.max(docs["doc_id"]).as_py() + 1
+    copies = pa.concat_tables([doc0] * 60)
+    copies = copies.set_column(
+        copies.schema.get_field_index("doc_id"), "doc_id",
+        pa.array(range(start, start + 60), docs.schema.field("doc_id").type),
+    )
+    pq.write_table(pa.concat_tables([docs, copies]), sf / "documents.parquet")
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_SMALL}/{t}.parquet", sf / f"{t}.parquet")
+
+    name = "q_ngram_jaccard"
+    run_compare(spark, duck, name, QS[name], engine.all_oracles()[name], str(sf))
+    capped = QS[name](spark, str(sf)).count()
+    assert capped != QS["q_setsim_join"](spark, str(sf)).count()
+
+
 # --------------------------------------------------------------------------
 # Shared degradation recipes. Each single-axis fixture below applies exactly
 # one of these; degmixed_sf applies ALL of them to one corpus, so a guard

@@ -649,16 +649,46 @@ def test_winnow_pairing_is_single_pipeline(spark):
 
 def test_setsim_no_cartesian_no_corpus_broadcast(spark):
     """q_setsim_join (r10): the candidate stage must be a prefix-token
-    equi self-join over the persisted prefix relation — never a
-    cartesian/BNLJ, and never a broadcast of a corpus-scale side (every
-    corpus join is hinted SHUFFLE_HASH). The verify must dedupe
-    candidates BEFORE hydrating the full sets."""
+    equi self-join over the canonical order of the memoized shingle sets —
+    never a cartesian/BNLJ, and never a broadcast of a corpus-scale side
+    (every corpus join is hinted SHUFFLE_HASH). The verify must dedupe
+    candidates BEFORE hydrating the full sets. Both stages read the
+    `shingles` memo: every leaf of the physical plan scans the memoized
+    relation, the candidate stage through its own scans and the verify
+    through one more per hydrated side. Memos are cleared first: a cache
+    another test left behind would also serve a plan that re-shingles."""
+    from aws_etl_microservice_redshift_datalake_spark.operators._memo import (
+        clear_session_memos,
+    )
+    from aws_etl_microservice_redshift_datalake_spark.operators.dedup import (
+        SETSIM_TAU,
+        _shingle_arrays_persisted,
+        setsim_candidates,
+    )
+
+    clear_session_memos(spark)
     df = QS["q_setsim_join"](spark, SF_MED)
     p = audit.plan_str(df, "simple")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "ShuffledHashJoin" in p
-    assert "InMemoryTableScan" in p, "prefix/sets memos must serve the joins"
+
+    memo = _shingle_arrays_persisted(spark, SF_MED)
+    cache = memo._jdf.queryExecution().withCachedData().cacheBuilder()
+
+    def memo_scans(plan_df) -> int:
+        leaves = plan_df._jdf.queryExecution().sparkPlan().collectLeaves()
+        nodes = [leaves.apply(i) for i in range(leaves.size())]
+        assert all(
+            n.nodeName() == "InMemoryTableScan"
+            and n.relation().cacheBuilder().equals(cache)
+            for n in nodes
+        ), [n.nodeName() for n in nodes]
+        return len(nodes)
+
+    n_cand = memo_scans(setsim_candidates(memo, SETSIM_TAU))
+    assert n_cand >= 1, "the candidate stage must read the shingles memo"
+    assert memo_scans(df) == n_cand + 2, "both verify sides must read the memo"
 
 
 def test_quantized_search_single_pass_shared_partitioning(spark):

@@ -1055,6 +1055,44 @@ def test_guarded_bigint_twin_property(spark, duck, qtys):
         assert g == w or (g is None and w is None), (i, qtys[i], g, w)
 
 
+def test_md5_bucket_twins_agree_with_hashlib(spark, duck):
+    """md5_bucket (Spark) and o_md5_bucket (DuckDB) — the portable hash
+    behind every sampling, split and decontamination query — must give the
+    hashlib value (first 6 hex digits of md5 over the decimal or UTF-8
+    text) on BIGINT ids (zero, negative, both extremes) and on strings
+    (empty, non-ASCII), and NULL for NULL on both engines."""
+    import hashlib
+
+    from aws_etl_microservice_redshift_datalake_spark.registry import (
+        md5_bucket, o_md5_bucket,
+    )
+
+    cases = [
+        ("long", "BIGINT", [0, 7, -1, -(2**63), 2**63 - 1, 10**15 + 3, None]),
+        ("string", "VARCHAR", ["", "é", "中文テキスト", "🙂 emoji", "naïve café",
+                               None]),
+    ]
+    for spark_type, duck_type, vals in cases:
+        want = {
+            i: None if v is None
+            else int(hashlib.md5(str(v).encode()).hexdigest()[:6], 16)
+            for i, v in enumerate(vals)
+        }
+        df = spark.createDataFrame(list(enumerate(vals)), f"i long, x {spark_type}")
+        got = {
+            r.i: r.b
+            for r in df.select("i", md5_bucket(F.col("x")).alias("b")).collect()
+        }
+        lits = ", ".join(
+            f"({i}, CAST({'NULL' if v is None else repr(v)} AS {duck_type}))"
+            for i, v in enumerate(vals)
+        )
+        sql = f"SELECT i, {o_md5_bucket('x')} AS b FROM (VALUES {lits}) t(i, x)"
+        duck_got = {int(i): b for i, b in duck.execute(sql).fetchall()}
+        assert got == want, (spark_type, got, want)
+        assert duck_got == want, (duck_type, duck_got, want)
+
+
 # --------------------------------------------------------------------------
 # r9 vector-conformance twin (ADVICE r8 #2): _finite_vec vs O_VEC_CONFORM
 # --------------------------------------------------------------------------
